@@ -186,7 +186,7 @@ object ScaleBench {
         .select(col("o_orderkey")).orderBy(col("o_orderkey"))
         .limit(2).collect().map(_.getLong(0))
       val (tCow, _) = timed(t.delete(col("o_orderkey") === keys(0)))
-      // same shape merge-on-read: position-delete file, zero rewrite
+      // same shape merge-on-read: deletion vector, zero rewrite
       t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
       val (tMor, _) = timed(t.delete(col("o_orderkey") === keys(1)))
       require(t.current.deletedRows > 0, "MOR probe delete must match rows")
@@ -694,48 +694,6 @@ object ScaleBench {
     println(s"""{"metric":"streamstate_total","value":${results.values.sum},"unit":"rows","queries":$qs,"sf":"$base"}""")
   }
 
-  /** Deletion-vector read-amplification probe (A90): N point deletes
-    * in `dv` mode vs `merge-on-read` position mode, full-read timing
-    * and delete-side plan inputs after N ∈ {4, 16, 64} commits. The
-    * claim under test: dv reads stay O(1) probe inputs per data file
-    * (entries MERGE), while position mode's anti-join input stacks one
-    * delete file per commit — read cost grows with the commit count
-    * until OPTIMIZE.
-    */
-  private def dvBench(spark: SparkSession, dir: String): Unit = {
-    import graft.lake.GraftTable
-    import org.apache.spark.sql.functions.col
-    def timed[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
-    }
-    val o = Tables.orders(spark, dir)
-      .repartitionByRange(16, col("o_orderkey")).cache()
-    o.count()
-    val keys = o.select(col("o_orderkey")).orderBy(col("o_orderkey"))
-      .limit(2000).collect().map(_.getLong(0)).grouped(30).map(_.head).take(64).toSeq
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    for (mode <- Seq("dv", "merge-on-read")) {
-      val root = s"/root/repo/target/scalebench-dv-$mode"
-      graft.lake.MetaIO.deleteDir(root, spark.sparkContext.hadoopConfiguration)
-      val t = GraftTable.create(spark, root, o)
-      t.setProperty(GraftTable.DeleteModeProp, mode)
-      var done = 0
-      for (n <- Seq(4, 16, 64)) {
-        while (done < n) { t.delete(col("o_orderkey") === keys(done)); done += 1 }
-        val fresh = new GraftTable(root, spark)
-        val (tRead, cnt) = timed(fresh.read().count())
-        val entries = fresh.current.deleteFiles.size
-        val tag = if (mode == "dv") "dv" else "pos"
-        results(s"${tag}_read_n$n") = tRead
-        results(s"${tag}_entries_n$n") = entries.toDouble
-        println(f"[dvbench] mode=$mode%-14s n=$n%-3d read=$tRead%7.3f s " +
-          f"delete_entries=$entries%4d rows=$cnt")
-      }
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"dvbench_total","value":${results.values.sum},"unit":"sec","queries":$qs,"sf":"$dir"}""")
-  }
-
   /** Production-k BPE trainer probe (C68): the driver-local merge loop
     * on a WIDENED synthetic vocabulary (2^16 random words, Zipf
     * counts — far past any real capped word table's pair diversity),
@@ -782,11 +740,6 @@ object ScaleBench {
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.contains("SPARK_GRAFT_SCALEBENCH_PLAN")) {
       planBench(spark)
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALEBENCH_DV")) {
-      dvBench(spark, base)
       spark.stop()
       return
     }

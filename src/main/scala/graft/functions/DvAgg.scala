@@ -9,7 +9,7 @@ import graft.lake.GraftDv
 
 /** Aggregate a LongType row-position column into ONE serialized
   * deletion-vector bitmap ([[graft.lake.GraftDv]]) — the commit-time
-  * builder for DV-mode merge-on-read deletes. Group by the data file,
+  * builder for merge-on-read deletes. Group by the data file,
   * aggregate its matched positions: the buffer is the chunked-bitmap
   * builder (memory ∝ touched 64Ki chunks, never a materialized
   * position list — a whole-file delete of a 100M-row file buffers

@@ -452,7 +452,7 @@ case class ZOrderKey(children: Seq[Expression], mins: Array[Long], maxs: Array[L
 /** Column-API entry points (the public surface of this package). */
 /** Deletion-vector membership: true iff `pos` is set in the serialized
   * [[graft.lake.GraftDv]] bitmap. The read path's per-row kernel for
-  * DV-mode merge-on-read — one directory binary search + one container
+  * merge-on-read deletes — one directory binary search + one container
   * probe on the raw bytes, inside whole-stage codegen.
   */
 case class DvContains(left: Expression, right: Expression)

@@ -12,7 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, explode, expr, lit, max_by, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, explode, expr, lit, when}
 import org.apache.spark.sql.types._
 
 /** A graft-managed table: Spark-native data plane (`df.write.parquet`)
@@ -1189,21 +1189,14 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   def delete(pred: Column): GraftTable = {
     val cur = current
-    // TBLPROPERTIES('write.delete.mode'='merge-on-read') routes SQL and
-    // API deletes to the position-delete path (metadata-only partition
-    // deletes below still win — they are strictly cheaper than both)
-    if (cur.properties.get(GraftTable.DeleteModeProp).contains("merge-on-read")
+    // TBLPROPERTIES('write.delete.mode'='merge-on-read' | 'dv') routes
+    // SQL and API deletes to the deletion-vector path (metadata-only
+    // partition deletes below still win — they are strictly cheaper)
+    if (cur.properties.get(GraftTable.DeleteModeProp).exists(Set("merge-on-read", "dv"))
         && uniqueBaseNames(cur)
         && Pruning.extractExact(pred)
           .forall(cs => !(cs.nonEmpty && cs.keySet.forall(cur.partitionCols.contains))))
-      return deleteMerge(pred)
-    // TBLPROPERTIES('write.delete.mode'='dv') routes to the
-    // deletion-vector path (same partition-delete fast-path exception)
-    if (cur.properties.get(GraftTable.DeleteModeProp).contains("dv")
-        && uniqueBaseNames(cur)
-        && Pruning.extractExact(pred)
-          .forall(cs => !(cs.nonEmpty && cs.keySet.forall(cur.partitionCols.contains))))
-      return deleteDv(pred)
+      return deleteMor(pred)
     // Metadata-only fast path: if the predicate is EXACTLY a
     // conjunction of constraints on partition columns, every row of a
     // matching file matches (partition values are constant per file) —
@@ -1254,68 +1247,24 @@ final class GraftTable(val root: String, spark: SparkSession) {
 
   /** DELETE WHERE — merge-on-read: instead of rewriting every data
     * file the predicate touches (copy-on-write write amplification —
-    * a 1-row delete in a 1 GB file rewrites 1 GB), write a
-    * position-delete file naming the matched `(file, row)` coordinates
-    * and commit a snapshot whose DATA FILE LIST IS UNCHANGED. Reads
-    * apply pending deletes as a broadcast anti-join ([[readSnapshotPos]]);
-    * [[applyDeletes]] (or OPTIMIZE) folds them into rewritten files
-    * when the read-side tax is no longer worth deferring the write.
-    * Candidate files still come from metadata-only pruning, so the
-    * position scan is O(files-that-can-match), and repeated deletes
-    * stack (already-deleted rows are invisible to the match scan, so
-    * delete files never overlap).
+    * a 1-row delete in a 1 GB file rewrites 1 GB), commit a snapshot
+    * whose DATA FILE LIST IS UNCHANGED and whose matched `(file, row)`
+    * coordinates fold into DELETION VECTORS: ONE merged roaring-style
+    * bitmap per data file ([[GraftDv]], Delta DV / Iceberg v3
+    * semantics), written by [[mergedDvEntries]]. Candidate files come
+    * from metadata-only pruning, so the position scan is
+    * O(files-that-can-match); already-deleted rows are invisible to
+    * it. Read-side cost is O(1) bitmap probes per data file no matter
+    * how many delete commits accumulated; [[applyDeletes]] (or
+    * OPTIMIZE) folds the vectors into rewritten files.
     *
-    * Position keys are file BASENAMES + row index: basenames are
-    * unique table-wide for engine-written files (`<snapId>-<seq>-…`);
-    * adopted tables with colliding basenames fall back to
-    * copy-on-write rather than risk cross-file deletes.
+    * Coordinates are file BASENAMES + row index: basenames are unique
+    * table-wide for engine-written files (`<snapId>-<seq>-…`); adopted
+    * tables with colliding basenames stay copy-on-write ([[delete]]
+    * checks before routing here).
     */
-  def deleteMerge(pred: Column): GraftTable = {
+  private def deleteMor(pred: Column): GraftTable = {
     val cur = current
-    if (!uniqueBaseNames(cur)) return delete(pred)
-    val (cands, _, _) = pruneFiles(pred)
-    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    val added: Seq[DeleteFileEntry] =
-      if (cands.isEmpty) Seq.empty
-      else {
-        val live = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
-        val hits = live.filter(pred <=> lit(true))
-          .select(col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index"))
-        writeDeleteFiles(hits, cur.id + 1)
-      }
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "delete", files = cur.files,
-      addedFiles = 0, deletedFiles = 0,
-      deleteFiles = cur.deleteFiles ++ added))
-    this
-  }
-
-  /** DELETE WHERE — DELETION VECTORS (`write.delete.mode=dv`): like
-    * [[deleteMerge]] the data file list is unchanged, but instead of
-    * appending a position-delete FILE per commit, the matched
-    * positions fold into ONE merged roaring-style bitmap per data file
-    * ([[GraftDv]], Delta DV / Iceberg v3 deletion-vector semantics):
-    * the commit writes a parquet of `(file_name, dv, rows)` rows whose
-    * bitmaps are the UNION of the new positions with the file's
-    * existing vector, and the manifest keeps the invariant that every
-    * data file's live bitmap is owned by exactly one dv entry (older
-    * entries shrink their `targets`/`rows` bookkeeping; readers also
-    * dedupe to the newest bitmap per file, so the invariant is belt
-    * AND suspenders). Read-side cost is therefore O(1) bitmap probes
-    * per data file no matter how many delete commits accumulated —
-    * position-delete mode pays an anti-join input that GROWS with the
-    * commit count until OPTIMIZE. The bitmap build is a
-    * [[graft.functions.DvAgg]] grouped aggregate (buffer ∝ touched
-    * 64Ki-row chunks, never a position list). The one caveat: the
-    * merged dv parquet is written `coalesce(1)` — one row per touched
-    * file, bytes ∝ min(2·deletes, rows/8) per file; a delete touching
-    * millions of files at once should be (and is, via the partition
-    * fast path / COW pruning) a different plan.
-    */
-  def deleteDv(pred: Column): GraftTable = {
-    val cur = current
-    if (!uniqueBaseNames(cur)) return delete(pred)
     import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
     val (cands, _, _) = pruneFiles(pred)
     val (dvOld, otherDels) = cur.deleteFiles.partition(_.dv)
@@ -1345,8 +1294,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * data-preserving, so change feeds stay silent across it) — the
     * payoff is the A90 read contract (one bitmap probe per file
     * instead of N anti-join inputs) WITHOUT paying applyDeletes' data
-    * rewrite. The natural follow-up to flipping an existing MOR table
-    * to `write.delete.mode=dv`.
+    * rewrite. Position entries come only from legacy tables and
+    * Iceberg imports: graft itself writes merge-on-read deletes as
+    * vectors.
     */
   def convertDeletesToDv(): GraftTable = {
     val cur = current
@@ -1366,43 +1316,49 @@ final class GraftTable(val root: String, spark: SparkSession) {
     this
   }
 
-  /** The dv commit kernel shared by DELETE/UPDATE/MERGE in dv mode:
+  /** The commit kernel of every merge-on-read coordinate delete
+    * (DELETE/UPDATE/position-kind MERGE, and position→dv conversion):
     * aggregate `hits` (file_name, row_index) into per-file bitmaps
     * ([[graft.functions.DvAgg]]), UNION with each touched file's
     * existing vector, write one merged parquet, and rebuild ownership —
     * superseded old entries shrink their `targets`/`rows` bookkeeping
-    * exactly (one job over the old parquets), entries left covering
-    * nothing drop. Returns (the REPLACEMENT dv entry list, whether any
-    * row matched); non-dv entries are the caller's to carry.
+    * exactly, entries left covering nothing drop. Returns (the
+    * REPLACEMENT dv entry list, whether any row matched); non-dv
+    * entries are the caller's to carry. The merged parquet is written
+    * `coalesce(1)`: one row per touched file, bytes ∝ min(2·deletes,
+    * rows/8) per file — a delete touching millions of files at once
+    * belongs on the partition fast path or copy-on-write.
     */
   private def mergedDvEntries(hits: DataFrame, snapId: Long,
       dvOld: Seq[DeleteFileEntry]): (Seq[DeleteFileEntry], Boolean) = {
+    import graft.functions.exprs.{dvCardinality, dvUnion}
     val newDv = hits.groupBy(col("file_name"))
       .agg(graft.functions.exprs.dvAgg(col("row_index")).as("dv_new"))
     val merged =
       if (dvOld.isEmpty)
-        newDv.select(col("file_name"), col("dv_new").as("dv"))
-      else {
-        val old = dvRows(dvOld).withColumnRenamed("dv", "dv_old")
-        newDv.join(old, Seq("file_name"), "left")
+        newDv.select(col("file_name"), col("dv_new").as("dv"),
+          lit(null).cast("binary").as("dv_old"))
+      else
+        newDv.join(dvRows(dvOld).withColumnRenamed("dv", "dv_old"), Seq("file_name"), "left")
           .select(col("file_name"),
             when(col("dv_old").isNull, col("dv_new"))
-              .otherwise(graft.functions.exprs.dvUnion(col("dv_new"), col("dv_old")))
-              .as("dv"))
-      }
+              .otherwise(dvUnion(col("dv_new"), col("dv_old"))).as("dv"),
+            col("dv_old"))
     val relDir = s"deletes/$snapId-dv-${UUID.randomUUID()}"
     val dirStr = s"$root/$relDir"
-    merged
-      .withColumn("rows", graft.functions.exprs.dvCardinality(col("dv")))
+    // per-file (basename, new cardinality, replaced cardinality) rides
+    // the write as an Observation — no read-back job; bounded by the
+    // touched-file count, which the manifest's `targets` list holds anyway
+    val obs = org.apache.spark.sql.Observation(s"dv-${UUID.randomUUID()}")
+    merged.withColumn("rows", dvCardinality(col("dv")))
+      .observe(obs, org.apache.spark.sql.functions.collect_list(org.apache.spark.sql.functions.struct(
+        col("file_name"), col("rows"), coalesce(dvCardinality(col("dv_old")), lit(0L)))).as("files"))
+      .drop("dv_old")
       .coalesce(1).write.mode("overwrite").parquet(dirStr)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val perFile = obs.get("files").asInstanceOf[scala.collection.Seq[Row]]
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val dirP = new org.apache.hadoop.fs.Path(dirStr)
-    val hfs = dirP.getFileSystem(conf)
-    // per-file (basename, cardinality) — bounded by the touched-file
-    // count, which the manifest's `targets` list must hold anyway
-    val perFile = spark.read.parquet(dirStr)
-      .select(col("file_name"), col("rows")).collect()
-      .map(r => r.getString(0) -> r.getLong(1))
+    val hfs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (perFile.isEmpty) { hfs.delete(dirP, true); (dvOld, false) }
     else {
       val part = hfs.listStatus(dirP).toSeq
@@ -1411,30 +1367,15 @@ final class GraftTable(val root: String, spark: SparkSession) {
       val newEntry = DeleteFileEntry(
         s"$relDir/${part.getPath.getName}", perFile.map(_._2).sum,
         GraftTable.PendingAddedBy, part.getLen,
-        targets = perFile.map(_._1).toSeq.sorted, dv = true)
-      val touched = perFile.map(_._1).toSet
-      val overlapping = dvOld.filter(_.targets.exists(touched.contains))
-      val shrunk =
-        if (overlapping.isEmpty) dvOld
-        else {
-          val replacedCards: Map[String, Long] = overlapping.map { e =>
-              spark.read.parquet(GraftTable.resolveEntry(root, e.path))
-                .filter(col("file_name").isin(e.targets.filter(touched.contains): _*))
-                .withColumn("p", lit(e.path))
-            }.reduce(_ unionByName _)
-            .groupBy(col("p"))
-            .agg(sum(graft.functions.exprs.dvCardinality(col("dv"))).as("c"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          dvOld.flatMap { e =>
-            if (!e.targets.exists(touched.contains)) Some(e)
-            else {
-              val remaining = e.targets.filterNot(touched.contains)
-              if (remaining.isEmpty) None
-              else Some(e.copy(targets = remaining,
-                rows = e.rows - replacedCards.getOrElse(e.path, 0L)))
-            }
-          }
-        }
+        targets = perFile.map(_._1).sorted, dv = true)
+      // each touched file's old bitmap had exactly one owner entry
+      val replaced: Map[String, Long] = perFile.map(f => f._1 -> f._3).toMap
+      val shrunk = dvOld.flatMap { e =>
+        val (gone, remaining) = e.targets.partition(replaced.contains)
+        if (gone.isEmpty) Some(e)
+        else if (remaining.isEmpty) None
+        else Some(e.copy(targets = remaining, rows = e.rows - gone.map(replaced).sum))
+      }
       (shrunk :+ newEntry, true)
     }
   }
@@ -1485,26 +1426,20 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** The live `(file_name, dv)` bitmap rows of a dv entry set: one
-    * parquet read per entry, deduped to the NEWEST bitmap per data
-    * file (a re-deleted file's merged vector lives in the newer
-    * entry). Row count = Σ entry targets — delete-set metadata scale,
-    * never data scale.
+    * parquet read per entry, restricted to the entry's `targets`. A
+    * re-deleted file's merged vector lives in the newer entry and the
+    * older entry's `targets` drop it ([[mergedDvEntries]]), so every
+    * data file has exactly one live row — a plain union, no dedupe
+    * aggregate and so no shuffle on the MOR read path. Row count =
+    * Σ entry targets — delete-set metadata scale, never data scale.
     */
   private[graft] def dvRows(dels: Seq[DeleteFileEntry]): DataFrame =
     dels.map { d =>
         spark.read.schema("file_name STRING, dv BINARY, rows BIGINT")
           .parquet(GraftTable.resolveEntry(root, d.path))
-          .select(col("file_name"), col("dv"), lit(d.addedBy).as("__dv_seq"))
+          .filter(col("file_name").isin(d.targets: _*))
+          .select(col("file_name"), col("dv"))
       }.reduce(_ unionByName _)
-      .groupBy(col("file_name"))
-      .agg(max_by(col("dv"), col("__dv_seq")).as("dv"))
-
-  /** Write `(file_name, row_index)` rows as position-delete parquet
-    * under `deletes/`; returns the registered entries (empty when the
-    * predicate matched nothing — the empty directory is removed).
-    */
-  private def writeDeleteFiles(hits: DataFrame, snapId: Long): Seq[DeleteFileEntry] =
-    writeDeleteDir(hits, snapId, Seq.empty)
 
   /** Write the DISTINCT key rows of `keys` as an EQUALITY-delete file
     * set — the write is O(source) with ZERO target I/O (no candidate
@@ -1514,13 +1449,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * snapshot ([[minusEqDeletes]]).
     */
   private def writeEqDeleteFiles(
-      keys: DataFrame, keyCols: Seq[String], snapId: Long): Seq[DeleteFileEntry] =
-    writeDeleteDir(keys.select(keyCols.map(col): _*).distinct(), snapId, keyCols)
-
-  private def writeDeleteDir(
-      rows: DataFrame, snapId: Long, eqCols: Seq[String]): Seq[DeleteFileEntry] = {
+      keys: DataFrame, keyCols: Seq[String], snapId: Long): Seq[DeleteFileEntry] = {
     val relDir = s"deletes/$snapId-${UUID.randomUUID()}"
-    rows.write.mode("overwrite").parquet(s"$root/$relDir")
+    keys.select(keyCols.map(col): _*).distinct()
+      .write.mode("overwrite").parquet(s"$root/$relDir")
     val conf = spark.sparkContext.hadoopConfiguration
     val dirP = new org.apache.hadoop.fs.Path(s"$root/$relDir")
     val hfs = dirP.getFileSystem(conf)
@@ -1534,26 +1466,14 @@ final class GraftTable(val root: String, spark: SparkSession) {
         // may rebase the id past a parked WAP snapshot, and stage()
         // stamps the final id (the planned id survives only in the path)
         DeleteFileEntry(s"$relDir/${st.getPath.getName}", n,
-          GraftTable.PendingAddedBy, st.getLen, eqCols)
+          GraftTable.PendingAddedBy, st.getLen, keyCols)
       }
       .filter(_.rows > 0)
-    if (entries.isEmpty) { hfs.delete(dirP, true); Seq.empty }
-    else if (eqCols.nonEmpty) entries
-    else {
-      // record the position set's distinct target basenames (capped) so
-      // a later COW rewrite that drops them all can prune the entry —
-      // without this, deletedRows double-counts after any rewrite. One
-      // tiny scan of the just-written delete parquet; past the cap the
-      // entry stays unknown-target (never pruned, still correct).
-      val targets = spark.read.parquet(s"$root/$relDir")
-        .select(col("file_name")).distinct().limit(GraftTable.TargetListCap + 1)
-        .collect().map(_.getString(0)).toSeq.sorted
-      if (targets.size > GraftTable.TargetListCap) entries
-      else entries.map(_.copy(targets = targets))
-    }
+    if (entries.isEmpty) hfs.delete(dirP, true)
+    entries
   }
 
-  /** Fold pending position deletes back into data files: rewrite
+  /** Fold pending merge-on-read deletes back into data files: rewrite
     * EXACTLY the files that have deleted rows (planned from the delete
     * list itself — untouched files survive verbatim) and clear the
     * delete list. This is OPTIMIZE's MOR half: the read-side anti-join
@@ -1654,7 +1574,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
   def update(pred: Column, set: Map[String, Column]): GraftTable = {
     val cur = current
     // TBLPROPERTIES('write.update.mode'='merge-on-read') routes to the
-    // position-delete + append path (zero rewrites of existing files);
+    // deletion-vector + append path (zero rewrites of existing files);
     // adopted layouts with colliding basenames stay copy-on-write
     if (cur.properties.get(GraftTable.UpdateModeProp).contains("merge-on-read")
         && uniqueBaseNames(cur))
@@ -1690,16 +1610,16 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** UPDATE … SET … WHERE — merge-on-read: the matched rows' positions
-    * become a position-delete file (hiding the PRE-update rows in
+    * fold into the deletion vectors (hiding the PRE-update rows in
     * place) and their post-update images are APPENDED as new files —
     * no existing data file is rewritten, which is the point-update
     * story at 100 TB (a 1-row update in a 1 GB file otherwise rewrites
-    * 1 GB, same amplification [[deleteMerge]] kills for DELETE). SET
+    * 1 GB, same amplification [[deleteMor]] kills for DELETE). SET
     * expressions are evaluated against the pre-update rows in one
     * projection, exactly like the COW path; dependency-derived columns
     * are recomputed by the write path so updated rows migrate
     * partitions correctly. Falls back to copy-on-write when file
-    * basenames collide (adopted layouts), like [[deleteMerge]].
+    * basenames collide (adopted layouts), like [[deleteMor]].
     */
   def updateMerge(pred: Column, set: Map[String, Column]): GraftTable = {
     val cur = current
@@ -1720,19 +1640,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
         try {
           val hits = matched.select(
             col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index"))
-          // write.delete.mode=dv governs the POSITION-DELETE
-          // representation everywhere it is written: a dv-mode MOR
-          // update folds the pre-image coordinates into the per-file
-          // bitmaps instead of appending a position file per commit
-          val (delList, any) =
-            if (cur.properties.get(GraftTable.DeleteModeProp).contains("dv")) {
-              val (dvOld, other) = cur.deleteFiles.partition(_.dv)
-              val (dvList, matchedAny) = mergedDvEntries(hits, cur.id + 1, dvOld)
-              (other ++ dvList, matchedAny)
-            } else {
-              val dels = writeDeleteFiles(hits, cur.id + 1)
-              (cur.deleteFiles ++ dels, dels.nonEmpty)
-            }
+          val (dvOld, other) = cur.deleteFiles.partition(_.dv)
+          val (dvList, any) = mergedDvEntries(hits, cur.id + 1, dvOld)
           if (!any) (cur.deleteFiles, Seq.empty[FileEntry])
           else {
             val depDests = cur.deps.map(_.dest).toSet.filterNot(set.keySet.contains)
@@ -1746,7 +1655,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
               }
             }
             val updated = base.select(projected: _*).drop(depDests.toSeq: _*)
-            (delList, writeFiles(updated, cur.partitionCols, cur.deps, cur.id + 1))
+            (other ++ dvList, writeFiles(updated, cur.partitionCols, cur.deps, cur.id + 1))
           }
         } finally matched.unpersist()
       }
@@ -1810,7 +1719,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // TBLPROPERTIES('write.merge.mode'='merge-on-read'): matched target
-      // rows become position deletes, the whole source is appended —
+      // rows are deleted in place, the whole source is appended —
       // upsert with zero rewrites of existing files
       if (cur.properties.get(GraftTable.MergeModeProp).contains("merge-on-read")
           && uniqueBaseNames(cur))
@@ -1832,27 +1741,16 @@ final class GraftTable(val root: String, spark: SparkSession) {
     } finally { srcKeys.unpersist(blocking = false); () }
   }
 
-  /** MERGE — merge-on-read: candidate files (pruned by source key
-    * bounds, same as the COW path) are position-scanned, rows whose
-    * keys appear in the source become a position-delete file (the
-    * pre-images of matched rows), and the FULL source is appended —
-    * updates land as delete+append, inserts as plain append, and no
-    * existing data file is rewritten. The broadcast direction is the
-    * same as COW merge: the source (small side) broadcasts into the
-    * semi-join. [[applyDeletes]]/OPTIMIZE folds back later.
-    */
   /** The delete-file set a keyed MOR write registers — the ONE place
-    * both [[mergeMor]] and [[mergeDelete]] get their delete shape.
-    * `write.merge.delete-kind=equality` skips the candidate position
-    * scan entirely: the source keys themselves become an
-    * equality-delete file and the write side is O(source). Position
-    * (default) resolves exact coordinates, paying one pruned target
-    * scan for a cheaper read side.
-    */
-  /** The MOR merge/merge-delete deletion list, routed by flavor —
+    * both [[mergeMor]] and [[mergeDelete]] get their delete shape;
     * returns (the snapshot's FULL replacement deleteFiles list, whether
-    * anything was deleted). Equality and position flavors append;
-    * dv-mode position hits fold into the per-file bitmaps
+    * anything was deleted). `write.merge.delete-kind=equality` skips
+    * the candidate position scan entirely: the source keys themselves
+    * become an equality-delete file and the write side is O(source).
+    * Position (default) resolves exact coordinates — candidate files
+    * pruned by source key bounds, the source keys broadcast into the
+    * semi-join — paying one pruned target scan for a cheaper read
+    * side; the hits fold into the deletion vectors
     * ([[mergedDvEntries]]), which REPLACES superseded dv entries.
     */
   private def morDeleteList(
@@ -1869,14 +1767,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
           .join(sourceKeysHinted(cur.properties, srcKeys), keyCols, "left_semi")
         val hits = matched.select(
           col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index"))
-        if (cur.properties.get(GraftTable.DeleteModeProp).contains("dv")) {
-          val (dvOld, other) = cur.deleteFiles.partition(_.dv)
-          val (dvList, any) = mergedDvEntries(hits, cur.id + 1, dvOld)
-          (other ++ dvList, any)
-        } else {
-          val dels = writeDeleteFiles(hits, cur.id + 1)
-          (cur.deleteFiles ++ dels, dels.nonEmpty)
-        }
+        val (dvOld, other) = cur.deleteFiles.partition(_.dv)
+        val (dvList, any) = mergedDvEntries(hits, cur.id + 1, dvOld)
+        (other ++ dvList, any)
       }
     }
 
@@ -1899,6 +1792,11 @@ final class GraftTable(val root: String, spark: SparkSession) {
     if (est <= BigInt(limit)) broadcast(srcKeys) else srcKeys
   }
 
+  /** MERGE — merge-on-read: matched target rows are deleted in place
+    * ([[morDeleteList]]) and the FULL source is appended — updates land
+    * as delete+append, inserts as plain append, and no existing data
+    * file is rewritten. [[applyDeletes]]/OPTIMIZE folds back later.
+    */
   private def mergeMor(
       source: DataFrame, srcKeys: DataFrame, keyCols: Seq[String]): GraftTable = {
     val cur = current
@@ -2765,7 +2663,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** Row-level change-data-capture between two snapshots (Iceberg's
-    * changelog scan re-expressed): `_change_type` = insert | delete.
+    * changelog scan re-expressed): `_change_type` = insert | delete
+    * (`_change_type1`, `_change_type2`, … when the table already has a
+    * column of that name).
     * Copy-on-write DML rewrites whole files, so file-diffing alone
     * over-reports; the row-level truth is recovered by cancellation —
     * rows present in BOTH the removed and the added files (the
@@ -2853,15 +2753,17 @@ final class GraftTable(val root: String, spark: SparkSession) {
     // n_removed per distinct row, w > 0 ⇒ w inserts, w < 0 ⇒ |w|
     // deletes — exactly exceptAll's multiset in each direction, from
     // one union + one hash aggregation over the delta.
+    // collision-checked names: withColumn on a table that genuinely
+    // carried a `_changelog_w` or `_change_type` column would silently
+    // REPLACE user data (in the multiset key, or in the output)
+    val dataCols = addedDf.columns.toSeq
+    def freshName(base: String, free: String => Boolean): String =
+      Iterator.from(0).map(i => if (i == 0) base else s"$base$i").find(free).get
+    val changeType = freshName("_change_type", n => !dataCols.contains(n))
     val fileDiff = {
       import org.apache.spark.sql.functions._
-      val dataCols = addedDf.columns.toSeq
-      // collision-checked internal name: withColumn on a table that
-      // genuinely carried a `_changelog_w` column would silently
-      // REPLACE user data in the multiset key (r13 advice)
-      val w = Iterator.from(0)
-        .map(i => if (i == 0) "_changelog_w" else s"_changelog_w$i")
-        .find(n => !dataCols.contains(n) && !dataCols.contains(n + "_rep")).get
+      val w = freshName("_changelog_w",
+        n => !dataCols.contains(n) && !dataCols.contains(n + "_rep"))
       addedDf.withColumn(w, lit(1L))
         .unionAll(removedDf.withColumn(w, lit(-1L)))
         .groupBy(dataCols.map(col): _*).agg(sum(col(w)).as(w))
@@ -2869,11 +2771,11 @@ final class GraftTable(val root: String, spark: SparkSession) {
         .withColumn(w + "_rep", explode(sequence(lit(1L), abs(col(w)))))
         .select(dataCols.map(col) :+
           when(col(w) > 0L, lit("insert")).otherwise(lit("delete"))
-            .as("_change_type"): _*)
+            .as(changeType): _*)
     }
     val morDeletes = posDeletedDf.toSeq ++ eqDeletedDf.toSeq ++ dvDeletedDf.toSeq
     morDeletes.foldLeft(fileDiff)((acc, df) => acc.unionByName(
-      df.withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))))
+      df.withColumn(changeType, org.apache.spark.sql.functions.lit("delete"))))
   }
 
   /** Roll the table back to an earlier snapshot's file set — recorded
@@ -3277,9 +3179,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** [[readSnapshot]] keeping the `(_graft_file, _graft_pos)` row
-    * coordinates, with the snapshot's pending position deletes already
-    * anti-joined away — the building block for MOR reads, MOR delete
-    * stacking, and changelog's deleted-row reconstruction.
+    * coordinates, with the snapshot's pending deletes already applied
+    * — the building block for MOR reads, MOR delete stacking, and
+    * changelog's deleted-row reconstruction.
     */
   private def readSnapshotPos(s: Snapshot): DataFrame = {
     val withPos = relationWithDefaults(s, withRowPos = true)
@@ -3509,7 +3411,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** `` t$deletes `` — the current snapshot's pending merge-on-read
-    * position-delete files (empty after OPTIMIZE/applyDeletes): MOR
+    * delete entries (empty after OPTIMIZE/applyDeletes): MOR
     * observability, the Iceberg `delete_files` metadata-table role.
     */
   def deletesView: DataFrame = {
@@ -3711,12 +3613,6 @@ object GraftTable {
     */
   val PhysicalNameKey = "graftPhysicalName"
 
-  /** Max distinct target basenames recorded on a position-delete entry
-    * (see [[DeleteFileEntry.targets]]); bigger sets stay unknown — a
-    * bulk delete touching hundreds of files is OPTIMIZE's job anyway.
-    */
-  val TargetListCap = 64
-
   /** Meta-dir file names (all I/O through [[MetaIO]]). */
   private[lake] val HintName = "version-hint.txt"
   private[lake] val LedgerName = "batch-tags.txt"
@@ -3830,15 +3726,16 @@ object GraftTable {
   }
 
   /** TBLPROPERTIES key routing DELETE between copy-on-write (default)
-    * and merge-on-read position deletes.
+    * and merge-on-read deletion vectors: `merge-on-read`, or its older
+    * spelling `dv`.
     */
   val DeleteModeProp = "write.delete.mode"
   /** OPTIMIZE clustering curve: "morton" (default) | "hilbert". */
   val OptimizeCurveProp = "write.optimize.curve"
 
   /** TBLPROPERTIES key routing UPDATE between copy-on-write (default)
-    * and merge-on-read (position-delete the pre-image, append the
-    * post-image).
+    * and merge-on-read (delete the pre-image through the deletion
+    * vectors, append the post-image).
     */
   val UpdateModeProp = "write.update.mode"
 
@@ -3847,16 +3744,17 @@ object GraftTable {
     */
   val MergeModeProp = "write.merge.mode"
 
-  /** TBLPROPERTIES key: max recorded bytes of a pending position-delete
-    * set that MOR reads will still broadcast-hint (see
-    * [[GraftTable.deleteRowsHinted]]).
+  /** TBLPROPERTIES key: max recorded bytes of a pending delete set
+    * that MOR reads will still broadcast-hint (see
+    * [[GraftTable.deleteRowsHinted]], [[GraftTable.minusDvDeletes]]).
     */
   val DeleteBroadcastProp = "write.delete.broadcast-threshold"
 
   /** TBLPROPERTIES key selecting what a merge-on-read MERGE /
     * keyed-DELETE writes: `position` (default — exact coordinates, one
-    * pruned target scan) or `equality` (the key set itself — O(source),
-    * zero target I/O; see [[DeleteFileEntry]]).
+    * pruned target scan, folded into the deletion vectors) or
+    * `equality` (the key set itself — O(source), zero target I/O; see
+    * [[DeleteFileEntry]]).
     */
   val MergeDeleteKindProp = "write.merge.delete-kind"
 

@@ -30,7 +30,8 @@ import org.apache.spark.sql.types._
   *    per-field lower/upper bounds (the spec's single-value BINARY
   *    serialization) and null counts keyed by Iceberg field id;
   *    equality-delete entries carry `equality_ids` (content kind
-  *    2 = equality, 1 = position).
+  *    2 = equality, 1 = position). Deletion vectors export as position
+  *    deletes materialized under `<out>/deletes/`.
   *  - `*.json` twins of every manifest list and manifest — the same
   *    logical entries with human-readable stat strings, for debugging
   *    (`snapshots[].graft-manifest-list-json` points at the twin
@@ -114,15 +115,25 @@ object IcebergExport {
     val schema = t.schema
     val fieldIds: Map[String, Int] =
       schema.fields.zipWithIndex.map { case (f, i) => f.name -> (i + 1) }.toMap
-    val snaps = t.snapshots.sortBy(_.id)
     // Iceberg v2 manifests have no deletion-vector representation (DVs
-    // are v3 puffin blobs) — exporting a dv entry as a position-delete
-    // manifest row would point readers at a parquet with the WRONG
-    // schema. Refuse loudly; applyDeletes + expire clears the history.
-    require(!snaps.exists(_.deleteFiles.exists(_.dv)),
-      "iceberg export: table history contains deletion-vector entries, " +
-        "which Iceberg v2 metadata cannot represent — run " +
-        "applyDeletes()/OPTIMIZE and expire the dv snapshots first")
+    // are v3 puffin blobs): each (dv entry, targets) pair of the
+    // retained history is written ONCE as a position-delete parquet of
+    // its live `(file_name, row_index)` coordinates under
+    // `outDir/deletes/`, and the delete manifests point there
+    val dvExports = scala.collection.mutable.Map[(String, Seq[String]), DeleteFileEntry]()
+    def exportable(d: DeleteFileEntry): DeleteFileEntry =
+      if (!d.dv) d
+      else dvExports.getOrElseUpdate((d.path, d.targets), {
+        val dir = new HPath(new HPath(outDir), "deletes/" + java.util.UUID.nameUUIDFromBytes(
+          (d.path +: d.targets).mkString("\n").getBytes("UTF-8")))
+        t.dvDiffRows(Seq(d), Seq.empty)
+          .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        val part = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).head
+        d.copy(path = fs.makeQualified(part.getPath).toString, bytes = part.getLen,
+          targets = Seq.empty, dv = false)
+      })
+    val snaps = t.snapshots.sortBy(_.id)
+      .map(s => s.copy(deleteFiles = s.deleteFiles.map(exportable)))
     val cur = t.current
     val qualifiedRoot = fs.makeQualified(new HPath(t.root)).toString
 

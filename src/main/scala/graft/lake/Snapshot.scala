@@ -44,50 +44,48 @@ final case class FileEntry(
     stats: Map[String, ColStat],
     addedBy: Long = 0L)
 
-/** One position-delete file registered in a snapshot (merge-on-read
-  * DELETE): a parquet file of `(file_name string, row_index long)`
-  * pairs naming rows that are logically deleted from the data files
-  * still listed in `Snapshot.files`. `path` is relative to the table
-  * root (under `deletes/`). Readers apply the union of a snapshot's
-  * delete files as an anti-join keyed on the scan's `_metadata`
-  * columns (broadcast only while the set is small — see
-  * [[GraftTable.deleteRowsHinted]]); `OPTIMIZE`/[[GraftTable.applyDeletes]]
-  * folds them back into rewritten data files. The Iceberg v2
-  * position-delete model re-expressed (the reference is copy-on-write
-  * only — this extends parity for the point-delete-at-100 TB case,
-  * where rewriting every touched data file is crippling write
-  * amplification). `bytes` (file length, recorded at write time) sizes
-  * the read-side broadcast decision; manifests from before the field
-  * deserialize it as 0 = unknown (readers estimate from `rows`).
+/** One pending merge-on-read delete entry registered in a snapshot:
+  * rows it names are logically deleted from the data files still
+  * listed in `Snapshot.files`. `path` is relative to the table root
+  * (under `deletes/`) or absolute (imports). `OPTIMIZE`/
+  * [[GraftTable.applyDeletes]] folds entries back into rewritten data
+  * files. The Iceberg delete-file model re-expressed (the reference is
+  * copy-on-write only — this extends parity for the
+  * point-delete-at-100 TB case, where rewriting every touched data
+  * file is crippling write amplification). `bytes` (file length,
+  * recorded at write time) sizes the read-side broadcast decision;
+  * manifests from before the field deserialize it as 0 = unknown
+  * (readers estimate from `rows`).
   *
-  * Two flavors, Iceberg v2's delete-file model re-expressed:
-  *  - POSITION (`equalityCols` empty): `(file_name, row_index)` pairs
-  *    naming exact coordinates; applies to the named rows regardless
-  *    of commit order (the writer scanned the target to find them).
+  * Three flavors:
+  *  - DELETION VECTOR (`dv`): what every merge-on-read coordinate
+  *    delete writes (DELETE, UPDATE, position-kind MERGE). `path` is a
+  *    parquet of `(file_name, dv binary, rows)` — ONE merged GraftDv
+  *    bitmap per covered data file. `targets` is the COMPLETE covered
+  *    basename set (the merge invariant: each data file's current
+  *    bitmap lives in exactly one dv entry) and `rows` the exact summed
+  *    cardinality, so N delete commits against a file cost the reader
+  *    ONE bitmap probe, not N anti-joins.
   *  - EQUALITY (`equalityCols` = the key column names; the parquet
   *    holds those columns): kills every row whose key matches in data
   *    files committed BEFORE this delete (`FileEntry.addedBy <
   *    this.addedBy`) — which is what lets a keyed MERGE/DELETE write
   *    O(source) with ZERO target scan, while the post-images it
   *    appends in the same commit (equal `addedBy`) survive.
+  *  - POSITION (neither): `(file_name, row_index)` pairs naming exact
+  *    coordinates, applied as an anti-join. Read-only: graft does not
+  *    write them; they come from legacy tables and Iceberg imports, and
+  *    [[GraftTable.convertDeletesToDv]] migrates them to vectors.
   *
-  * `targets` records the distinct data-file basenames a POSITION
-  * delete touches (capped — empty = unknown): when a copy-on-write
-  * rewrite later removes every target, the entry is provably stale
-  * and commits prune it ([[GraftTable]] stage), keeping
-  * `deletedRows` (catalog rowCount, `$deletes`) exact instead of
-  * double-counting rows a rewrite already dropped.
+  * When a copy-on-write rewrite later removes every recorded target
+  * of a position or dv entry, the entry is provably stale and commits
+  * prune it ([[GraftTable]] stage), keeping `deletedRows` (catalog
+  * rowCount, `$deletes`) exact. Position entries with no recorded
+  * targets stay conservatively.
   */
 final case class DeleteFileEntry(
     path: String, rows: Long, addedBy: Long = 0L, bytes: Long = 0L,
     equalityCols: Seq[String] = Seq.empty, targets: Seq[String] = Seq.empty,
-    // DELETION-VECTOR flavor (`write.delete.mode=dv`): `path` is a
-    // parquet of `(file_name, dv binary)` — ONE merged GraftDv bitmap
-    // per covered data file (never a position list). `targets` is the
-    // COMPLETE covered-basename set (the merge invariant: each data
-    // file's current bitmap lives in exactly one dv entry), `rows` the
-    // exact summed cardinality. N point-delete commits against a file
-    // therefore cost the reader ONE bitmap probe, not N anti-joins.
     dv: Boolean = false)
 
 /** A column dependency `src → dest : transform` (reference:

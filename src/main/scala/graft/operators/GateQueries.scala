@@ -481,14 +481,15 @@ object GateQueries {
   val lakeShowCreateCheckSql: String =
     "SELECT true AS listed, true AS ddl_shape, true AS ddl_rerunnable"
 
-  // ---- A48c merge-on-read MERGE (position deletes) ------------------
+  // ---- A48c merge-on-read MERGE (position-kind deletes) -------------
 
   /** `lake_merge_mor_pos` (A48c): `write.merge.mode=merge-on-read`
-    * upserts with ZERO rewrites — matched pre-images are position-
-    * deleted, the full source is appended, every pre-merge data file
-    * survives verbatim (asserted), and the `$deletes` view tracks the
-    * pending position-delete entries until `applyDeletes` folds them
-    * back. The final table equals the SQL-computed upsert.
+    * upserts with ZERO rewrites — matched pre-images' positions fold
+    * into deletion vectors, the full source is appended, every
+    * pre-merge data file survives verbatim (asserted), and the
+    * `$deletes` view tracks the pending dv entries until
+    * `applyDeletes` folds them back. The final table equals the
+    * SQL-computed upsert.
     */
   def lakeMergeMorPos(s: SparkSession, d: String): DataFrame = {
     val t = GraftTable.create(s, work(d, "mormergeq"),
@@ -504,8 +505,8 @@ object GateQueries {
     require(preFiles.subsetOf(t.current.files.map(_.path).toSet),
       "MOR merge must not rewrite existing files")
     val dv = t.deletesView.collect()
-    require(dv.nonEmpty && dv.forall(_.getAs[String]("kind") == "position"),
-      "pending position-delete entries must be visible in $deletes")
+    require(dv.nonEmpty && dv.forall(_.getAs[String]("kind") == "dv"),
+      "pending deletion-vector entries must be visible in $deletes")
     t.applyDeletes()
     require(t.deletesView.count() == 0, "applyDeletes must drain the pending list")
     sel(t.read())
@@ -524,7 +525,7 @@ object GateQueries {
 
   /** `lake_deletes_view` (A76): the `$deletes` metadata table as a
     * first-class data-valued surface — pending MOR delete files with
-    * kind and row counts. Scenario: a position-delete (MOR DELETE
+    * kind and row counts. Scenario: a deletion vector (MOR DELETE
     * WHERE) and an equality-delete (MOR MERGE with eq kind) stack on
     * one table; the view reports BOTH kinds with exact logical row
     * counts through the SQL `t$deletes` spelling; applyDeletes drains
@@ -536,7 +537,7 @@ object GateQueries {
     t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
     t.setProperty(GraftTable.MergeModeProp, "merge-on-read")
     t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
-    // position deletes: MOR DELETE WHERE o_orderkey % 400 = 0
+    // deletion vectors: MOR DELETE WHERE o_orderkey % 400 = 0
     t.delete(col("o_orderkey") % 400 === 0)
     // equality deletes: MOR MERGE updating o_orderkey % 500 = 0 rows
     val updates = orders(s, d).filter(col("o_orderkey") % 500 === 0)
@@ -557,8 +558,8 @@ object GateQueries {
       .orderBy(col("kind"))
   }
 
-  /** Position kills every %400 key; the equality merge kills the
-    * %500 pre-images (the overlap %2000 is already position-killed by
+  /** The vectors kill every %400 key; the equality merge kills the
+    * %500 pre-images (the overlap %2000 is already dv-killed by
     * the time the merge reads, so its eq-delete keys are the %500
     * survivors — but equality delete files record the SOURCE key set,
     * which is all %500 keys).
@@ -567,7 +568,7 @@ object GateQueries {
     """SELECT kind, equality_columns, n_rows, true AS has_files,
       |       CAST(0 AS BIGINT) AS drained_after_apply
       |FROM (
-      |  SELECT 'position' AS kind, '' AS equality_columns,
+      |  SELECT 'dv' AS kind, '' AS equality_columns,
       |    (SELECT count(*) FROM orders WHERE o_orderkey % 400 = 0)::BIGINT AS n_rows
       |  UNION ALL
       |  SELECT 'equality', 'o_orderkey',
@@ -1027,7 +1028,7 @@ object GateQueries {
     require(t.snapshotIds.size == 2, "append through file: URI")
     t.delete(col("o_orderkey") % 13 === 0) // COW (non-partition predicate)
     t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
-    t.delete(col("o_orderkey") % 17 === 0) // MOR position deletes
+    t.delete(col("o_orderkey") % 17 === 0) // MOR deletion vectors
     require(t.current.deleteFiles.nonEmpty, "MOR delete through file: URI")
     // exactly-once ledger through Hadoop I/O: the replay must be skipped
     val late = byStatus(orders(s, d)

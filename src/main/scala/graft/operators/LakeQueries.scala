@@ -537,10 +537,10 @@ object LakeQueries {
 
   // ---- A21b DELETE WHERE (merge-on-read) -----------------------------
 
-  /** Same logical delete as [[lakeDelete]], executed as position-delete
-    * files: `write.delete.mode=merge-on-read` routes the
-    * stats-conjunct delete to [[GraftTable.deleteMerge]] (zero data
-    * files rewritten), a second point-delete stacks on top, then
+  /** Same logical delete as [[lakeDelete]], executed merge-on-read:
+    * `write.delete.mode=merge-on-read` routes the stats-conjunct delete
+    * to deletion vectors (zero data files rewritten), a second
+    * point-delete merges into them, then
     * OPTIMIZE-style [[GraftTable.applyDeletes]] folds both back into
     * rewritten files — so the oracle checks the read path over pending
     * deletes AND the apply path in one entry.
@@ -551,8 +551,9 @@ object LakeQueries {
     t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
     t.delete(col("o_orderstatus") === "O" && col("o_totalprice") > 200000)
     val filesAfterMor = t.current.files.map(_.path).toSet
-    require(t.current.deleteFiles.nonEmpty && t.snapshot(t.currentId).operation == "delete",
-      "MOR delete must register position-delete files")
+    require(t.current.deleteFiles.nonEmpty && t.current.deleteFiles.forall(_.dv) &&
+      t.snapshot(t.currentId).operation == "delete",
+      "MOR delete must register deletion-vector entries")
     // point delete stacks on the pending list without touching data
     t.delete(col("o_orderkey") === 7L)
     require(t.current.files.map(_.path).toSet == filesAfterMor,
@@ -570,8 +571,9 @@ object LakeQueries {
 
   // ---- A90 DELETE WHERE (deletion vectors) ---------------------------
 
-  /** `lake_delete_dv`: merge-on-read deletes stored as per-file bitmap
-    * DELETION VECTORS ([[graft.lake.GraftDv]]) — three stacked delete
+  /** `lake_delete_dv`: merge-on-read deletes (spelled
+    * `write.delete.mode=dv`) stored as per-file bitmap DELETION VECTORS
+    * ([[graft.lake.GraftDv]]) — three stacked delete
     * commits whose vectors MERGE (one live bitmap per data file, the
     * read-amplification contract the in-entry requires), read back
     * through the bitmap-probe scan and oracle-checked row-for-row.
@@ -623,7 +625,7 @@ object LakeQueries {
   // ---- A23b UPDATE SET WHERE (merge-on-read) -------------------------
 
   /** Same logical update as [[lakeUpdate]], executed merge-on-read:
-    * matched pre-images become position deletes, post-images are
+    * matched pre-images fold into deletion vectors, post-images are
     * appended — zero existing files rewritten — then
     * [[GraftTable.applyDeletes]] folds back and the oracle checks the
     * final state, covering both the pending-delete read and the apply.
@@ -638,7 +640,8 @@ object LakeQueries {
       Map("o_totalprice" -> (col("o_totalprice") + 1.0)))
     require(filesBefore.subsetOf(t.current.files.map(_.path).toSet),
       "MOR update must not rewrite existing data files")
-    require(t.current.deleteFiles.nonEmpty, "MOR update must register position deletes")
+    require(t.current.deleteFiles.nonEmpty && t.current.deleteFiles.forall(_.dv),
+      "MOR update must register deletion vectors")
     t.applyDeletes()
     sel(t.read())
   }

@@ -113,14 +113,18 @@ object AnnIndex {
       booksThread.setUncaughtExceptionHandler((_, e) => booksFailure.set(e))
       booksThread.start()
 
+      def rethrowBooksFailure(): Unit = Option(booksFailure.get()).foreach(e => throw e)
+
       // codes table: the compressed corpus, inverted lists as lake
-      // partitions (repartition by cluster → one file per list)
+      // partitions (repartition by cluster → one file per list). A
+      // failed codes write still waits for the books thread, so no
+      // orphaned writer keeps committing after build returns.
       val codes = encodeWith(pqAll, books)
-      GraftTable.create(s, codesRoot(indexRoot),
+      rethrowBooksFailure()
+      try GraftTable.create(s, codesRoot(indexRoot),
         codes.repartition(col("cluster")), Seq("cluster"))
-      booksThread.join()
-      if (booksFailure.get() != null) throw booksFailure.get()
-      ()
+      finally booksThread.join()
+      rethrowBooksFailure()
     }
 
   /** Encode already-clustered residual rows against per-list books —

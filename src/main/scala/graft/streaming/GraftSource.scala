@@ -375,7 +375,8 @@ class GraftSource(
     * Commit classification, per snapshot in the window:
     *
     *  - additive (append / adopt / batch tags / any merge-on-read DML):
-    *    its added files are inserts, its added position-delete files
+    *    its added files are inserts, its added delete entries
+    *    (deletion vectors, equality deletes, imported position deletes)
     *    are deletes of pre-window rows. Row-level reconstructible.
     *  - data-preserving rewrite (compact / optimize / apply-deletes /
     *    repartition-spec): bytes move, logical content doesn't —
@@ -452,7 +453,8 @@ class GraftSource(
         if (!skipChangeCommits) throw new UnsupportedOperationException(
           s"snapshot ${s.id} ('${s.operation}') rewrites data in place; its " +
             "row-level changes cannot be reconstructed from the manifest. Run " +
-            "DML in merge-on-read mode (write.delete.mode etc.) for a " +
+            "DML in merge-on-read mode (write.delete.mode / write.update.mode / " +
+            "write.merge.mode = merge-on-read, which writes deletion vectors) for a " +
             "streamable change feed, or set skipChangeCommits=true to stream " +
             "past it (its changes are then silently dropped).")
       }
@@ -492,11 +494,15 @@ class GraftSource(
     // deletes committed at or before the window start — rows they
     // already killed were never visible at startId and must not re-emit
     // as pre-images (position deletes never overlap them by
-    // construction, equality deletes are applied explicitly below)
+    // construction, equality deletes are applied explicitly below).
+    // Position entries come from the START snapshot when it is retained:
+    // an in-window position→dv conversion drops them from the end
+    // snapshot while its vectors re-name their long-dead victims.
     val startEq = endSnap.deleteFiles.filter(d =>
       d.equalityCols.nonEmpty && d.addedBy != 0L && d.addedBy <= startId)
-    val startPos = endSnap.deleteFiles.filter(d =>
-      d.equalityCols.isEmpty && d.addedBy != 0L && d.addedBy <= startId)
+    val startPos = table.snapshotIfExists(startId).map(_.deleteFiles)
+      .getOrElse(endSnap.deleteFiles.filter(d => d.addedBy != 0L && d.addedBy <= startId))
+      .filter(d => d.equalityCols.isEmpty && !d.dv)
     // position pre-images: the target list is control-plane small by
     // design (MOR position deletes ARE the point-delete path), so
     // collecting its file names prunes the scan to the touched files

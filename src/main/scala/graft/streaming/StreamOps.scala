@@ -24,16 +24,17 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamOps {
 
   /** True when a single-source streaming checkpoint's LAST written
-    * offset equals snapshot `id` — i.e. the source is already drained
-    * through the table head and another AvailableNow start would run
-    * empty. [[graft.streaming.GraftSource]] serializes a whole-snapshot
+    * offset equals snapshot `id` AND that batch committed — i.e. the
+    * source is already drained through the table head and another
+    * AvailableNow start would run empty.
+    * [[graft.streaming.GraftSource]] serializes a whole-snapshot
     * position as a bare LongOffset number on the offsets file's last
     * line; a mid-snapshot path-cut offset (GraftFileOffset json) never
     * matches, so the check errs toward draining again (r14
     * optimization: replaces unconditional protective re-drains, each a
     * full — empty — query start).
     */
-  private def drainedThrough(s: SparkSession, ckpt: String, id: Long): Boolean = {
+  private[graft] def drainedThrough(s: SparkSession, ckpt: String, id: Long): Boolean = {
     try {
       val dir = new org.apache.hadoop.fs.Path(s"$ckpt/offsets")
       val hfs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -41,6 +42,9 @@ object StreamOps {
       val last = hfs.listStatus(dir).map(_.getPath)
         .filter(p => p.getName.nonEmpty && p.getName.forall(_.isDigit))
         .sortBy(_.getName.toLong).lastOption
+        // offsets/N is written BEFORE batch N runs: a drain that died
+        // mid-batch leaves no commits/N and must not read as drained
+        .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(s"$ckpt/commits/${p.getName}")))
       last.exists { p =>
         val in = hfs.open(p)
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString

@@ -163,7 +163,7 @@ object GraftFileIndex {
   /** `withRowPos = true` appends the scan's physical row coordinates —
     * `_graft_file` (file basename) and `_graft_pos` (row index within
     * the file) from the parquet `_metadata` column — which is what
-    * merge-on-read position deletes key on. Selected here, at the
+    * merge-on-read deletes key on. Selected here, at the
     * relation root, because `_metadata` does not survive an
     * intervening projection.
     */

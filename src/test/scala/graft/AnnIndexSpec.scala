@@ -264,4 +264,41 @@ class AnnIndexSpec extends SparkSpec {
     val chk = AnnIndex.mineHardNegativesIndexedCheck(spark, sfDir).collect().head
     assert((0 to 2).forall(chk.getLong(_) == 0L), s"check twin must be green, got $chk")
   }
+
+  test("build: a failing codes write joins the books thread before it propagates") {
+    val failRoot = s"$root-failcodes"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[FailingCodesWriteFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val err =
+      try intercept[java.io.IOException](AnnIndex.build(spark, corpus, failRoot))
+      finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    assert(err.getMessage.contains(FailingCodesWriteFs.Marker))
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(th =>
+        th.getName == "graft-ann-books-write" && th.isAlive),
+      "the books writer must not outlive a failed build")
+    assert(new GraftTable(s"$failRoot/books", spark).read().count() > 0,
+      "the books commit the failed build waited for is complete")
+  }
+}
+
+/** Local file system that refuses to create the codes table of an
+  * index rooted at `…-failcodes`: a planted codes-write failure for
+  * [[AnnIndex.build]], while every other path (the books table
+  * included) behaves normally.
+  */
+class FailingCodesWriteFs extends org.apache.hadoop.fs.LocalFileSystem {
+  private def check(f: org.apache.hadoop.fs.Path): Unit =
+    if (f.toString.endsWith("-failcodes/codes"))
+      throw new java.io.IOException(s"${FailingCodesWriteFs.Marker}: $f")
+  override def mkdirs(f: org.apache.hadoop.fs.Path): Boolean = { check(f); super.mkdirs(f) }
+  override def mkdirs(f: org.apache.hadoop.fs.Path,
+      p: org.apache.hadoop.fs.permission.FsPermission): Boolean = { check(f); super.mkdirs(f, p) }
+}
+
+object FailingCodesWriteFs {
+  val Marker = "planted codes-write failure"
 }

@@ -194,7 +194,7 @@ class BucketJoinSpec extends SparkSpec {
     // SPJ result must reflect the deletion
     t.setProperty("write.delete.mode", "merge-on-read")
     t.delete(col("o_orderstatus") === "F")
-    assert(t.current.deleteFiles.nonEmpty, "expected a MOR position-delete")
+    assert(t.current.deleteFiles.nonEmpty, "expected a MOR deletion vector")
     val t2 = GraftTable.create(spark, tmp("life-c"),
       Tables.customer(spark, sfDir).repartition(col("c_custkey")),
       Seq("c_b"), Seq(DepSpec("c_custkey", "c_b", "sbucket[4]")))

@@ -122,9 +122,9 @@ class DmlModelSpec extends SparkSpec {
           case 6 => // maintenance: fold pending MOR deletes (content no-op)
             t.applyDeletes()
           case 7 => // flip DELETE between COW / MOR / deletion vectors,
-            // UPDATE+MERGE between COW / MOR — mixed pending delete
-            // flavors (position + equality + dv) are exactly the
-            // interaction surface this soak exists for
+            // UPDATE+MERGE between COW / MOR (both delete-mode
+            // spellings) — mixed pending delete flavors (dv + equality)
+            // are exactly the interaction surface this soak exists for
             val dm = rnd.nextInt(3) match {
               case 0 => "copy-on-write"
               case 1 => "merge-on-read"

@@ -391,6 +391,55 @@ class IcebergExportSpec extends SparkSpec {
     assert(impAvro.read().exceptAll(t.read()).count() === 0)
   }
 
+  test("merge-on-read round-trip: vectors export as position deletes, import converts back") {
+    val o = Tables.orders(spark, sfDir).limit(2000)
+    val root = new java.io.File("target/laketest/icemor").getAbsolutePath
+    val t = GraftTable.create(spark, root,
+      o.repartition(col("o_orderstatus")), Seq("o_orderstatus"))
+    t.setProperties(Map(GraftTable.DeleteModeProp -> "merge-on-read",
+      GraftTable.UpdateModeProp -> "merge-on-read",
+      GraftTable.MergeModeProp -> "merge-on-read"))
+    t.delete(col("o_orderkey") % 7 === 0)
+    t.update(col("o_orderkey") % 11 === 0, Map("o_totalprice" -> lit(1.25)))
+    val keys = t.read().select(col("o_orderkey")).orderBy(col("o_orderkey"))
+      .limit(3).collect().map(_.getLong(0))
+    t.merge(t.read().filter(col("o_orderkey").isin(keys.toSeq: _*))
+      .withColumn("o_totalprice", lit(2.5)), Seq("o_orderkey"))
+    assert(t.current.deleteFiles.nonEmpty && t.current.deleteFiles.forall(_.dv))
+
+    val metaPath = IcebergExport.exportMetadata(t, root + "-ice")
+    // the v2 delete manifest names position-delete parquets written
+    // under the export directory, one per (dv entry, targets) pair
+    import scala.jdk.CollectionConverters._
+    val md = parse(metaPath)
+    val mlPath = md.get("snapshots").elements().asScala.toSeq.last.get("manifest-list").asText()
+    val fs = hfs(mlPath)
+    val dels = IcebergAvro.readManifest(fs,
+      new HPath(IcebergAvro.readManifestList(fs, new HPath(mlPath))
+        .find(_.content == 1).get.manifestPath), idToTypeOf(md))
+    assert(dels.nonEmpty && dels.forall(_.content == 1))
+    assert(dels.forall(_.filePath.contains("icemor-ice/deletes/")))
+    dels.foreach { e =>
+      val pos = spark.read.parquet(e.filePath)
+      assert(pos.columns.toSeq === Seq("file_name", "row_index"))
+      assert(pos.count() === e.rows)
+    }
+
+    val imp = IcebergExport.importMetadata(spark, metaPath, root + "-imp")
+    assert(imp.current.deleteFiles.nonEmpty &&
+      imp.current.deleteFiles.forall(d => !d.dv && d.equalityCols.isEmpty))
+    assert(imp.current.deletedRows === t.current.deletedRows)
+    assert(imp.read().exceptAll(t.read()).count() === 0)
+    assert(t.read().exceptAll(imp.read()).count() === 0)
+
+    graft.sql.GraftCatalog.register("icemor_imp", imp.root)
+    spark.sql("CALL system.rewrite_position_delete_files(table => 'icemor_imp')").collect()
+    val conv = new GraftTable(imp.root, spark)
+    assert(conv.current.deleteFiles.nonEmpty && conv.current.deleteFiles.forall(_.dv))
+    assert(conv.read().exceptAll(t.read()).count() === 0)
+    assert(t.read().exceptAll(conv.read()).count() === 0)
+  }
+
   /** Golden-bytes fixture (r10 mandate): the remaining export risk is
     * writer/reader self-consistency — both could share a misreading of
     * the Iceberg spec. This pins one complete export (metadata JSON,

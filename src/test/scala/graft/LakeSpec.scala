@@ -1110,7 +1110,7 @@ class LakeSpec extends SparkSpec {
     val victim = t.read().select(col("o_orderkey")).orderBy(col("o_orderkey")).head().getLong(0)
     val n0 = t.read().count()
     t.delete(col("o_orderkey") === victim)
-    // the MOR contract: data file list untouched, a position-delete registered
+    // the MOR contract: data file list untouched, a deletion vector registered
     assert(t.current.files.map(_.path).toSet === preFiles, "MOR delete must not rewrite data files")
     assert(t.current.deleteFiles.nonEmpty && t.current.deletedRows === 1L)
     assert(t.read().count() === n0 - 1)
@@ -1186,7 +1186,7 @@ class LakeSpec extends SparkSpec {
     val oldPrice = t.read().filter(col("o_orderkey") === victim)
       .head().getAs[Double]("o_totalprice")
     t.update(col("o_orderkey") === victim, Map("o_totalprice" -> lit(999.5)))
-    // zero existing files rewritten; one position delete + one appended file
+    // zero existing files rewritten; one deletion vector + one appended file
     assert(preFiles.subsetOf(t.current.files.map(_.path).toSet),
       "MOR update must not rewrite existing files")
     assert(t.current.deleteFiles.nonEmpty && t.current.deletedRows === 1L)
@@ -1273,7 +1273,7 @@ class LakeSpec extends SparkSpec {
     t.merge(victims, Seq("o_orderkey"))
     assert(t.read().count() === n0, "upsert of existing keys must not grow the table")
     assert(t.current.deleteFiles.nonEmpty && t.current.deleteFiles.forall(_.equalityCols.isEmpty),
-      "gated merge still writes position deletes")
+      "gated merge still writes position-kind (vector) deletes")
     assert(t.read().orderBy(col("o_orderkey")).limit(5).collect()
       .forall(_.getAs[Double]("o_totalprice") === 77.25))
   }
@@ -1908,7 +1908,7 @@ class LakeSpec extends SparkSpec {
     val t = GraftTable.create(spark, tmp("morprune"),
       o.repartition(col("o_orderstatus")), Seq("o_orderstatus"))
     t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
-    // point-delete one row inside partition F → position entry whose
+    // point-delete one row inside partition F → dv entry whose
     // recorded targets are F's file(s)
     val vF = t.read().filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey")).orderBy(col("o_orderkey")).head().getLong(0)
@@ -1996,7 +1996,7 @@ class LakeSpec extends SparkSpec {
     val victim = t.read().select(col("o_orderkey")).orderBy(col("o_orderkey")).head().getLong(0)
     t.delete(col("o_orderkey") === victim)
     assert(t.read().filter(col("o_orderkey") === victim).count() === 0)
-    // MOR delete: position-delete file registered + applied on read
+    // MOR delete: deletion vector registered + applied on read
     t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
     val victim2 = t.read().select(col("o_orderkey")).orderBy(col("o_orderkey")).head().getLong(0)
     t.delete(col("o_orderkey") === victim2)
@@ -2198,7 +2198,8 @@ class LakeSpec extends SparkSpec {
     // create snapshot: every entry is an ADDED data file stamped addedBy=1
     val s1 = e.filter(_._1 == 1L)
     assert(s1.nonEmpty && s1.forall(x => x._2 == "data" && x._3 == "ADDED" && x._5 == 1L))
-    // MOR snapshot: data files carried over EXISTING, the position-delete ADDED
+    // MOR snapshot: data files carried over EXISTING, the vector ADDED (a
+    // position-delete in Iceberg's content terms)
     val sm = e.filter(_._1 == morId)
     assert(sm.filter(_._2 == "position-delete").map(_._3).toSeq === Seq("ADDED"))
     assert(sm.filter(_._2 == "data").nonEmpty &&
@@ -2656,18 +2657,20 @@ class LakeSpec extends SparkSpec {
     assert(dvEntries.nonEmpty && cur.deleteFiles.forall(_.dv))
     // THE read-amplification invariant: every data file's live bitmap
     // is owned by exactly ONE dv entry — N delete commits never stack
-    // N probe inputs per file (position-delete mode would carry N
+    // N probe inputs per file (position-delete files would carry N
     // entries into every read's anti-join)
     val owners = dvEntries.flatMap(_.targets)
     assert(owners.distinct.size === owners.size,
       s"a data file's bitmap must live in exactly one dv entry: $owners")
     assert(cur.deletedRows === (3 * n).toLong, "merged cardinality bookkeeping must be exact")
-    // contrast fixture: the same deletes in position mode DO stack N entries
+    // the `merge-on-read` spelling writes the same merged vectors
     val tp = mk("dv-life-pos")
     tp.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
     (0 until n).foreach(i => tp.delete(col("k").isin(Seq(10L + i, 100L + i, 200L + i).map(Long.box): _*)))
-    assert(tp.current.deleteFiles.size >= n,
-      "position mode: at least one delete file per commit stacks into every read")
+    val tpOwners = tp.current.deleteFiles.flatMap(_.targets)
+    assert(tp.current.deleteFiles.forall(_.dv) && tpOwners.distinct.size === tpOwners.size,
+      "merge-on-read must merge N commits into one bitmap per file, like dv")
+    assert(tp.current.deletedRows === (3 * n).toLong)
 
     // time travel sees each intermediate vector state
     val mid = deletedSnapIds(2)
@@ -2682,7 +2685,6 @@ class LakeSpec extends SparkSpec {
     assert(cdc.map(_.getAs[Long]("k")).toSet ===
       (3 until 6).flatMap(i => Seq(10L + i, 100L + i, 200L + i)).toSet)
 
-    // dv mode governs the position-delete REPRESENTATION everywhere:
     // a MOR UPDATE's pre-image coordinates fold into the bitmaps (no
     // position entry appears), post-images append normally
     t.setProperty(GraftTable.UpdateModeProp, "merge-on-read")
@@ -2704,8 +2706,7 @@ class LakeSpec extends SparkSpec {
       "one-owner invariant must survive update/merge dv folds")
     assert(t.read().filter(col("k") === 60L).select("v").head().getDouble(0) === -6.0)
     assert(t.read().count() === model.size.toLong)
-    // equality-flavor merges still write equality entries (dv only
-    // replaces the POSITION representation)
+    // equality-flavor merges still write equality entries
     t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
     t.merge(Seq((70L, 70L % 3, -7.0)).toDF("k", "g", "v").repartition(col("g")), Seq("k"))
     model(70L) = (70L % 3, -7.0)
@@ -2730,18 +2731,22 @@ class LakeSpec extends SparkSpec {
 
   test("position→dv conversion: one commit swaps representations, content and counts exact") {
     import spark.implicits._
-    val t = GraftTable.create(spark, tmp("convert-dv"),
+    val src = GraftTable.create(spark, tmp("convert-dv-src"),
       (1L to 200L).map(i => (i, i % 4, i * 1.0)).toDF("k", "g", "v")
         .repartition(col("g")), Seq("g"))
-    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
-    t.setProperty(GraftTable.UpdateModeProp, "merge-on-read")
-    t.delete(col("k") % 13 === 0)
-    t.delete(col("k") === 2L)
-    t.update(col("k") === 3L, Map("v" -> lit(-3.0)))
-    t.setProperty(GraftTable.MergeModeProp, "merge-on-read")
-    t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
-    t.merge(Seq((5L, 5L % 4, -5.0)).toDF("k", "g", "v").repartition(col("g")), Seq("k"))
+    src.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    src.setProperty(GraftTable.UpdateModeProp, "merge-on-read")
+    src.delete(col("k") % 13 === 0)
+    src.delete(col("k") === 2L)
+    src.update(col("k") === 3L, Map("v" -> lit(-3.0)))
+    src.setProperty(GraftTable.MergeModeProp, "merge-on-read")
+    src.setProperty(GraftTable.MergeDeleteKindProp, "equality")
+    src.merge(Seq((5L, 5L % 4, -5.0)).toDF("k", "g", "v").repartition(col("g")), Seq("k"))
+    // graft writes vectors; position entries come from an Iceberg import
+    val t = graft.lake.IcebergExport.importMetadata(spark,
+      graft.lake.IcebergExport.exportMetadata(src, tmp("convert-dv-ice")), tmp("convert-dv"))
     val before = t.read().collect().map(_.toString).sorted.toSeq
+    assert(before === src.read().collect().map(_.toString).sorted.toSeq)
     val deletedBefore = t.current.deletedRows
     val posBefore = t.current.deleteFiles.count(d => d.equalityCols.isEmpty && !d.dv)
     assert(posBefore > 0 && t.current.deleteFiles.exists(_.equalityCols.nonEmpty))
@@ -2769,6 +2774,71 @@ class LakeSpec extends SparkSpec {
     val id = t2.currentId
     t2.convertDeletesToDv()
     assert(t2.currentId === id)
+  }
+
+  test("merge-on-read DML writes only deletion vectors under both delete-mode spellings") {
+    import spark.implicits._
+    for (mode <- Seq("merge-on-read", "dv")) {
+      val t = GraftTable.create(spark, tmp(s"mor-one-encoding-$mode"),
+        (1L to 300L).map(k => (k, k % 3, k * 1.5)).toDF("k", "g", "v")
+          .repartition(col("g")), Seq("g"))
+      t.setProperties(Map(GraftTable.DeleteModeProp -> mode,
+        GraftTable.UpdateModeProp -> "merge-on-read",
+        GraftTable.MergeModeProp -> "merge-on-read"))
+      val preFiles = t.current.files.map(_.path).toSet
+      val model = scala.collection.mutable.Map((1L to 300L).map(k => k -> k * 1.5): _*)
+      def check(step: String): Unit = {
+        val coord = t.current.deleteFiles.filter(_.equalityCols.isEmpty)
+        assert(coord.nonEmpty && coord.forall(_.dv),
+          s"$mode $step must write deletion vectors: ${t.current.deleteFiles}")
+        val owners = coord.flatMap(_.targets)
+        assert(owners.distinct.size === owners.size, s"$mode $step: one owner per file")
+        assert(preFiles.subsetOf(t.current.files.map(_.path).toSet),
+          s"$mode $step must not rewrite data files")
+        assert(t.read().select("k", "v").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+          === model.toMap, s"$mode $step content")
+      }
+      t.delete(col("k") % 7 === 0)
+      model.filterInPlace((k, _) => k % 7 != 0)
+      check("DELETE")
+      t.update(col("k") % 11 === 0, Map("v" -> lit(-1.0)))
+      model.keys.toSeq.filter(_ % 11 == 0).foreach(model(_) = -1.0)
+      check("UPDATE")
+      t.merge(Seq((12L, 0L, -2.0), (9001L, 9001L % 3, 1.0)).toDF("k", "g", "v"), Seq("k"))
+      model(12L) = -2.0; model(9001L) = 1.0
+      check("MERGE")
+      t.mergeDelete(Seq(13L, 9001L).toDF("k"), Seq("k"))
+      model.remove(13L); model.remove(9001L)
+      check("merge-delete")
+      // no (file_name, row_index) position parquet was written anywhere
+      // under the table root: every delete parquet is a bitmap file
+      import scala.jdk.CollectionConverters._
+      val delParquets = java.nio.file.Files.walk(java.nio.file.Paths.get(t.root, "deletes"))
+        .iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+      assert(delParquets.nonEmpty)
+      delParquets.foreach(p => assert(
+        spark.read.parquet(p).columns.toSeq === Seq("file_name", "dv", "rows"), p))
+    }
+  }
+
+  test("changelog keeps a user column named _change_type: the change kind gets a fresh name") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp("changelog-collide"),
+      (1L to 20L).map(k => (k, s"user$k")).toDF("k", "_change_type").coalesce(1))
+    val from = t.currentId
+    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    t.delete(col("k") === 3L) // merge-on-read: the deletion-vector branch
+    val mid = t.currentId
+    t.unsetProperty(GraftTable.DeleteModeProp)
+    t.update(col("k") === 5L, Map("_change_type" -> lit("edited"))) // file-diff branch
+    def rows(a: Long, b: Long) = {
+      val cl = t.changelog(a, b)
+      assert(cl.columns.toSeq === Seq("k", "_change_type", "_change_type1"))
+      cl.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    }
+    assert(rows(from, mid) === Set((3L, "user3", "delete")))
+    assert(rows(mid, t.currentId) ===
+      Set((5L, "user5", "delete"), (5L, "edited", "insert")))
   }
 
   test("adopted TIMESTAMP_MILLIS parquet records no long stats: pruning and meta-agg stay exact") {

@@ -111,6 +111,7 @@ class OptimizationR14Spec extends SparkSpec {
       .toDF("doc_id", "text")
     val pairs = pipeline.Dedup.ngramJaccardOf(docs, postingDfCap = 2).collect()
     // docs 1,2 share several sub-cap trigram shingles; doc 3 shares none
+    assert(pairs.nonEmpty, "the cap must not drop the true near-dup pair")
     assert(pairs.forall(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
     val cont = pipeline.Dedup.containmentOf(docs, postingDfCap = 2)
     assert(cont.columns.toSeq == Seq("doc_src", "doc_sup", "containment"))

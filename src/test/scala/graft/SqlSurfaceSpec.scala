@@ -702,7 +702,7 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(t.current.deleteFiles.nonEmpty)
     assert(spark.sql("SELECT count(*) AS n FROM t_optmor").collect().head.getLong(0) === n0 - 1)
     spark.sql("OPTIMIZE t_optmor")
-    assert(t.current.deleteFiles.isEmpty, "OPTIMIZE must fold pending position deletes")
+    assert(t.current.deleteFiles.isEmpty, "OPTIMIZE must fold pending deletes")
     assert(spark.sql("SELECT count(*) AS n FROM t_optmor").collect().head.getLong(0) === n0 - 1)
   }
 

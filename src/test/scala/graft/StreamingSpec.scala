@@ -1073,7 +1073,8 @@ class StreamingSpec extends SparkSpec {
     // retractions shape over a fresh dv table: incremental state
     // converges to the batch table under dv deletes
     val root2 = s"$root-retr"; val ckpt2 = s"$ckpt-retr"
-    for (p <- Seq(root2, ckpt2)) {
+    val root3 = s"$root-retr-imp"; val ckpt3 = s"$ckpt-retr-imp"
+    for (p <- Seq(root2, ckpt2, root3, ckpt3)) {
       val f = new java.io.File(p)
       if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", p).! }
     }
@@ -1081,40 +1082,47 @@ class StreamingSpec extends SparkSpec {
       (1L to 8L).map(i => (i, i * 10L)).toDF("id", "v"))
     t2.setProperty(GraftTable.DeleteModeProp, "dv")
     val state = scala.collection.mutable.Map.empty[Long, Long]
-    def drainRetr(): Unit = {
+    val retracted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def drainRetr(path: String, ckptDir: String): Unit = {
       val q = spark.readStream.format("graft.streaming.GraftSourceProvider")
-        .option("path", root2).option("deletesAsRetractions", "true").load()
-        .writeStream.option("checkpointLocation", ckpt2)
+        .option("path", path).option("deletesAsRetractions", "true").load()
+        .writeStream.option("checkpointLocation", ckptDir)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.select("_graft_retract", "id", "v").collect().foreach { r =>
-            if (r.getBoolean(0)) state.remove(r.getLong(1))
+            if (r.getBoolean(0)) { state.remove(r.getLong(1)); retracted += r.getLong(1) }
             else state(r.getLong(1)) = r.getLong(2)
           }; ()
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    drainRetr()
+    drainRetr(root2, ckpt2)
     t2.delete(col("id").isin(2L, 5L))
     t2.delete(col("id") === 7L)
-    drainRetr()
+    drainRetr(root2, ckpt2)
     val want = t2.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(state.toMap === want, s"retraction state diverged: $state vs $want")
     // an in-window position→dv CONVERSION must stay silent: the
     // pre-existing position deletes' coordinates reappear as bitmap
     // growth, but those rows were dead at the window start (dvPre
-    // applies startPos — without it every converted victim re-emits)
-    t2.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    // applies the start-time position deletes — without that every
+    // converted victim re-emits). graft writes vectors, so the
+    // position entries come from an Iceberg export → import.
     t2.delete(col("id") === 1L)
-    drainRetr() // consume the position delete normally
+    val t3 = graft.lake.IcebergExport.importMetadata(spark,
+      graft.lake.IcebergExport.exportMetadata(t2, s"$root-retr-ice"), root3)
+    assert(t3.current.deleteFiles.nonEmpty && t3.current.deleteFiles.forall(!_.dv))
+    state.clear()
+    drainRetr(root3, ckpt3) // initial load applies the position deletes
     val preConv = state.toMap
-    t2.convertDeletesToDv()
-    t2.setProperty(GraftTable.DeleteModeProp, "dv")
-    t2.delete(col("id") === 8L) // one real in-window dv delete alongside
-    drainRetr()
-    val want2 = t2.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(preConv === t3.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    retracted.clear()
+    t3.convertDeletesToDv()
+    t3.delete(col("id") === 8L) // one real in-window dv delete alongside
+    drainRetr(root3, ckpt3)
+    val want2 = t3.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(state.toMap === want2, s"post-conversion state diverged: $state vs $want2")
-    assert((preConv.keySet -- state.keySet) === Set(8L),
+    assert(retracted.toSeq === Seq(8L),
       "only the genuine in-window delete may retract across a conversion")
   }
 
@@ -1269,6 +1277,28 @@ class StreamingSpec extends SparkSpec {
     (0 until row.length).foreach(i =>
       assert(row.getBoolean(i), s"invariant ${row.schema.fieldNames(i)} violated"))
   }
+
+  test("drainedThrough needs the last offsets batch to be committed") {
+    import java.nio.file.{Files, Paths}
+    val ckpt = new java.io.File("target/laketest/drained-through-ckpt").getAbsolutePath
+    val f = new java.io.File(ckpt)
+    if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", ckpt).! }
+    Files.createDirectories(Paths.get(ckpt, "offsets"))
+    Files.createDirectories(Paths.get(ckpt, "commits"))
+    def write(rel: String, body: String): Unit = {
+      Files.write(Paths.get(ckpt, rel), body.getBytes("UTF-8")); ()
+    }
+    write("offsets/0", "v1\n{}\n3")
+    write("commits/0", "v1\n{}")
+    assert(StreamOps.drainedThrough(spark, ckpt, 3L))
+    assert(!StreamOps.drainedThrough(spark, ckpt, 4L))
+    // batch 1 planned through snapshot 4 but died before committing
+    write("offsets/1", "v1\n{}\n4")
+    assert(!StreamOps.drainedThrough(spark, ckpt, 4L),
+      "offsets/1 without commits/1 is an unfinished batch, not a drain")
+    write("commits/1", "v1\n{}")
+    assert(StreamOps.drainedThrough(spark, ckpt, 4L))
+  }
 }
 
 object StreamingSpec {
@@ -1305,5 +1335,4 @@ object StreamingSpec {
         l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.inputFiles.toSet
     }.head
-
 }
