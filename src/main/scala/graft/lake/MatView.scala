@@ -118,12 +118,15 @@ object MatView {
     if (from == to) return mv
     val groupCols = props(GroupColsProp).split(',').toSeq.filter(_.nonEmpty)
     val aggs = parseAggs(props(AggSpecProp))
-    val sign = when(col("_change_type") === "insert", 1L).otherwise(-1L)
+    val changes = base.changelog(from, to)
+    // the change kind is the changelog's last column (`_change_type`,
+    // or a fresh name when the base has a column of that name)
+    val sign = when(col(changes.columns.last) === "insert", 1L).otherwise(-1L)
     val deltaCols = aggs.map {
       case AggSpec(n, "count", _) => sum(sign).as(n)
       case AggSpec(n, "sum", c)   => sum(sign * col(c)).cast("long").as(n)
     } ++ (if (liveness(aggs) == HiddenN) Seq(sum(sign).as(HiddenN)) else Nil)
-    val delta = base.changelog(from, to)
+    val delta = changes
       .groupBy(groupCols.map(col): _*)
       .agg(deltaCols.head, deltaCols.tail: _*)
     // fold: MV ∪ delta → one more group-by (both inputs are

@@ -370,11 +370,9 @@ object GateQueries {
   def lakeBloomCheck(s: SparkSession, d: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     def bloomOf(rel: String, root: String, c: String): Boolean = {
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(s"$root/$rel"), s.sparkContext.hadoopConfiguration))
+      val rd = GraftTable.openFooter(new Path(s"$root/$rel"),
+        s.sparkContext.hadoopConfiguration)
       try {
         val block = rd.getFooter.getBlocks.get(0)
         val cc = block.getColumns.asScala.find(_.getPath.toDotString == c).get

@@ -55,7 +55,9 @@ import graft.lake.{DeleteFileEntry, GraftTable, Snapshot}
   * the table ⇒ restart the stream.
   *
   * Change-data feed: `readChangeFeed=true` appends a `_change_type`
-  * column and emits row-level `insert`/`delete` changes per
+  * column (a fresh name such as `_change_type1` when the table has a
+  * column of that name, as in [[graft.lake.GraftTable.changelog]]) and
+  * emits row-level `insert`/`delete` changes per
   * micro-batch instead of raw appends — see [[GraftSource.cdcBatch]]
   * for the commit-classification contract (`skipChangeCommits` streams
   * past copy-on-write rewrites, dropping their changes, like Delta).
@@ -78,8 +80,8 @@ class GraftSourceProvider extends StreamSourceProvider {
       new GraftTable(root(parameters), sqlContext.sparkSession).schema)
     ("graft",
       if (flag(parameters, "readChangeFeed"))
-        base.add(GraftSource.ChangeTypeCol, org.apache.spark.sql.types.StringType,
-          nullable = false)
+        base.add(GraftTable.changeTypeCol(base.fieldNames.toSeq),
+          org.apache.spark.sql.types.StringType, nullable = false)
       else if (flag(parameters, "deletesAsRetractions"))
         base.add(GraftSource.RetractCol, org.apache.spark.sql.types.BooleanType,
           nullable = false)
@@ -139,14 +141,23 @@ class GraftSource(
 
   private val table = new GraftTable(root, spark)
 
+  /** The table schema pinned at stream start. */
+  private val tableSchema = table.schema
+
+  /** The change-kind column of the change feed: `_change_type`, or a
+    * fresh name when the table has a column of that name — the same
+    * name [[graft.lake.GraftTable.changelog]] gives it.
+    */
+  private val changeTypeCol = GraftTable.changeTypeCol(tableSchema.fieldNames.toSeq)
+
   override val schema: StructType =
     if (changeFeed)
-      table.schema.add(GraftSource.ChangeTypeCol,
+      tableSchema.add(changeTypeCol,
         org.apache.spark.sql.types.StringType, nullable = false)
     else if (retractions)
-      table.schema.add(GraftSource.RetractCol,
+      tableSchema.add(GraftSource.RetractCol,
         org.apache.spark.sql.types.BooleanType, nullable = false)
-    else table.schema
+    else tableSchema
 
   // admission control: highest end offset handed out so far. Restart
   // recovery initializes it via the recovered-batch getBatch call
@@ -349,7 +360,7 @@ class GraftSource(
   // ---- change-data feed ---------------------------------------------
 
   private def withChangeType(df: DataFrame, t: String): DataFrame =
-    df.withColumn(GraftSource.ChangeTypeCol, org.apache.spark.sql.functions.lit(t))
+    df.withColumn(changeTypeCol, org.apache.spark.sql.functions.lit(t))
 
   /** `deletesAsRetractions=true`: the change feed re-shaped for
     * incremental-aggregate consumers — the table schema plus a boolean
@@ -365,8 +376,8 @@ class GraftSource(
     import org.apache.spark.sql.functions.{col, lit}
     cdcBatch(startId, endId, endSnap)
       .withColumn(GraftSource.RetractCol,
-        col(GraftSource.ChangeTypeCol) === lit("delete"))
-      .drop(GraftSource.ChangeTypeCol)
+        col(changeTypeCol) === lit("delete"))
+      .drop(changeTypeCol)
   }
 
   /** Row-level changes in `(startId, endId]` as `insert` / `delete`
@@ -396,14 +407,12 @@ class GraftSource(
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.graft.GraftFileIndex
     import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    // output order: the CONSTRUCTION-TIME table columns + _change_type
-    // (derived from the pinned source schema, NOT the live table.schema
-    // — a mid-stream ALTER TABLE must not change a running stream's
-    // batch shape; under retractions the pinned schema carries
-    // _graft_retract instead, which retractionBatch re-shapes to)
-    val order = (schema.fieldNames.toSeq
-      .filterNot(n => n == GraftSource.ChangeTypeCol || n == GraftSource.RetractCol)
-      :+ GraftSource.ChangeTypeCol).map(col)
+    // output order: the CONSTRUCTION-TIME table columns + the change
+    // kind (the schema pinned at stream start, NOT the live
+    // table.schema — a mid-stream ALTER TABLE must not change a running
+    // stream's batch shape; retractionBatch re-shapes the change kind
+    // to _graft_retract)
+    val order = (tableSchema.fieldNames.toSeq :+ changeTypeCol).map(col)
     // position joins keep the pos columns (dropped once every delete
     // flavor is applied); delete frames arrive broadcast-hinted or not
     // from GraftTable.deleteRowsHinted — size-gated, never unconditional
@@ -596,11 +605,6 @@ class GraftSource(
 }
 
 object GraftSource {
-
-  /** Change-type column appended by `readChangeFeed=true` (values
-    * `insert` | `delete`; an update is its delete+insert pair).
-    */
-  val ChangeTypeCol = "_change_type"
 
   /** Retraction flag appended by `deletesAsRetractions=true` (false =
     * add the row, true = subtract this pre-window row).

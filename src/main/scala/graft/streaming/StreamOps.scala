@@ -605,6 +605,7 @@ object StreamOps {
     val t = GraftTable.create(s, root, ev.filter(col("event_id") % 2 === 0))
     t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
     t.setProperty(GraftTable.UpdateModeProp, "merge-on-read")
+    val changeType = GraftTable.changeTypeCol(t.schema.fieldNames.toSeq)
     // each micro-batch lands as a distributed parquet append — the feed
     // never passes through the driver (at 100 TB the change feed is
     // itself big data; collect() here would be the scale bug)
@@ -613,7 +614,7 @@ object StreamOps {
         .option("path", root).option("readChangeFeed", "true").load()
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (b: DataFrame, _: Long) =>
-          b.select(col("_change_type"), col("event_type"), col("value"))
+          b.select(col(changeType), col("event_type"), col("value"))
             .write.mode("append").parquet(feed); ()
         }
         .trigger(Trigger.AvailableNow()).start()
@@ -632,7 +633,7 @@ object StreamOps {
     drainOnce()
     if (!drainedThrough(s, ckpt, t.currentId)) drainOnce()
     s.read.parquet(feed)
-      .withColumnRenamed("_change_type", "change_type")
+      .withColumnRenamed(changeType, "change_type")
       .groupBy(col("change_type"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .orderBy(col("change_type"), col("event_type"))
@@ -766,6 +767,7 @@ object StreamOps {
     // accumulated deletes back on the operator's schedule instead)
     b.setProperty(GraftTable.MergeModeProp, "merge-on-read")
     b.setProperty(GraftTable.MergeDeleteKindProp, "equality")
+    val changeType = GraftTable.changeTypeCol(a.schema.fieldNames.toSeq)
     def applyOnce(): Unit = {
       val q = s.readStream.format("graft.streaming.GraftSourceProvider")
         .option("path", srcRoot).option("readChangeFeed", "true").load()
@@ -778,14 +780,14 @@ object StreamOps {
             // its delete+insert pair), both as KEYED distributed DML —
             // no change row ever passes through the driver, only the
             // two counters
-            val kinds = cached.groupBy(col("_change_type")).count()
+            val kinds = cached.groupBy(col(changeType)).count()
               .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
             if (kinds.getOrElse("delete", 0L) > 0L)
-              b.mergeDelete(cached.filter(col("_change_type") === "delete")
+              b.mergeDelete(cached.filter(col(changeType) === "delete")
                 .select(col("event_id")), Seq("event_id"))
             if (kinds.getOrElse("insert", 0L) > 0L)
-              b.merge(cached.filter(col("_change_type") === "insert")
-                .drop("_change_type"), Seq("event_id"))
+              b.merge(cached.filter(col(changeType) === "insert")
+                .drop(changeType), Seq("event_id"))
             ()
           } finally { cached.unpersist(); () }
         }

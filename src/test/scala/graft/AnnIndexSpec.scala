@@ -92,11 +92,7 @@ class AnnIndexSpec extends SparkSpec {
 
     // delta: near-copies of two corpus vectors under fresh high ids
     // (the planted-corpus trick — last dims zeroed, cos ≈ 0.9+)
-    val delta = corpus.filter(col("vec_id") < 2)
-      .select((col("vec_id") + 500000000L).as("vec_id"),
-        concat(slice(col("embedding"), 1, VectorOps.PlantKeepDims),
-          array(Seq.fill(VectorOps.EmbDim - VectorOps.PlantKeepDims)(lit(0.0f)): _*))
-          .as("embedding"))
+    val delta = plantedRows(500000000L, 2)
     val nDelta = delta.count()
     AnnIndex.append(spark, delta, root)
 
@@ -139,13 +135,8 @@ class AnnIndexSpec extends SparkSpec {
     assert(new GraftTable(s"$root/codes", spark).current.files.map(_.path).toSet === preFiles)
 
     // two appends, one sync: exactly the delta encodes
-    def planted(offset: Long, take: Int) = corpus.filter(col("vec_id") < take)
-      .select((col("vec_id") + offset).as("vec_id"),
-        concat(slice(col("embedding"), 1, VectorOps.PlantKeepDims),
-          array(Seq.fill(VectorOps.EmbDim - VectorOps.PlantKeepDims)(lit(0.0f)): _*))
-          .as("embedding"))
-    t.append(planted(600000000L, 2))
-    t.append(planted(700000000L, 1))
+    t.append(plantedRows(600000000L, 2))
+    t.append(plantedRows(700000000L, 1))
     val n = AnnIndex.sync(spark, t, root)
     assert(n === 3L, s"sync must report the manifest delta, got $n")
     val t2 = new GraftTable(s"$root/codes", spark)
@@ -155,7 +146,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(t2.current.files.map(_.rows).sum === preRows + 3L)
     // the synced rows are immediately findable through the index
     val got = AnnIndex.query(spark, root, t.read().select(col("vec_id"), col("embedding")),
-      planted(600000000L, 2).select(col("vec_id").as("query_id"), col("embedding")), 2L)
+      plantedRows(600000000L, 2).select(col("vec_id").as("query_id"), col("embedding")), 2L)
       .collect()
     (0 until 2).foreach { i =>
       assert(got.filter(_.getAs[Long]("query_id") == 600000000L + i)
@@ -194,6 +185,79 @@ class AnnIndexSpec extends SparkSpec {
         array(Seq.fill(VectorOps.EmbDim - VectorOps.PlantKeepDims + 2)(lit(0.5f)): _*))))
     val ex = intercept[IllegalArgumentException] { AnnIndex.sync(spark, t, root) }
     assert(ex.getMessage.contains("rebuild"))
+  }
+
+  private def plantedRows(offset: Long, take: Int) = corpus.filter(col("vec_id") < take)
+    .select((col("vec_id") + offset).as("vec_id"),
+      concat(slice(col("embedding"), 1, VectorOps.PlantKeepDims),
+        array(Seq.fill(VectorOps.EmbDim - VectorOps.PlantKeepDims)(lit(0.0f)): _*))
+        .as("embedding"))
+
+  /** Runs `f`, counting the [[AnnIndex.BuildGroup]] jobs it launches. */
+  private def buildJobsOf[A](f: => A): (A, Int) = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull ==
+            AnnIndex.BuildGroup) jobs.incrementAndGet()
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      Thread.sleep(500) // job-start events reach listeners asynchronously
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("append-only sync: one job, the manifest row count, the same codes as the row-level path") {
+    val corpusRoot = s"$root-appendonly-corpus"
+    val t = GraftTable.create(spark, corpusRoot, corpus)
+    AnnIndex.buildFromTable(spark, t, root)
+    AnnIndex.load(spark, root) // the one codebook load: later syncs hit the cache
+    val codesT = new GraftTable(s"$root/codes", spark)
+    val (w0, codes0) = (t.currentId, codesT.currentId)
+    // one micro-batch: one file, so the encoded delta is one task
+    t.append(plantedRows(600000000L, 3).coalesce(1))
+    assert(t.appendOnlyAdds(w0, t.currentId).map(_.map(_.rows)) === Some(Seq(3L)))
+    val (n, jobs) = buildJobsOf(AnnIndex.sync(spark, t, root))
+    assert(n === 3L, s"sync must report the manifest row count, got $n")
+    assert(jobs === 1, s"an append-only sync is the codes write alone, ran $jobs jobs")
+    assert(codesT.properties(AnnIndex.SyncedSnapshotProp).toLong === t.currentId)
+    def codeRows = codesT.read().select("n_id", "cluster", "codes")
+      .collect().map(_.toString).sorted.toSeq
+    val fast = codeRows
+    assert(fast.size === codesT.snapshot(codes0).files.map(_.rows).sum + 3L)
+
+    // the same window through the row-level path: reset the index to
+    // before the sync, then compact the corpus — a data-preserving
+    // rewrite, so the window now removes files yet nets the same inserts
+    codesT.rollback(codes0)
+    codesT.setProperty(AnnIndex.SyncedSnapshotProp, w0.toString)
+    t.optimizeCompact(1L << 30)
+    assert(t.appendOnlyAdds(w0, t.currentId).isEmpty,
+      "precondition: the compacted window takes the row-level path")
+    assert(AnnIndex.sync(spark, t, root) === 3L)
+    assert(codeRows === fast, "both paths must encode the same codes")
+  }
+
+  test("a rebuild at the same root replaces the cached quantizers") {
+    def tableCents = new GraftTable(s"$root/books", spark).read()
+      .filter(col("kind") === "centroid").orderBy(col("cluster"))
+      .select(col("vec")).collect().map(_.getSeq[Double](0)).toSeq
+    AnnIndex.build(spark, corpus, root)
+    val booksId = new GraftTable(s"$root/books", spark).currentId
+    val stale = AnnIndex.load(spark, root).cents.map(_.toSeq).toSeq
+    assert(stale === tableCents)
+    // a different training corpus trains different centroids
+    AnnIndex.build(spark, corpus.filter(col("vec_id") % 2 === 0), root)
+    assert(new GraftTable(s"$root/books", spark).currentId === booksId,
+      "precondition: the rebuilt books table reuses the snapshot id")
+    assert(tableCents !== stale, "precondition: the rebuild trained new centroids")
+    // query loads its quantizers through load
+    assert(AnnIndex.load(spark, root).cents.map(_.toSeq).toSeq === tableCents,
+      "a rebuilt index must not serve the previous build's quantizers")
   }
 
   test("probing IS partition pruning: a single query's scan plans only its nprobe lists' files") {

@@ -2841,6 +2841,57 @@ class LakeSpec extends SparkSpec {
       Set((5L, "user5", "delete"), (5L, "edited", "insert")))
   }
 
+  private def changeRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String)] =
+    df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+
+  test("changelog over an append-only window: the added rows, same multiset as the row-level path") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp("changelog-appendonly"),
+      (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v").repartition(2))
+    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
+    t.delete(col("k") === 3L)                  // a deletion vector
+    t.mergeDelete(Seq(7L).toDF("k"), Seq("k")) // an equality entry
+    val from = t.currentId
+    assert(t.current.deleteFiles.exists(_.dv) &&
+      t.current.deleteFiles.exists(_.equalityCols.nonEmpty),
+      "precondition: the window starts with a dv and an equality entry live")
+    // a duplicate row (multiset, not set) and the two keys the live
+    // entries name: new rows, which neither entry may hide
+    t.append(Seq((41L, "v41"), (42L, "v42"), (41L, "v41")).toDF("k", "v"))
+    t.append(Seq((3L, "v3"), (7L, "v7")).toDF("k", "v"))
+    val to = t.currentId
+    assert(t.appendOnlyAdds(from, to).isDefined, "the window only appended")
+    val fast = changeRows(t.changelog(from, to))
+    assert(fast === changeRows(t.rowLevelChangelog(t.snapshot(from), t.snapshot(to))))
+    assert(fast === Seq((3L, "v3", "insert"), (7L, "v7", "insert"),
+      (41L, "v41", "insert"), (41L, "v41", "insert"), (42L, "v42", "insert")))
+    assert(t.changelog(from, to).columns.toSeq === Seq("k", "v", "_change_type"))
+  }
+
+  test("changelog: windows that add a copy-on-write rewrite, a dv or an equality delete take the row-level path") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp("changelog-rowlevel"),
+      (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v").repartition(2))
+    // each window appends one row, then deletes row `k` by `kind`
+    def window(kind: String, k: Long)(change: => Unit): Unit = {
+      val a = t.currentId
+      t.append(Seq((100L + a, s"n$a")).toDF("k", "v"))
+      change
+      val b = t.currentId
+      assert(t.appendOnlyAdds(a, b).isEmpty, s"$kind window must take the row-level path")
+      assert(changeRows(t.changelog(a, b)) ===
+        Seq((k, s"v$k", "delete"), (100L + a, s"n$a", "insert")), kind)
+    }
+    window("copy-on-write", 9L)(t.delete(col("k") === 9L))
+    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
+    window("deletion-vector", 3L)(t.delete(col("k") === 3L))
+    window("equality", 5L)(t.mergeDelete(Seq(5L).toDF("k"), Seq("k")))
+  }
+
   test("adopted TIMESTAMP_MILLIS parquet records no long stats: pruning and meta-agg stay exact") {
     import spark.implicits._
     val root = tmp("adopt-millis")

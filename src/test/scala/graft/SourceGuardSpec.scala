@@ -1,0 +1,67 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level guards over `src/main`; they need no Spark. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private val mainDir = Paths.get("src/main/scala")
+
+  private def mainSources: Seq[Path] = {
+    val walk = Files.walk(mainDir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** Argument lists of every `ParquetFileReader.open(` call in `src`:
+    * the text between the call's balanced parentheses.
+    */
+  private def openCallArgs(src: String): Seq[String] = {
+    val call = "ParquetFileReader.open("
+    Iterator.iterate(src.indexOf(call))(i => src.indexOf(call, i + 1))
+      .takeWhile(_ >= 0)
+      .map { i =>
+        val start = i + call.length
+        var depth = 1
+        var j = start
+        while (depth > 0 && j < src.length) {
+          src.charAt(j) match {
+            case '(' => depth += 1
+            case ')' => depth -= 1
+            case _   =>
+          }
+          j += 1
+        }
+        src.substring(start, j - 1)
+      }.toSeq
+  }
+
+  /** Commas outside any nested parentheses: arguments minus one. */
+  private def topLevelCommas(args: String): Int =
+    args.foldLeft((0, 0)) { case ((depth, n), c) =>
+      c match {
+        case '(' => (depth + 1, n)
+        case ')' => (depth - 1, n)
+        case ',' if depth == 0 => (depth, n + 1)
+        case _ => (depth, n)
+      }
+    }._2
+
+  test("no one-argument ParquetFileReader.open: it parses a fresh Hadoop Configuration per call") {
+    val sources = mainSources
+    assert(sources.nonEmpty, s"no main sources under $mainDir")
+    val calls = sources.flatMap { p =>
+      openCallArgs(new String(Files.readAllBytes(p), "UTF-8")).map(p -> _)
+    }
+    assert(calls.nonEmpty, "the guard must see the footer helper's own open call")
+    val oneArg = calls.filter { case (_, args) => topLevelCommas(args) == 0 }
+    assert(oneArg.isEmpty,
+      "ParquetFileReader.open(InputFile) builds a new Configuration on every call; " +
+        "open footers through GraftTable.openFooter instead: " +
+        oneArg.map { case (p, args) => s"$p: open($args)" }.mkString("; "))
+  }
+}

@@ -1021,6 +1021,48 @@ class StreamingSpec extends SparkSpec {
     assert(changes.isEmpty, s"in-window add+delete must cancel: $changes")
   }
 
+  test("D12d: a user column named _change_type survives the change feed and the retraction feed") {
+    import spark.implicits._
+    val root = new java.io.File("target/laketest/cdcstream-collide").getAbsolutePath
+    val ckpts = Seq("readChangeFeed", "deletesAsRetractions")
+      .map(o => o -> s"$root-ckpt-$o").toMap
+    for (p <- root +: ckpts.values.toSeq) {
+      val f = new java.io.File(p)
+      if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", p).! }
+    }
+    val t = GraftTable.create(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "_change_type"))
+    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    val shapes = scala.collection.mutable.Set[(String, Seq[String])]()
+    val rows = scala.collection.mutable.ArrayBuffer[(String, Long, String, String)]()
+    def drainOnce(option: String): Unit = {
+      val q = spark.readStream.format("graft.streaming.GraftSourceProvider")
+        .option("path", root).option(option, "true").load()
+        .writeStream.option("checkpointLocation", ckpts(option))
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          shapes += option -> batch.columns.toSeq
+          rows ++= batch.collect().map(r =>
+            (option, r.getLong(0), r.getString(1), r.get(2).toString)); ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    ckpts.keys.foreach(drainOnce)
+    t.append(Seq((3L, "c")).toDF("id", "_change_type"))
+    t.delete(col("id") === 1L)
+    ckpts.keys.foreach(drainOnce)
+    assert(shapes.toSet === Set(
+      "readChangeFeed" -> Seq("id", "_change_type", "_change_type1"),
+      "deletesAsRetractions" -> Seq("id", "_change_type", "_graft_retract")))
+    assert(rows.toSet === Set(
+      ("readChangeFeed", 1L, "a", "insert"), ("readChangeFeed", 2L, "b", "insert"),
+      ("readChangeFeed", 3L, "c", "insert"), ("readChangeFeed", 1L, "a", "delete"),
+      ("deletesAsRetractions", 1L, "a", "false"), ("deletesAsRetractions", 2L, "b", "false"),
+      ("deletesAsRetractions", 3L, "c", "false"), ("deletesAsRetractions", 1L, "a", "true")))
+    // the batch changelog names the change kind the same way
+    assert(t.changelog(1L, t.currentId).columns.toSeq === Seq("id", "_change_type", "_change_type1"))
+  }
+
   test("D12-dv: readChangeFeed over DELETION-VECTOR commits reconstructs victims from bitmap diffs") {
     import spark.implicits._
     val root = "/root/repo/target/laketest/cdcstream-dv"
