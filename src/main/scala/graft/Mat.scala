@@ -27,7 +27,9 @@ import org.apache.spark.storage.StorageLevel
   * previous invocation of the same builder produces a byte-identical
   * plan — its entry must never serve this invocation (every bench
   * iteration recomputes from the parquet inputs), so both helpers
-  * DROP any same-plan entry before persisting anew. Additionally,
+  * DROP any same-plan entry before persisting anew — and its queued
+  * release with it, since a release unpersists by plan equality and
+  * would otherwise drop the newer cache when evicted. Additionally,
   * every frame is registered here and released by [[beginEntry]] when
   * the NEXT driver entry starts: finished entries' caches are dead
   * weight that grow storage without bound over a multi-hundred-entry
@@ -52,11 +54,14 @@ object Mat {
     */
   val MaxLive = 8
 
-  private val live = new java.util.ArrayDeque[() => Unit]()
+  /** Queued releases, oldest first, each with the SQL-cached frame it
+    * unpersists ([[factRows]] releases free an RDD and carry none).
+    */
+  private val live = new java.util.ArrayDeque[(Option[DataFrame], () => Unit)]()
 
-  private def register(release: () => Unit): Unit = synchronized {
-    live.addLast(release)
-    while (live.size > MaxLive) live.pollFirst().apply()
+  private def register(frame: Option[DataFrame], release: () => Unit): Unit = synchronized {
+    live.addLast((frame, release))
+    while (live.size > MaxLive) live.pollFirst()._2.apply()
   }
 
   /** Release every Mat-persisted frame of the PREVIOUS entry — called
@@ -64,7 +69,7 @@ object Mat {
     * entry's own timed invocation.
     */
   def beginEntry(): Unit = synchronized {
-    while (!live.isEmpty) live.pollFirst().apply()
+    while (!live.isEmpty) live.pollFirst()._2.apply()
   }
 
   /** Share a FACT-SIZED intermediate across plan legs: lazy
@@ -73,10 +78,13 @@ object Mat {
     * consumer materializes), downstream legs read InMemoryRelation,
     * lineage survives for fault tolerance.
     */
-  def fact(df: DataFrame): DataFrame = {
+  def fact(df: DataFrame): DataFrame = synchronized {
     df.unpersist(blocking = false)
+    // Dataset.unpersist releases by plan equality: a queued release of
+    // the entry just dropped would, once evicted, unpersist THIS cache
+    live.removeIf(_._1.exists(_.sameSemantics(df)))
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    register(() => { p.unpersist(blocking = false); () })
+    register(Some(p), () => { p.unpersist(blocking = false); () })
     p
   }
 
@@ -99,7 +107,7 @@ object Mat {
     val (out, release) =
       org.apache.spark.sql.graft.MatShim.persistedView(
         df, StorageLevel.MEMORY_AND_DISK)
-    register(release)
+    register(None, release)
     out
   }
 }

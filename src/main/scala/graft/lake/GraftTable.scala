@@ -1179,110 +1179,225 @@ final class GraftTable(val root: String, spark: SparkSession) {
     this
   }
 
-  /** DELETE WHERE — copy-on-write. Candidate files are selected with
-    * the same metadata-only pruning as scans (partition values, column
-    * dependencies, footer min/max); files that cannot contain a
-    * matching row are carried into the new snapshot verbatim. Only
-    * candidates are read back, filtered (`NOT pred`, null-safe: a
-    * NULL predicate keeps the row, matching SQL DELETE), and
-    * rewritten. At 100 TB the rewrite is O(files-that-can-match) and
-    * planning is O(metadata) — the Iceberg copy-on-write model.
+  import GraftTable.{Assigned, ByKeys, ByPredicate, PostImage, Removed, RowMatch, WholeSource}
+
+  /** DELETE WHERE `pred` — null-safe: a row whose predicate is NULL
+    * stays, matching SQL DELETE. A predicate that is EXACTLY a
+    * conjunction of partition-column constraints drops whole files
+    * from the manifest with zero data I/O ("delete a day" at 100 TB is
+    * an O(metadata) commit). Otherwise `write.delete.mode` picks
+    * copy-on-write (default) or merge-on-read (`merge-on-read`, or its
+    * older spelling `dv`); see [[rowLevel]].
     */
-  def delete(pred: Column): GraftTable = {
+  def delete(pred: Column): GraftTable =
+    rowLevel("delete", GraftTable.DeleteModeProp, ByPredicate(pred), Removed)
+
+  /** The one row-level DML kernel behind [[delete]], [[update]],
+    * [[merge]] and [[mergeDelete]] (Iceberg's `write.{delete,update,
+    * merge}.mode` model: one operation, the mode a table property).
+    * A verb supplies its match and its post-image; the candidate files
+    * follow from the match — metadata-only pruning by the predicate, or
+    * by the source's key bounds ([[sourceKeyCandidates]]) — so files
+    * that cannot hold a hit row are never read. The kernel alone:
+    *  - takes the metadata-only exit of a partition-exact DELETE
+    *    (partition values are constant per file, so every row of a
+    *    matching file matches; dependency inference is NOT used here,
+    *    implied constraints would over-delete). It wins in every mode;
+    *  - routes on `modeProp`: merge-on-read keys its coordinates on
+    *    file basenames, unique table-wide for engine-written files;
+    *    adopted layouts with colliding basenames fall back to
+    *    copy-on-write;
+    *  - copy-on-write: rewrites the candidates (rows not hit pass
+    *    through, hit rows are dropped or replaced by their post-image,
+    *    a MERGE source is added) and carries every other file verbatim
+    *    — O(files-that-can-match), the Iceberg copy-on-write model;
+    *  - merge-on-read: leaves every data file in place. The hit rows'
+    *    coordinates fold into the deletion vectors ([[mergedDvEntries]])
+    *    — or, for keyed verbs under `write.merge.delete-kind=equality`,
+    *    the source keys themselves become an equality-delete file with
+    *    zero target I/O ([[writeEqDeleteFiles]]) — and post-images are
+    *    appended. [[applyDeletes]]/OPTIMIZE folds them back later;
+    *  - commits ONE snapshot with `extraProps` riding it. A verb with
+    *    `commitEmpty = false` (mergeDelete, run per stream micro-batch)
+    *    commits only the properties, if any, when nothing was removed.
+    * Source keys are projected once and persisted only where they are
+    * read twice (bounds agg, then the join); the equality path reads
+    * them once.
+    */
+  private def rowLevel(op: String, modeProp: String, hit: RowMatch, post: PostImage,
+      extraProps: Map[String, String] = Map.empty,
+      commitEmpty: Boolean = true): GraftTable = {
+    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
     val cur = current
-    // TBLPROPERTIES('write.delete.mode'='merge-on-read' | 'dv') routes
-    // SQL and API deletes to the deletion-vector path (metadata-only
-    // partition deletes below still win — they are strictly cheaper)
-    if (cur.properties.get(GraftTable.DeleteModeProp).exists(Set("merge-on-read", "dv"))
-        && uniqueBaseNames(cur)
-        && Pruning.extractExact(pred)
-          .forall(cs => !(cs.nonEmpty && cs.keySet.forall(cur.partitionCols.contains))))
-      return deleteMor(pred)
-    // Metadata-only fast path: if the predicate is EXACTLY a
-    // conjunction of constraints on partition columns, every row of a
-    // matching file matches (partition values are constant per file) —
-    // drop whole files from the manifest with zero data read/write.
-    // "Delete a day" at 100 TB becomes an O(metadata) commit. Dep
-    // inference is deliberately NOT used here: inferred constraints
-    // are implied, not equivalent, and would over-delete. Only columns
-    // that actually appear in every file's partition map qualify — a
-    // dep dest that is NOT a partition column has no per-file value
-    // (f.partition.get(c) = None for every file), so gating on it
-    // would "match" zero files and commit a delete that removed
-    // nothing; such predicates fall through to copy-on-write.
-    val sch = schema
-    Pruning.extractExact(pred) match {
-      case Some(cs) if cs.nonEmpty && cs.keySet.forall(cur.partitionCols.contains) =>
-        val (dropped, kept) = cur.files.partition { f =>
-          cs.forall { case (c, con) =>
-            f.partition.get(c).exists { raw =>
-              // accepts() handles the null sentinel (three-valued):
-              // `DELETE WHERE k IS NULL` drops null partitions here too
-              con.accepts(Pruning.parsePartitionValue(raw,
-                sch.fields.find(_.name == c).map(_.dataType)
-                  .getOrElse(org.apache.spark.sql.types.StringType)))
+    val props = cur.properties
+    val sch = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
+    def commitWith(operation: String, files: Seq[FileEntry], added: Int, deleted: Int,
+        deleteFiles: Seq[DeleteFileEntry] = cur.deleteFiles): GraftTable = {
+      commit(cur.copy(
+        id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
+        operation = operation, files = files, addedFiles = added, deletedFiles = deleted,
+        deleteFiles = deleteFiles, properties = props ++ extraProps))
+      this
+    }
+    def unchanged: GraftTable =
+      if (extraProps.isEmpty) this else commitWith("set-properties", cur.files, 0, 0)
+
+    (hit, post) match {
+      case (ByPredicate(pred), Removed) =>
+        Pruning.extractExact(pred) match {
+          // only partition columns carry a per-file value: gating on a
+          // dep dest that is not one would "match" zero files and commit
+          // a delete that removed nothing, so such predicates fall through
+          case Some(cs) if cs.nonEmpty && cs.keySet.forall(cur.partitionCols.contains) =>
+            val (dropped, kept) = cur.files.partition { f =>
+              cs.forall { case (c, con) =>
+                f.partition.get(c).exists { raw =>
+                  // accepts() handles the null sentinel (three-valued):
+                  // `DELETE WHERE k IS NULL` drops null partitions too
+                  con.accepts(Pruning.parsePartitionValue(raw,
+                    sch.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)))
+                }
+              }
             }
-          }
+            return commitWith(op, kept, 0, dropped.size)
+          case _ => ()
         }
-        commit(cur.copy(
-          id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-          operation = "delete", files = kept,
-          addedFiles = 0, deletedFiles = dropped.size))
-        return this
       case _ => ()
     }
-    val (cands, _, _) = pruneFiles(pred)
-    val candPaths = cands.map(_.path).toSet
-    val kept = cur.files.filterNot(f => candPaths.contains(f.path))
-    val survivors = readSnapshot(cur.copy(files = cands))
-      .filter(!(pred <=> lit(true)))
-    val added =
-      if (cands.isEmpty) Seq.empty
-      else writeFiles(survivors, cur.partitionCols, cur.deps, cur.id + 1)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "delete", files = kept ++ added,
-      addedFiles = added.size, deletedFiles = cands.size))
-    this
+
+    val morModes =
+      if (modeProp == GraftTable.DeleteModeProp) Set("merge-on-read", "dv") else Set("merge-on-read")
+    val mor = props.get(modeProp).exists(morModes) && uniqueBaseNames(cur)
+    val equality = mor && hit.isInstanceOf[ByKeys] &&
+      props.get(GraftTable.MergeDeleteKindProp).contains("equality")
+    val keys: Option[DataFrame] = hit match {
+      case ByKeys(source, keyCols) =>
+        val k = source.select(keyCols.map(col): _*)
+        Some(if (equality) k else k.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      case _ => None
+    }
+    def srcKeys = keys.get
+    val depDests = cur.deps.map(_.dest).toSet
+    def assign(rows: DataFrame, set: Map[String, Column], when0: Option[Column]): DataFrame =
+      rows.select(rows.columns.toSeq.map { c =>
+        set.get(c) match {
+          case Some(v) =>
+            val v1 = v.cast(sch(c).dataType)
+            when0.fold(v1)(h => when(h, v1).otherwise(col(c))).as(c)
+          case None => col(c)
+        }
+      }: _*).drop(depDests.filterNot(set.keySet.contains).toSeq: _*)
+    def write(df: DataFrame): Seq[FileEntry] =
+      writeFiles(df, cur.partitionCols, cur.deps, cur.id + 1)
+    try {
+      lazy val cands: Seq[FileEntry] = hit match {
+        case ByPredicate(pred) => pruneFiles(pred)._1
+        case ByKeys(_, keyCols) => sourceKeyCandidates(srcKeys, keyCols)
+      }
+      if (!mor) {
+        if (cands.isEmpty && !commitEmpty) return unchanged
+        val scan = readSnapshot(cur.copy(files = cands, shards = Seq.empty))
+        val rewritten = hit match {
+          case ByPredicate(pred) => post match {
+            case Assigned(set) => assign(scan, set, Some(pred <=> lit(true)))
+            case _ => scan.filter(!(pred <=> lit(true)))
+          }
+          case ByKeys(source, keyCols) =>
+            // the USING join puts the keys first: restore the column order
+            val kept = scan.join(srcKeys, keyCols, "left_anti")
+            if (post == WholeSource) kept.select(source.columns.map(col): _*).unionByName(source)
+            else kept.select(sch.fieldNames.toSeq.filterNot(depDests.contains).map(col): _*)
+        }
+        val added = if (cands.isEmpty && post != WholeSource) Seq.empty else write(rewritten)
+        val candPaths = cands.map(_.path).toSet
+        commitWith(op, cur.files.filterNot(f => candPaths.contains(f.path)) ++ added,
+          added.size, cands.size)
+      } else {
+        val (deleteFiles, removed, images) =
+          if (equality) {
+            // the key projection's columns are the key columns
+            val dels = writeEqDeleteFiles(srcKeys, srcKeys.columns.toSeq, cur.id + 1)
+            (cur.deleteFiles ++ dels, dels.nonEmpty, Seq.empty[FileEntry])
+          } else if (cands.isEmpty) (cur.deleteFiles, false, Seq.empty[FileEntry])
+          else {
+            val live = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
+            val hits = hit match {
+              case ByPredicate(pred) => live.filter(pred <=> lit(true))
+              case ByKeys(_, keyCols) =>
+                live.join(sourceKeysHinted(props, srcKeys), keyCols, "left_semi")
+            }
+            // an UPDATE reads its hits twice (coordinates, post-images):
+            // persist so the candidate scan and predicate run once
+            val twice = post.isInstanceOf[Assigned]
+            if (twice) hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val (dvOld, other) = cur.deleteFiles.partition(_.dv)
+              val (dvList, any) = mergedDvEntries(
+                hits.select(col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index")),
+                cur.id + 1, dvOld)
+              val images = post match {
+                // every row here is a hit, so SET applies unconditionally
+                case Assigned(set) if any => write(assign(hits.drop(PosFileCol, PosIdxCol), set, None))
+                case _ => Seq.empty[FileEntry]
+              }
+              (if (any) other ++ dvList else cur.deleteFiles, any, images)
+            } finally if (twice) hits.unpersist()
+          }
+        if (!removed && !commitEmpty) return unchanged
+        val added = (hit, post) match {
+          case (ByKeys(source, _), WholeSource) => write(source)
+          case _ => images
+        }
+        commitWith(op, cur.files ++ added, added.size, 0, deleteFiles)
+      }
+    } finally if (!equality) keys.foreach(_.unpersist(blocking = false))
   }
 
-  /** DELETE WHERE — merge-on-read: instead of rewriting every data
-    * file the predicate touches (copy-on-write write amplification —
-    * a 1-row delete in a 1 GB file rewrites 1 GB), commit a snapshot
-    * whose DATA FILE LIST IS UNCHANGED and whose matched `(file, row)`
-    * coordinates fold into DELETION VECTORS: ONE merged roaring-style
-    * bitmap per data file ([[GraftDv]], Delta DV / Iceberg v3
-    * semantics), written by [[mergedDvEntries]]. Candidate files come
-    * from metadata-only pruning, so the position scan is
-    * O(files-that-can-match); already-deleted rows are invisible to
-    * it. Read-side cost is O(1) bitmap probes per data file no matter
-    * how many delete commits accumulated; [[applyDeletes]] (or
-    * OPTIMIZE) folds the vectors into rewritten files.
-    *
-    * Coordinates are file BASENAMES + row index: basenames are unique
-    * table-wide for engine-written files (`<snapId>-<seq>-…`); adopted
-    * tables with colliding basenames stay copy-on-write ([[delete]]
-    * checks before routing here).
+  /** Candidate files whose key min/max range overlaps the source's key
+    * bounds — one small agg over the source, then metadata-only
+    * pruning: a hit row's key lies within the source key range, so
+    * every file outside it is provably untouched.
     */
-  private def deleteMor(pred: Column): GraftTable = {
-    val cur = current
-    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    val (cands, _, _) = pruneFiles(pred)
-    val (dvOld, otherDels) = cur.deleteFiles.partition(_.dv)
-    val dvList =
-      if (cands.isEmpty) dvOld
-      else {
-        val live = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
-        val hits = live.filter(pred <=> lit(true))
-          .select(col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index"))
-        mergedDvEntries(hits, cur.id + 1, dvOld)._1
-      }
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "delete", files = cur.files,
-      addedFiles = 0, deletedFiles = 0,
-      deleteFiles = otherDels ++ dvList))
-    this
+  private def sourceKeyCandidates(source: DataFrame, keyCols: Seq[String]): Seq[FileEntry] = {
+    import org.apache.spark.sql.functions.{max => fmax, min => fmin}
+    val aggs = keyCols.flatMap(k => Seq(fmin(col(k)), fmax(col(k))))
+    val bounds = source.agg(aggs.head, aggs.tail: _*).head()
+    if (bounds.anyNull) Seq.empty // empty source: nothing can match
+    else {
+      val pred = keyCols.zipWithIndex.map { case (k, i) =>
+        col(k) >= lit(bounds.get(2 * i)) && col(k) <= lit(bounds.get(2 * i + 1))
+      }.reduce(_ && _)
+      pruneFiles(pred)._1
+    }
+  }
+
+  /** Whether every data file's basename is unique table-wide — the
+    * precondition for coordinate deletes (engine-written files always
+    * satisfy it; adopted layouts may not).
+    */
+  private def uniqueBaseNames(s: Snapshot): Boolean = {
+    val names = s.files.map(f => GraftTable.baseName(f.path))
+    names.distinct.size == names.size
+  }
+
+  /** Broadcast-hint the merge-on-read source key frame only while it
+    * is small — the same `write.delete.broadcast-threshold` gate as
+    * the delete sets MOR reads join. A point upsert's keys are
+    * dimension-sized and broadcasting keeps the pruned target scan
+    * shuffle-free — but the source of a BULK keyed MERGE is data-scale
+    * (10 % of a 100 TB table), and an unconditional hint would force
+    * the driver to materialize it on every such write. The size
+    * estimate is the optimizer's own (`stats.sizeInBytes`): by the
+    * time this runs the key frame is persisted AND materialized (the
+    * key-bounds agg in [[sourceKeyCandidates]] ran first), so the
+    * estimate is the actual cached size.
+    */
+  private[graft] def sourceKeysHinted(props: Map[String, String], srcKeys: DataFrame): DataFrame = {
+    val limit = props.get(GraftTable.DeleteBroadcastProp).map(_.toLong)
+      .getOrElse(GraftTable.DefaultDeleteBroadcastBytes)
+    val est = srcKeys.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est <= BigInt(limit)) broadcast(srcKeys) else srcKeys
   }
 
   /** Convert pending POSITION-delete files into deletion vectors — the
@@ -1384,11 +1499,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
   /** Hide the rows a deletion-vector set kills: one bitmap row per
     * data file joins the scan (broadcast under the A56 size gate) and
     * the per-row test is the codegen'd [[graft.functions.DvContains]]
-    * probe. `df` must carry the `_graft_file`/`_graft_pos` position
-    * columns. Shared by the batch read path and the streaming source
-    * (a static delete frame — stream-static-safe).
+    * probe; the vector step of [[hideDeleted]].
     */
-  private[graft] def minusDvDeletes(df: DataFrame,
+  private def minusDvDeletes(df: DataFrame,
       props: Map[String, String], dvDels: Seq[DeleteFileEntry]): DataFrame = {
     import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
     val dvs = dvRows(dvDels)
@@ -1447,7 +1560,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * scan, no position resolution), which is the point of the flavor:
     * a keyed MERGE/DELETE of a 100 TB table costs the source, not the
     * table. Readers apply it to data files that predate the committing
-    * snapshot ([[minusEqDeletes]]).
+    * snapshot ([[hideDeleted]]).
     */
   private def writeEqDeleteFiles(
       keys: DataFrame, keyCols: Seq[String], snapId: Long): Seq[DeleteFileEntry] = {
@@ -1564,252 +1677,29 @@ final class GraftTable(val root: String, spark: SparkSession) {
     this
   }
 
-  /** UPDATE … SET … WHERE — copy-on-write. Candidate files come from
-    * the same metadata-only pruning as [[delete]]; within a rewritten
-    * file, non-matching rows pass through unchanged (`CASE WHEN pred`).
-    * Derived dependency columns are dropped before the rewrite and
-    * recomputed by the write path, so updating a dependency *source*
-    * column keeps its partition-pruning column consistent (and rows
-    * migrate to their new partition directories).
+  /** UPDATE … SET … WHERE `pred`. Every SET expression and the
+    * predicate see the PRE-update row. Derived dependency columns are
+    * dropped and recomputed by the write path, so updating a
+    * dependency *source* column keeps its partition-pruning column
+    * consistent (rows migrate to their new partition directories).
+    * `write.update.mode` picks copy-on-write (default: candidates are
+    * rewritten, rows not hit pass through via `CASE WHEN pred`) or
+    * merge-on-read (pre-images hidden by the deletion vectors,
+    * post-images appended); see [[rowLevel]].
     */
-  def update(pred: Column, set: Map[String, Column]): GraftTable = {
-    val cur = current
-    // TBLPROPERTIES('write.update.mode'='merge-on-read') routes to the
-    // deletion-vector + append path (zero rewrites of existing files);
-    // adopted layouts with colliding basenames stay copy-on-write
-    if (cur.properties.get(GraftTable.UpdateModeProp).contains("merge-on-read")
-        && uniqueBaseNames(cur))
-      return updateMerge(pred, set)
-    import org.apache.spark.sql.functions.when
-    val (cands, _, _) = pruneFiles(pred)
-    val candPaths = cands.map(_.path).toSet
-    val kept = cur.files.filterNot(f => candPaths.contains(f.path))
-    val sch = schema
-    val depDests = cur.deps.map(_.dest).toSet.filterNot(set.keySet.contains)
-    // SQL UPDATE semantics: the WHERE predicate and every SET expression
-    // are evaluated against the PRE-update row. A single projection over
-    // the original scan computes all of them at once — a sequential
-    // withColumn fold would make later assignments (and the predicate)
-    // see columns already rewritten by earlier ones.
-    val base = readSnapshot(cur.copy(files = cands))
-    val hit = pred <=> lit(true)
-    val projected = base.columns.toSeq.map { c =>
-      set.get(c) match {
-        case Some(v) => when(hit, v.cast(sch(c).dataType)).otherwise(col(c)).as(c)
-        case None    => col(c)
-      }
-    }
-    val updated = base.select(projected: _*).drop(depDests.toSeq: _*)
-    val added =
-      if (cands.isEmpty) Seq.empty
-      else writeFiles(updated, cur.partitionCols, cur.deps, cur.id + 1)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "update", files = kept ++ added,
-      addedFiles = added.size, deletedFiles = cands.size))
-    this
-  }
-
-  /** UPDATE … SET … WHERE — merge-on-read: the matched rows' positions
-    * fold into the deletion vectors (hiding the PRE-update rows in
-    * place) and their post-update images are APPENDED as new files —
-    * no existing data file is rewritten, which is the point-update
-    * story at 100 TB (a 1-row update in a 1 GB file otherwise rewrites
-    * 1 GB, same amplification [[deleteMor]] kills for DELETE). SET
-    * expressions are evaluated against the pre-update rows in one
-    * projection, exactly like the COW path; dependency-derived columns
-    * are recomputed by the write path so updated rows migrate
-    * partitions correctly. Falls back to copy-on-write when file
-    * basenames collide (adopted layouts), like [[deleteMor]].
-    */
-  def updateMerge(pred: Column, set: Map[String, Column]): GraftTable = {
-    val cur = current
-    require(uniqueBaseNames(cur),
-      s"merge-on-read update needs unique file basenames (adopted table?) — " +
-        s"unset ${GraftTable.UpdateModeProp} to use copy-on-write")
-    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    val (cands, _, _) = pruneFiles(pred)
-    val sch = schema
-    val (newDeleteList, added) =
-      if (cands.isEmpty) (cur.deleteFiles, Seq.empty[FileEntry])
-      else {
-        val live = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
-        // two consumers (delete positions + post-images) — persist so the
-        // candidate scan + predicate run once, not per consumer
-        val matched = live.filter(pred <=> lit(true))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val hits = matched.select(
-            col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index"))
-          val (dvOld, other) = cur.deleteFiles.partition(_.dv)
-          val (dvList, any) = mergedDvEntries(hits, cur.id + 1, dvOld)
-          if (!any) (cur.deleteFiles, Seq.empty[FileEntry])
-          else {
-            val depDests = cur.deps.map(_.dest).toSet.filterNot(set.keySet.contains)
-            val base = matched.drop(PosFileCol, PosIdxCol)
-            // every row here matched, so SET applies unconditionally; one
-            // projection evaluates all assignments against pre-update rows
-            val projected = base.columns.toSeq.map { c =>
-              set.get(c) match {
-                case Some(v) => v.cast(sch(c).dataType).as(c)
-                case None    => col(c)
-              }
-            }
-            val updated = base.select(projected: _*).drop(depDests.toSeq: _*)
-            (other ++ dvList, writeFiles(updated, cur.partitionCols, cur.deps, cur.id + 1))
-          }
-        } finally matched.unpersist()
-      }
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "update", files = cur.files ++ added,
-      addedFiles = added.size, deletedFiles = 0,
-      deleteFiles = newDeleteList))
-    this
-  }
+  def update(pred: Column, set: Map[String, Column]): GraftTable =
+    rowLevel("update", GraftTable.UpdateModeProp, ByPredicate(pred), Assigned(set))
 
   /** MERGE INTO … ON target.k = source.k WHEN MATCHED THEN UPDATE SET *
-    * WHEN NOT MATCHED THEN INSERT * — copy-on-write upsert.
-    *
-    * Candidate target files are pruned by the source's key bounds (one
-    * small agg over the source, then metadata-only min/max pruning):
-    * a matched target row's key is by definition within the source key
-    * range, so every file outside the range is provably untouched and
-    * survives verbatim. Candidates are anti-joined against the source
-    * keys (Spark broadcasts the small side automatically), unioned
-    * with the full source, and rewritten. Rewrite cost is
-    * O(files-overlapping-source-keys), not O(table).
+    * WHEN NOT MATCHED THEN INSERT * — the keyed upsert. Candidate files
+    * are pruned by the source's key bounds. `write.merge.mode` picks
+    * copy-on-write (default: candidates anti-joined against the source
+    * keys, unioned with the full source, rewritten) or merge-on-read
+    * (matched rows deleted in place, the full source appended, no
+    * existing file rewritten); see [[rowLevel]].
     */
-  /** Candidate files whose key min/max range overlaps the source's key
-    * bounds — one small agg over the source, then metadata-only
-    * pruning; shared by the COW and MOR merge paths so the two can
-    * never diverge on what "can match".
-    */
-  private def sourceKeyCandidates(source: DataFrame, keyCols: Seq[String]): Seq[FileEntry] = {
-    import org.apache.spark.sql.functions.{max => fmax, min => fmin}
-    val aggs = keyCols.flatMap(k => Seq(fmin(col(k)), fmax(col(k))))
-    val bounds = source.agg(aggs.head, aggs.tail: _*).head()
-    if (bounds.anyNull) Seq.empty // empty source: nothing can match
-    else {
-      val pred = keyCols.zipWithIndex.map { case (k, i) =>
-        col(k) >= lit(bounds.get(2 * i)) && col(k) <= lit(bounds.get(2 * i + 1))
-      }.reduce(_ && _)
-      pruneFiles(pred)._1
-    }
-  }
-
-  /** Whether every data file's basename is unique table-wide — the
-    * precondition for position-delete keys (engine-written files always
-    * satisfy it; adopted layouts may not).
-    */
-  private def uniqueBaseNames(s: Snapshot): Boolean = {
-    val names = s.files.map(f => GraftTable.baseName(f.path))
-    names.distinct.size == names.size
-  }
-
-  def merge(source: DataFrame, keyCols: Seq[String]): GraftTable = {
-    val cur = current
-    // The source query plans THREE times here — key-bounds agg, the
-    // matched-row join, the write — so its keys are projected and
-    // persisted once up front: an expensive (or non-deterministic)
-    // upsert source is evaluated once for all key-side uses, plus
-    // exactly once more by the write itself. The persisted frame is
-    // keys-only: executor memory holds the join side that broadcasts
-    // anyway, never the full source payload.
-    val srcKeys = source.select(keyCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // TBLPROPERTIES('write.merge.mode'='merge-on-read'): matched target
-      // rows are deleted in place, the whole source is appended —
-      // upsert with zero rewrites of existing files
-      if (cur.properties.get(GraftTable.MergeModeProp).contains("merge-on-read")
-          && uniqueBaseNames(cur))
-        return mergeMor(source, srcKeys, keyCols)
-      val cands = sourceKeyCandidates(srcKeys, keyCols)
-      val candPaths = cands.map(_.path).toSet
-      val kept = cur.files.filterNot(f => candPaths.contains(f.path))
-      val baseCols = source.columns.toSeq
-      val survivors = readSnapshot(cur.copy(files = cands))
-        .join(srcKeys, keyCols, "left_anti")
-        .select(baseCols.map(col): _*)
-      val added = writeFiles(
-        survivors.unionByName(source), cur.partitionCols, cur.deps, cur.id + 1)
-      commit(cur.copy(
-        id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-        operation = "merge", files = kept ++ added,
-        addedFiles = added.size, deletedFiles = cands.size))
-      this
-    } finally { srcKeys.unpersist(blocking = false); () }
-  }
-
-  /** The delete-file set a keyed MOR write registers — the ONE place
-    * both [[mergeMor]] and [[mergeDelete]] get their delete shape;
-    * returns (the snapshot's FULL replacement deleteFiles list, whether
-    * anything was deleted). `write.merge.delete-kind=equality` skips
-    * the candidate position scan entirely: the source keys themselves
-    * become an equality-delete file and the write side is O(source).
-    * Position (default) resolves exact coordinates — candidate files
-    * pruned by source key bounds, the source keys broadcast into the
-    * semi-join — paying one pruned target scan for a cheaper read
-    * side; the hits fold into the deletion vectors
-    * ([[mergedDvEntries]]), which REPLACES superseded dv entries.
-    */
-  private def morDeleteList(
-      cur: Snapshot, srcKeys: DataFrame, keyCols: Seq[String]): (Seq[DeleteFileEntry], Boolean) =
-    if (cur.properties.get(GraftTable.MergeDeleteKindProp).contains("equality")) {
-      val dels = writeEqDeleteFiles(srcKeys, keyCols, cur.id + 1)
-      (cur.deleteFiles ++ dels, dels.nonEmpty)
-    } else {
-      import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-      val cands = sourceKeyCandidates(srcKeys, keyCols)
-      if (cands.isEmpty) (cur.deleteFiles, false)
-      else {
-        val matched = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
-          .join(sourceKeysHinted(cur.properties, srcKeys), keyCols, "left_semi")
-        val hits = matched.select(
-          col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index"))
-        val (dvOld, other) = cur.deleteFiles.partition(_.dv)
-        val (dvList, any) = mergedDvEntries(hits, cur.id + 1, dvOld)
-        (other ++ dvList, any)
-      }
-    }
-
-  /** Broadcast-hint the MOR source key frame only while it is small.
-    * A point upsert's keys are dimension-sized and broadcasting keeps
-    * the pruned target scan shuffle-free — but the source of a BULK
-    * keyed MERGE is data-scale (10 % of a 100 TB table), and an
-    * unconditional hint would force the driver to materialize it on
-    * every such write. The size estimate is the optimizer's own
-    * (`stats.sizeInBytes`): by the time this runs the key frame is
-    * persisted AND materialized (the key-bounds agg in
-    * [[sourceKeyCandidates]] ran first), so the estimate is the actual
-    * cached size, not a guess from the source query's shape.
-    */
-  private[graft] def sourceKeysHinted(props: Map[String, String], srcKeys: DataFrame): DataFrame = {
-    val limit = props.get(GraftTable.SourceBroadcastProp).map(_.toLong)
-      .getOrElse(GraftTable.DefaultDeleteBroadcastBytes)
-    val est = srcKeys.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(limit)) broadcast(srcKeys) else srcKeys
-  }
-
-  /** MERGE — merge-on-read: matched target rows are deleted in place
-    * ([[morDeleteList]]) and the FULL source is appended — updates land
-    * as delete+append, inserts as plain append, and no existing data
-    * file is rewritten. [[applyDeletes]]/OPTIMIZE folds back later.
-    */
-  private def mergeMor(
-      source: DataFrame, srcKeys: DataFrame, keyCols: Seq[String]): GraftTable = {
-    val cur = current
-    val (delList, _) = morDeleteList(cur, srcKeys, keyCols)
-    val added = writeFiles(source, cur.partitionCols, cur.deps, cur.id + 1)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "merge", files = cur.files ++ added,
-      addedFiles = added.size, deletedFiles = 0,
-      deleteFiles = delList))
-    this
-  }
+  def merge(source: DataFrame, keyCols: Seq[String]): GraftTable =
+    rowLevel("merge", GraftTable.MergeModeProp, ByKeys(source, keyCols), WholeSource)
 
   /** Partition-spec evolution — as an EXPLICIT one-snapshot rewrite.
     * Metadata-only spec changes are unsound in the hive-layout model:
@@ -1936,70 +1826,20 @@ final class GraftTable(val root: String, spark: SparkSession) {
   /** MERGE … WHEN MATCHED THEN DELETE (and nothing else) — the
     * deletion-list pattern (GDPR erasure, dedup-cluster removal): drop
     * every target row whose key appears in `source`. Same candidate
-    * pruning as [[merge]] (files outside the source's key bounds are
-    * untouched metadata-only); candidates are rewritten through one
-    * broadcast-friendly LEFT ANTI join. At 100 TB the deletion list is
-    * tiny against the table, so the rewrite cost is the matched files,
-    * not the data size.
+    * pruning and `write.merge.mode` routing as [[merge]]; a deletion
+    * list that can match nothing commits nothing. See [[rowLevel]].
     */
   def mergeDelete(source: DataFrame, keyCols: Seq[String]): GraftTable =
     mergeDelete(source, keyCols, Map.empty)
 
   /** [[mergeDelete]] with property updates riding the SAME commit (see
-    * the two-arg [[append]]).
+    * the two-arg [[append]]); with nothing to delete they land as their
+    * own set-properties commit.
     */
   def mergeDelete(source: DataFrame, keyCols: Seq[String],
-      extraProps: Map[String, String]): GraftTable = {
-    val cur = current
-    // deletion-list keys evaluated once for both the bounds agg and the
-    // anti-join (same single-evaluation shape as [[merge]])
-    val srcKeys = source.select(keyCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // merge-on-read deletion list: equality kind writes the key set
-      // itself (O(source), zero target I/O — the GDPR-erasure shape at
-      // 100 TB); position kind scans pruned candidates once for exact
-      // coordinates. Both leave every data file in place.
-      if (cur.properties.get(GraftTable.MergeModeProp).contains("merge-on-read")
-          && uniqueBaseNames(cur)) {
-        val (delList, any) = morDeleteList(cur, srcKeys, keyCols)
-        if (any) commit(cur.copy(
-          id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-          operation = "merge-delete", files = cur.files,
-          addedFiles = 0, deletedFiles = 0,
-          deleteFiles = delList,
-          properties = cur.properties ++ extraProps))
-        else if (extraProps.nonEmpty)
-          commit(cur.copy(
-            id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-            operation = "set-properties", addedFiles = 0, deletedFiles = 0,
-            properties = cur.properties ++ extraProps))
-        return this
-      }
-      val cands = sourceKeyCandidates(srcKeys, keyCols)
-      if (cands.isEmpty) {
-        if (extraProps.nonEmpty) commit(cur.copy(
-          id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-          operation = "set-properties", addedFiles = 0, deletedFiles = 0,
-          properties = cur.properties ++ extraProps))
-        return this
-      }
-      val candPaths = cands.map(_.path).toSet
-      val kept = cur.files.filterNot(f => candPaths.contains(f.path))
-      val baseCols = schema.fieldNames.toSeq
-        .filterNot(cur.deps.map(_.dest).toSet.contains)
-      val survivors = readSnapshot(cur.copy(files = cands, shards = Seq.empty))
-        .join(srcKeys, keyCols, "left_anti")
-        .select(baseCols.map(col): _*)
-      val added = writeFiles(survivors, cur.partitionCols, cur.deps, cur.id + 1)
-      commit(cur.copy(
-        id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-        operation = "merge-delete", files = kept ++ added,
-        addedFiles = added.size, deletedFiles = cands.size,
-        properties = cur.properties ++ extraProps))
-      this
-    } finally { srcKeys.unpersist(blocking = false); () }
-  }
+      extraProps: Map[String, String]): GraftTable =
+    rowLevel("merge-delete", GraftTable.MergeModeProp, ByKeys(source, keyCols), Removed,
+      extraProps, commitEmpty = false)
 
   /** Schema evolution: add a nullable column (old files read as null). */
   def addColumn(name: String, dt: DataType): GraftTable = {
@@ -3219,61 +3059,52 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * — the building block for MOR reads, MOR delete stacking, and
     * changelog's deleted-row reconstruction.
     */
-  private def readSnapshotPos(s: Snapshot): DataFrame = {
-    val withPos = relationWithDefaults(s, withRowPos = true)
-    if (s.deleteFiles.isEmpty) withPos
-    else {
-      import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-      val (eqDels, rest) = s.deleteFiles.partition(_.equalityCols.nonEmpty)
-      val (dvDels, posDels) = rest.partition(_.dv)
-      // point deletes keep the set broadcast-small (that is the point
-      // of MOR) so the scan side never shuffles; a bulk MOR MERGE can
-      // grow it to data scale, where deleteRowsHinted drops the hint
-      // and Spark plans a shuffled anti-join instead of OOMing the
-      // driver. The join keys on the file basename, which the write
-      // path makes unique table-wide (<snapId>-<seq>-<name>).
-      val afterPos =
-        if (posDels.isEmpty) withPos
-        else {
-          val dels = deleteRowsHinted(s.properties, posDels)
-          withPos.join(dels,
-            withPos(PosFileCol) === dels("file_name") && withPos(PosIdxCol) === dels("row_index"),
-            "left_anti")
-        }
-      // deletion vectors: ONE bitmap row per data file joins the scan
-      // (broadcast under the same size gate) and the per-row test is
-      // the codegen'd [[graft.functions.DvContains]] probe — read
-      // amplification is O(1) per file regardless of how many delete
-      // commits produced the vectors
-      val afterDv =
-        if (dvDels.isEmpty) afterPos
-        else minusDvDeletes(afterPos, s.properties, dvDels)
-      if (eqDels.isEmpty) afterDv else minusEqDeletes(afterDv, s, eqDels)
-    }
+  private def readSnapshotPos(s: Snapshot): DataFrame =
+    hideDeleted(relationWithDefaults(s, withRowPos = true), s, s.deleteFiles)
+
+  /** Hide from `df` the rows a delete set kills: position deletes
+    * first (anti-join on the row coordinates), then deletion vectors
+    * (one bitmap probe per row, O(1) per file however many commits
+    * produced them), then equality deletes. `df` must carry the
+    * `_graft_file`/`_graft_pos` position columns, which stay. `snap`
+    * supplies the broadcast gate (its properties) and the addedBy-stamp
+    * universe equality sequencing reads (its files). Every join is
+    * against a STATIC delete frame, so this one chain serves the batch
+    * read path and the streaming source alike.
+    */
+  private[graft] def hideDeleted(
+      df: DataFrame, snap: Snapshot, dels: Seq[DeleteFileEntry]): DataFrame = {
+    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
+    val (eqDels, rest) = dels.partition(_.equalityCols.nonEmpty)
+    val (dvDels, posDels) = rest.partition(_.dv)
+    val afterPos =
+      if (posDels.isEmpty) df
+      else {
+        val d = deleteRowsHinted(snap.properties, posDels)
+        df.join(d, df(PosFileCol) === d("file_name") && df(PosIdxCol) === d("row_index"),
+          "left_anti")
+      }
+    val afterDv =
+      if (dvDels.isEmpty) afterPos else minusDvDeletes(afterPos, snap.properties, dvDels)
+    if (eqDels.isEmpty) afterDv else eqDeleteSplit(afterDv, snap, eqDels)._1
   }
 
-  /** Hide the rows EQUALITY delete files kill: a row dies when its key
-    * matches a delete row committed strictly AFTER the row's own data
-    * file (`file.addedBy < delete.addedBy`) — post-images appended by
-    * the deleting commit itself carry the same id and survive. `df`
-    * must carry the `_graft_file` position column. The file→stamp map
-    * is manifest metadata (one tiny broadcast dim, O(#files) rows);
-    * the delete parquet joins as a normal scan — size-gated broadcast,
-    * never collected. Key comparison is null-safe (`<=>`): a null key
-    * in the delete set kills null-keyed rows, Iceberg's equality
-    * semantics.
-    */
-  private[graft] def minusEqDeletes(
-      df: DataFrame, s: Snapshot, eqDels: Seq[DeleteFileEntry]): DataFrame =
-    eqDeleteSplit(df, s, eqDels)._1
-
-  /** [[minusEqDeletes]] that also returns the KILLED rows (change-feed
-    * reconstruction). Every join is against a STATIC delete frame
-    * (chained semi/anti per key-set group), so both halves stay legal
-    * on a streaming `df` — a kept-vs-all self-anti-join would be a
-    * stream-stream join and is exactly what this shape avoids. Rows
-    * are split exactly once even across multiple key-set groups (each
-    * group consumes the previous group's survivors).
+  /** Split `df` into the rows EQUALITY delete files keep and the rows
+    * they kill (change-feed reconstruction reads the killed half). A
+    * row dies when its key matches a delete row committed strictly
+    * AFTER the row's own data file (`file.addedBy < delete.addedBy`) —
+    * post-images appended by the deleting commit itself carry the same
+    * id and survive. `df` must carry the `_graft_file` position column.
+    * The file→stamp map is manifest metadata (one tiny broadcast dim,
+    * O(#files) rows); the delete parquet joins as a normal scan —
+    * size-gated broadcast, never collected. Key comparison is null-safe
+    * (`<=>`): a null key in the delete set kills null-keyed rows,
+    * Iceberg's equality semantics. Every join is against a STATIC
+    * delete frame (chained semi/anti per key-set group), so both halves
+    * stay legal on a streaming `df` — a kept-vs-all self-anti-join
+    * would be a stream-stream join and is exactly what this shape
+    * avoids. Rows are split exactly once even across multiple key-set
+    * groups (each group consumes the previous group's survivors).
     */
   private[graft] def eqDeleteSplit(
       df: DataFrame, s: Snapshot, eqDels: Seq[DeleteFileEntry]): (DataFrame, Option[DataFrame]) = {
@@ -3643,6 +3474,25 @@ final class GraftTable(val root: String, spark: SparkSession) {
 }
 
 object GraftTable {
+  // the row-level DML kernel's vocabulary (see GraftTable.rowLevel)
+
+  /** Which live candidate rows a row-level verb hits. */
+  private sealed trait RowMatch
+  /** Rows where `pred` is TRUE (null-safe: NULL is no hit). */
+  private final case class ByPredicate(pred: Column) extends RowMatch
+  /** Rows whose `keyCols` appear in `source`. */
+  private final case class ByKeys(source: DataFrame, keyCols: Seq[String]) extends RowMatch
+
+  /** What a row-level verb writes in place of the rows it hits. */
+  private sealed trait PostImage
+  /** Nothing: the hit rows are deleted. */
+  private case object Removed extends PostImage
+  /** The hit row with `set` applied; every assignment is evaluated
+    * against the PRE-update row, in one projection (SQL UPDATE).
+    */
+  private final case class Assigned(set: Map[String, Column]) extends PostImage
+  /** The whole keyed source, for updated and inserted keys alike. */
+  private case object WholeSource extends PostImage
 
   /** Field-metadata key carrying a renamed column's frozen on-disk
     * (parquet) name — see [[GraftTable.renameColumn]].
@@ -3736,11 +3586,6 @@ object GraftTable {
     */
   val TargetFileSizeProp = "write.target-file-size"
 
-  /** A92 auto-compaction properties: `write.auto-compact=true` runs a
-    * manifest-only small-file check after every append and packs
-    * partitions holding ≥ `write.auto-compact.min-files` files under
-    * half the target ([[GraftTable.compactSmallFiles]]).
-    */
   /** Snapshot operations that move bytes without changing logical
     * content (Delta's `dataChange=false` class): their added files
     * carry only rows that were already visible in the parent snapshot.
@@ -3752,6 +3597,11 @@ object GraftTable {
     Set("compact", "optimize", "apply-deletes", "repartition-spec",
       "convert-deletes")
 
+  /** A92 auto-compaction properties: `write.auto-compact=true` runs a
+    * manifest-only small-file check after every append and packs
+    * partitions holding ≥ `write.auto-compact.min-files` files under
+    * half the target ([[GraftTable.compactSmallFiles]]).
+    */
   val AutoCompactProp = "write.auto-compact"
   val AutoCompactMinFilesProp = "write.auto-compact.min-files"
   val DefaultAutoCompactMinFiles = 8
@@ -3794,9 +3644,11 @@ object GraftTable {
     */
   val MergeModeProp = "write.merge.mode"
 
-  /** TBLPROPERTIES key: max recorded bytes of a pending delete set
-    * that MOR reads will still broadcast-hint (see
-    * [[GraftTable.deleteRowsHinted]], [[GraftTable.minusDvDeletes]]).
+  /** TBLPROPERTIES key: max bytes of a merge-on-read helper frame
+    * that is still broadcast-hinted — the recorded bytes of a pending
+    * delete set MOR reads join (see [[GraftTable.deleteRowsHinted]],
+    * [[GraftTable.minusDvDeletes]]) and the estimated bytes of a keyed
+    * MOR write's source keys (see [[GraftTable.sourceKeysHinted]]).
     */
   val DeleteBroadcastProp = "write.delete.broadcast-threshold"
 
@@ -3807,13 +3659,6 @@ object GraftTable {
     * [[DeleteFileEntry]]).
     */
   val MergeDeleteKindProp = "write.merge.delete-kind"
-
-  /** TBLPROPERTIES key: max estimated bytes of a keyed MOR write's
-    * source-key frame that the position-resolution semi-join will still
-    * broadcast-hint (see [[GraftTable.sourceKeysHinted]]); defaults to
-    * [[DefaultDeleteBroadcastBytes]].
-    */
-  val SourceBroadcastProp = "write.merge.source-broadcast-threshold"
 
   /** TBLPROPERTIES key: `auto` keeps per-column NDV statistics current
     * on row-adding writes — `append`, `appendBatch` (the exactly-once

@@ -770,8 +770,10 @@ case class GraftSetNullabilityCommand(
   }
 }
 
-/** DELETE FROM t [WHERE pred] — copy-on-write snapshot delete
-  * ([[graft.lake.GraftTable.delete]]). The predicate is carried as an
+/** DELETE FROM t [WHERE pred] — one snapshot delete
+  * ([[graft.lake.GraftTable.delete]]: metadata-only for a partition-
+  * exact predicate, else copy-on-write or merge-on-read as the table's
+  * `write.delete.mode` says). The predicate is carried as an
   * opaque [[org.apache.spark.sql.Column]] (not an Expression field):
   * a LeafRunnableCommand has no children, so the analyzer would
   * otherwise fail to resolve the predicate's attributes — it is
@@ -922,8 +924,9 @@ case class GraftTruncateCommand(name: String) extends LeafRunnableCommand {
   }
 }
 
-/** UPDATE t SET c = expr[, …] [WHERE pred] — copy-on-write update
-  * ([[graft.lake.GraftTable.update]]). Assignments and predicate are
+/** UPDATE t SET c = expr[, …] [WHERE pred] — one snapshot update
+  * ([[graft.lake.GraftTable.update]]: copy-on-write or merge-on-read as
+  * the table's `write.update.mode` says). Assignments and predicate are
   * carried as opaque Columns (resolved against the snapshot scan at
   * run time, see [[GraftDeleteCommand]]).
   */
@@ -942,12 +945,6 @@ case class GraftUpdateCommand(
   }
 }
 
-/** MERGE INTO t USING src ON t.k = src.k WHEN MATCHED THEN UPDATE SET *
-  * WHEN NOT MATCHED THEN INSERT * — the canonical upsert form, mapped
-  * onto [[graft.lake.GraftTable.merge]] (copy-on-write, source-key-
-  * bounds file pruning). The source query supplies the table's
-  * non-derived columns positionally (hive semantics, as with INSERT).
-  */
 /** MERGE … WHEN MATCHED THEN DELETE — the deletion-list form
   * ([[graft.lake.GraftTable.mergeDelete]]).
   */
@@ -964,6 +961,13 @@ case class GraftMergeDeleteCommand(
   }
 }
 
+/** MERGE INTO t USING src ON t.k = src.k WHEN MATCHED THEN UPDATE SET *
+  * WHEN NOT MATCHED THEN INSERT * — the canonical upsert form, mapped
+  * onto [[graft.lake.GraftTable.merge]] (source-key-bounds file
+  * pruning; copy-on-write or merge-on-read as the table's
+  * `write.merge.mode` says). The source query supplies the table's
+  * non-derived columns positionally (hive semantics, as with INSERT).
+  */
 case class GraftMergeCommand(
     name: String,
     keyCols: Seq[String],

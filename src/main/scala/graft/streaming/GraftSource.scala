@@ -323,38 +323,16 @@ class GraftSource(
     // stamp), so a long-pending old delete costs nothing per batch.
     val liveDels = endSnap.deleteFiles
       .filter(d => d.addedBy == 0L || d.addedBy > startId)
+    // the delete lists are STATIC frames, so these are plain
+    // stream-static anti-joins with no state; an append-only stream
+    // never retracts earlier batches
+    val scanSnap = endSnap.copy(files = delta, shards = Seq.empty)
     val rel = org.apache.spark.sql.graft.GraftFileIndex.relation(
-      spark, root, endSnap.copy(files = delta, shards = Seq.empty),
-      isStreaming = true, withRowPos = liveDels.nonEmpty)
+      spark, root, scanSnap, isStreaming = true, withRowPos = liveDels.nonEmpty)
     if (liveDels.isEmpty) rel
-    else {
-      // the delete lists are STATIC frames, so these are plain
-      // stream-static anti-joins with no state (broadcast-hinted only
-      // while small — GraftTable.deleteRowsHinted/minusEqDeletes); an
-      // append-only stream never retracts earlier batches.
-      import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-      val (eqLive, rest) = liveDels.partition(_.equalityCols.nonEmpty)
-      // deletion vectors (A90): a dv entry's parquet is (file_name,
-      // dv, rows) bitmaps, NOT (file_name, row_index) coordinates —
-      // it must go through the bitmap probe, never the position
-      // anti-join. A dv entry stamped ≤ startId cannot target delta
-      // files (its bitmap froze at its commit), so the same age filter
-      // applies.
-      val (dvLive, posLive) = rest.partition(_.dv)
-      var out = rel
-      if (posLive.nonEmpty) {
-        val dels = table.deleteRowsHinted(endSnap.properties, posLive)
-        out = out.join(dels,
-          out(PosFileCol) === dels("file_name") && out(PosIdxCol) === dels("row_index"),
-          "left_anti")
-      }
-      if (dvLive.nonEmpty)
-        out = table.minusDvDeletes(out, endSnap.properties, dvLive)
-      if (eqLive.nonEmpty)
-        out = table.minusEqDeletes(out,
-          endSnap.copy(files = delta, shards = Seq.empty), eqLive)
-      out.drop(PosFileCol, PosIdxCol)
-    }
+    else table.hideDeleted(rel, scanSnap, liveDels).drop(
+      org.apache.spark.sql.graft.GraftFileIndex.PosFileCol,
+      org.apache.spark.sql.graft.GraftFileIndex.PosIdxCol)
   }
 
   // ---- change-data feed ---------------------------------------------
@@ -413,35 +391,19 @@ class GraftSource(
     // stream's batch shape; retractionBatch re-shapes the change kind
     // to _graft_retract)
     val order = (tableSchema.fieldNames.toSeq :+ changeTypeCol).map(col)
-    // position joins keep the pos columns (dropped once every delete
-    // flavor is applied); delete frames arrive broadcast-hinted or not
-    // from GraftTable.deleteRowsHinted — size-gated, never unconditional
-    def posJoin(rel: DataFrame, dels: DataFrame, how: String): DataFrame =
-      rel.join(dels,
-        rel(PosFileCol) === dels("file_name") && rel(PosIdxCol) === dels("row_index"), how)
-    // hide rows a (position ++ dv ++ equality) delete set kills;
+    // hide rows a delete set kills (GraftTable.hideDeleted: the pos
+    // columns stay, dropped once every delete flavor is applied);
     // `files` is the addedBy-stamp universe equality sequencing reads
     def applyDels(rel: DataFrame, files: Seq[graft.lake.FileEntry],
-        pos: Seq[DeleteFileEntry], eq: Seq[DeleteFileEntry],
-        dv: Seq[DeleteFileEntry] = Seq.empty): DataFrame = {
-      var out = rel
-      if (pos.nonEmpty)
-        out = posJoin(out, table.deleteRowsHinted(endSnap.properties, pos), "left_anti")
-      if (dv.nonEmpty)
-        out = table.minusDvDeletes(out, endSnap.properties, dv)
-      if (eq.nonEmpty)
-        out = table.minusEqDeletes(out, endSnap.copy(files = files, shards = Seq.empty), eq)
-      out
-    }
+        dels: Seq[DeleteFileEntry]): DataFrame =
+      table.hideDeleted(rel, endSnap.copy(files = files, shards = Seq.empty), dels)
     if (startId <= 0) {
       // initial load: the end snapshot's full logical content, as inserts
-      val (eqD, restD) = endSnap.deleteFiles.partition(_.equalityCols.nonEmpty)
-      val (dvD, posD) = restD.partition(_.dv)
       val rel = GraftFileIndex.relation(spark, root, endSnap.copy(shards = Seq.empty),
         isStreaming = true, withRowPos = endSnap.deleteFiles.nonEmpty)
       val visible =
         if (endSnap.deleteFiles.isEmpty) rel
-        else applyDels(rel, endSnap.files, posD, eqD, dvD).drop(PosFileCol, PosIdxCol)
+        else applyDels(rel, endSnap.files, endSnap.deleteFiles).drop(PosFileCol, PosIdxCol)
       return withChangeType(visible, "insert").select(order: _*)
     }
     // window lineage (startId, endId], oldest-first
@@ -494,7 +456,7 @@ class GraftSource(
     val insRel = GraftFileIndex.relation(spark, root,
       endSnap.copy(files = insFiles, shards = Seq.empty),
       isStreaming = true, withRowPos = anyDels)
-    val inserts = applyDels(insRel, insFiles, winPos, winEq, winDv)
+    val inserts = applyDels(insRel, insFiles, winPos ++ winEq ++ winDv)
     val insTagged = withChangeType(
       if (!anyDels) inserts else inserts.drop(PosFileCol, PosIdxCol),
       "insert").select(order: _*)
@@ -529,8 +491,9 @@ class GraftSource(
           val preRel = GraftFileIndex.relation(spark, root,
             endSnap.copy(files = preFiles, shards = Seq.empty),
             isStreaming = true, withRowPos = true)
-          val preBase = applyDels(preRel, preFiles, Seq.empty, startEq)
-          Some(posJoin(preBase, delRows, "left_semi").drop(PosFileCol, PosIdxCol))
+          val preBase = applyDels(preRel, preFiles, startEq)
+          Some(preBase.join(delRows, preBase(PosFileCol) === delRows("file_name") &&
+            preBase(PosIdxCol) === delRows("row_index"), "left_semi").drop(PosFileCol, PosIdxCol))
         }
       }
     // equality pre-images: no coordinates to collect — candidates come
@@ -553,8 +516,8 @@ class GraftSource(
           // start) — letting either reach the equality split would
           // emit a pre-image twice / wrongly (a retraction consumer
           // would subtract it twice)
-          val preBase = applyDels(preRel, cands, startPos ++ winPos, startEq,
-            endSnap.deleteFiles.filter(_.dv))
+          val preBase = applyDels(preRel, cands,
+            startPos ++ winPos ++ startEq ++ endSnap.deleteFiles.filter(_.dv))
           table.eqDeleteSplit(preBase,
               endSnap.copy(files = cands, shards = Seq.empty), winEq)._2
             .map(_.drop(PosFileCol, PosIdxCol))
@@ -587,7 +550,7 @@ class GraftSource(
           // makes the bitmap diff name coordinates that were already
           // position-dead at the window start — those rows were never
           // visible at startId and must not emit as deletes
-          val preBase = applyDels(preRel, preFiles, startPos, startEq)
+          val preBase = applyDels(preRel, preFiles, startPos ++ startEq)
           Some(preBase.join(diff,
               preBase(PosFileCol) === diff("file_name") &&
                 preBase(PosIdxCol) === diff("row_index"),

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.lake.GraftTable
 
 /** Randomized-but-deterministic DML soak: a seeded random sequence of
-  * append / range-delete / predicate-update / keyed-merge / overwrite /
+  * append / range-delete / predicate-update / keyed-merge /
+  * keyed-delete (mergeDelete, with and without riding properties) / overwrite /
   * compact / applyDeletes / write-mode flips runs against a real table
   * AND an in-memory model map (plus snapshot expiration and a full
   * branch→append→fast-forward→drop lifecycle); the table's full
@@ -93,7 +94,7 @@ class DmlModelSpec extends SparkSpec {
       }
 
       for (step <- 1 to 24) {
-        rnd.nextInt(16) match {
+        rnd.nextInt(18) match {
           case 0 | 1 => // append a block of fresh keys
             val ks = nextKey until (nextKey + 5 + rnd.nextInt(10))
             nextKey = ks.end
@@ -216,6 +217,19 @@ class DmlModelSpec extends SparkSpec {
             val rows2 = ks2.map(k => k -> (k % 7, k * 1.5)).toMap
             model ++= rows2
             t.append(df(spark, rows2).repartition(1))
+          case op @ (16 | 17) => // keyed deletion list (mergeDelete): a
+            // random subset of live keys plus one never written; the 17
+            // flavor rides a property on the same commit
+            import spark.implicits._
+            val ks = rnd.shuffle(model.keys.toSeq.sorted).take(1 + rnd.nextInt(4)) :+ (nextKey + 1000L)
+            model --= ks
+            val src = ks.toDF("k").repartition(1 + rnd.nextInt(2))
+            if (op == 16) t.mergeDelete(src, Seq("k"))
+            else {
+              t.mergeDelete(src, Seq("k"), Map("soak.merge-delete" -> step.toString))
+              assert(t.properties.get("soak.merge-delete").contains(step.toString),
+                s"seed=$seed step=$step: mergeDelete extraProps must land")
+            }
           case 14 => // REPLACE TABLE with a transformed projection —
             // same schema, wholly new contents through the RTAS path
             // (fresh write funnel, constraint/rename reset), history

@@ -1241,6 +1241,8 @@ class LakeSpec extends SparkSpec {
   }
 
   test("position-MOR source-key broadcast is size-gated by write.merge.source-broadcast-threshold") {
+    // the gate is write.delete.broadcast-threshold, the one broadcast
+    // knob of MOR helper frames; the title's source-key key folded into it
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
     def broadcastHinted(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.collect { case j: Join => j.hint }
@@ -1257,7 +1259,7 @@ class LakeSpec extends SparkSpec {
       t.sourceKeysHinted(t.current.properties, keys), Seq("o_orderkey"), "left_semi")
     assert(broadcastHinted(probeUnder), "small source-key frame should carry the hint")
     val probeOver = t.read().join(
-      t.sourceKeysHinted(Map(GraftTable.SourceBroadcastProp -> "1"), keys),
+      t.sourceKeysHinted(Map(GraftTable.DeleteBroadcastProp -> "1"), keys),
       Seq("o_orderkey"), "left_semi")
     assert(!broadcastHinted(probeOver),
       "over-threshold source-key frame must not be broadcast-hinted")
@@ -1266,7 +1268,7 @@ class LakeSpec extends SparkSpec {
     // (at real scale Spark plans the semi-join shuffled; at test scale
     // AQE may still broadcast from runtime STATS, which is fine — the
     // bug was the unconditional HINT)
-    t.setProperty(GraftTable.SourceBroadcastProp, "1")
+    t.setProperty(GraftTable.DeleteBroadcastProp, "1")
     val n0 = t.read().count()
     val victims = t.read().orderBy(col("o_orderkey")).limit(5)
       .withColumn("o_totalprice", lit(77.25))

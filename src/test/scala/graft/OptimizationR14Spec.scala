@@ -40,6 +40,23 @@ class OptimizationR14Spec extends SparkSpec {
     base.unpersist(blocking = true)
   }
 
+  test("Mat.fact: evicting a re-persisted plan's stale release keeps the newer cache") {
+    import spark.implicits._
+    Mat.beginEntry()
+    def build() = (1 to 30).toDF("k").withColumn("v", col("k") * 3)
+    Mat.fact(build())
+    val second = Mat.fact(build())
+    // MaxLive - 1 more frames overflow the queue by exactly one release:
+    // the first fact()'s, whose cache the second fact() already replaced
+    (1 until Mat.MaxLive).foreach(i => Mat.fact(spark.range(i.toLong).toDF(s"x$i")))
+    assert(second.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "a stale release must not unpersist the newer same-plan cache")
+    assert(second.count() == 30L)
+    Mat.beginEntry()
+    assert(second.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "beginEntry still releases the newer cache")
+  }
+
   test("multisetDriftCount rejects diverging schemas loudly") {
     import spark.implicits._
     val a = Seq((1, "x")).toDF("id", "s")
