@@ -817,9 +817,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
     // skips files for predicates on them without an OPTIMIZE pass
     // (Iceberg sort-order parity). The prefix keys keep the writer from
     // re-sorting by partition cols alone, which would destroy the
-    // secondary order. Costs one range shuffle per write — the
-    // documented price of a sorted table; leave the property unset for
-    // ingest-speed-first tables.
+    // secondary order. Costs one range shuffle per multi-task write —
+    // the documented price of a sorted table; leave the property unset
+    // for ingest-speed-first tables. A one-task write sorts in place:
+    // its one file is the whole range either way.
     val sortCols =
       (if (hasCurrent)
          current.properties.getOrElse(GraftTable.SortColsProp, "") else "")
@@ -846,9 +847,13 @@ final class GraftTable(val root: String, spark: SparkSession) {
       // toRdd, not df1.rdd: same partition count without the extra
       // encoder-deserialization RDD layer the public accessor builds
       // (plan metadata alone can't answer this — an unbucketed scan's
-      // outputPartitioning is UnknownPartitioning(0))
-      val n = math.max(1, df1.queryExecution.toRdd.getNumPartitions)
-      df1.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
+      // outputPartitioning is UnknownPartitioning(0)). A plan without
+      // an exchange answers without running a job. SourceGuardSpec
+      // keeps this the engine's one task-count question to a plan.
+      df1.queryExecution.toRdd.getNumPartitions match {
+        case n if n <= 1 => df1.sortWithinPartitions(keys: _*)
+        case n => df1.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
+      }
     } else bucketDist match {
       case Some((bd, n)) if df1.columns.contains(bd) => df1.repartition(n, col(bd))
       case _ => df1
@@ -1220,9 +1225,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
     *  - commits ONE snapshot with `extraProps` riding it. A verb with
     *    `commitEmpty = false` (mergeDelete, run per stream micro-batch)
     *    commits only the properties, if any, when nothing was removed.
-    * Source keys are projected once and persisted only where they are
-    * read twice (bounds agg, then the join); the equality path reads
-    * them once.
+    * Source keys are projected once. The key-bounds agg reads them
+    * unpersisted; the copy-on-write and vector paths persist them only
+    * once a candidate file exists, so a keyed verb that can match no
+    * file runs the bounds agg alone. The equality path reads them once.
     */
   private def rowLevel(op: String, modeProp: String, hit: RowMatch, post: PostImage,
       extraProps: Map[String, String] = Map.empty,
@@ -1271,9 +1277,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val equality = mor && hit.isInstanceOf[ByKeys] &&
       props.get(GraftTable.MergeDeleteKindProp).contains("equality")
     val keys: Option[DataFrame] = hit match {
-      case ByKeys(source, keyCols) =>
-        val k = source.select(keyCols.map(col): _*)
-        Some(if (equality) k else k.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      case ByKeys(source, keyCols) => Some(source.select(keyCols.map(col): _*))
       case _ => None
     }
     def srcKeys = keys.get
@@ -1289,11 +1293,13 @@ final class GraftTable(val root: String, spark: SparkSession) {
       }: _*).drop(depDests.filterNot(set.keySet.contains).toSeq: _*)
     def write(df: DataFrame): Seq[FileEntry] =
       writeFiles(df, cur.partitionCols, cur.deps, cur.id + 1)
+    lazy val cands: Seq[FileEntry] = hit match {
+      case ByPredicate(pred) => pruneFiles(pred)._1
+      case ByKeys(_, keyCols) => sourceKeyCandidates(srcKeys, keyCols)
+    }
+    val keysCached = !equality && keys.isDefined && cands.nonEmpty
+    if (keysCached) srcKeys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      lazy val cands: Seq[FileEntry] = hit match {
-        case ByPredicate(pred) => pruneFiles(pred)._1
-        case ByKeys(_, keyCols) => sourceKeyCandidates(srcKeys, keyCols)
-      }
       if (!mor) {
         if (cands.isEmpty && !commitEmpty) return unchanged
         val scan = readSnapshot(cur.copy(files = cands, shards = Seq.empty))
@@ -1350,7 +1356,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
         }
         commitWith(op, cur.files ++ added, added.size, 0, deleteFiles)
       }
-    } finally if (!equality) keys.foreach(_.unpersist(blocking = false))
+    } finally if (keysCached) srcKeys.unpersist(blocking = false)
   }
 
   /** Candidate files whose key min/max range overlaps the source's key
@@ -1387,10 +1393,13 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * shuffle-free — but the source of a BULK keyed MERGE is data-scale
     * (10 % of a 100 TB table), and an unconditional hint would force
     * the driver to materialize it on every such write. The size
-    * estimate is the optimizer's own (`stats.sizeInBytes`): by the
-    * time this runs the key frame is persisted AND materialized (the
-    * key-bounds agg in [[sourceKeyCandidates]] ran first), so the
-    * estimate is the actual cached size.
+    * estimate is the optimizer's own (`stats.sizeInBytes`). In
+    * [[rowLevel]] the key frame's cache is not built yet when this
+    * runs (the key-bounds agg read the frame unpersisted), so the
+    * estimate is the plan's — exact for a local source, derived from
+    * the file size for a file source; no filter shrinks it, so a
+    * doubtful estimate errs toward the shuffled join. A materialized
+    * cache answers with its actual size.
     */
   private[graft] def sourceKeysHinted(props: Map[String, String], srcKeys: DataFrame): DataFrame = {
     val limit = props.get(GraftTable.DeleteBroadcastProp).map(_.toLong)

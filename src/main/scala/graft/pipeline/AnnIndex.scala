@@ -18,19 +18,26 @@ import graft.lake.{GraftTable, Snapshot}
   *    [[VectorOps.pqBooksPerList]]) and commits TWO graft lake tables
   *    under the index root: `books` (the nlist×(1+M·K) codebook rows,
   *    KBs at any corpus size) and `codes` (one row per corpus vector:
-  *    cluster id + M nibble codes, PARTITIONED BY cluster — so the
-  *    inverted lists ARE lake partitions and probing is partition
-  *    pruning, the A15 machinery).
+  *    cluster id + M nibble codes, SORTED BY cluster — the table's
+  *    `write.sort.columns` — so every codes file covers a narrow
+  *    cluster range and probing is manifest min/max pruning, the A59
+  *    machinery, at one file per write task instead of one per list).
   *  - [[query]] answers a query batch from the persisted tables alone:
   *    one bounded codebook load (≤ nlist·(1+M·K) rows by construction,
   *    the adjudicated k×dim-collect class), probe → per-(query,list)
-  *    ADC LUTs → codegen'd ADC scan over ONLY the probed partitions →
-  *    exact top-50 rerank against the corpus. Zero training or encode
-  *    jobs — the spec pins this via the [[BuildGroup]] job-group marker.
+  *    ADC LUTs → codegen'd ADC scan over ONLY the files whose cluster
+  *    range holds a probed list → exact top-50 rerank against the
+  *    corpus. Zero training or encode jobs — the spec pins this via
+  *    the [[BuildGroup]] job-group marker.
   *  - [[append]] extends the index for new corpus rows at O(delta):
   *    assign + encode the delta against the FROZEN codebooks (narrow
   *    maps over the delta only) and lake-append into `codes` — the A27
-  *    incremental shape; existing files are untouched.
+  *    incremental shape; existing files are untouched, and the delta
+  *    adds one cluster-sorted file per write task.
+  *
+  * Indexes written with the earlier layout — `codes` PARTITIONED BY
+  * cluster, one file per list per write — read and sync through the
+  * same code: the probe filter prunes them by partition value.
   *
   * Trade recorded: appended vectors are quantized under codebooks
   * trained before they arrived (standard FAISS practice — recall on
@@ -75,6 +82,11 @@ object AnnIndex {
     * never repeats.
     */
   def build(s: SparkSession, corpus: DataFrame, indexRoot: String): Unit =
+    build(s, corpus, indexRoot, Map.empty)
+
+  /** [[build]] with `props` riding the codes table's property commit. */
+  private def build(s: SparkSession, corpus: DataFrame, indexRoot: String,
+      props: Map[String, String]): Unit =
     inGroup(s, BuildGroup, s"ANN index build -> $indexRoot") {
       val all = corpus.select(col("vec_id"), col("embedding"))
       val train = VectorOps.trainSample(all)
@@ -115,14 +127,18 @@ object AnnIndex {
 
       def rethrowBooksFailure(): Unit = Option(booksFailure.get()).foreach(e => throw e)
 
-      // codes table: the compressed corpus, inverted lists as lake
-      // partitions (repartition by cluster → one file per list). A
-      // failed codes write still waits for the books thread, so no
-      // orphaned writer keeps committing after build returns.
+      // codes table: the compressed corpus, range-distributed on
+      // cluster so each file holds a disjoint cluster range (about one
+      // file per list) and later appends keep the order through
+      // `write.sort.columns`. A failed codes write still waits for the
+      // books thread, so no orphaned writer keeps committing after
+      // build returns.
       val codes = encodeWith(pqAll, books)
       rethrowBooksFailure()
-      try GraftTable.create(s, codesRoot(indexRoot),
-        codes.repartition(col("cluster")), Seq("cluster"))
+      try GraftTable.create(s, codesRoot(indexRoot), codes
+          .repartitionByRange(cents.length, col("cluster"))
+          .sortWithinPartitions(col("cluster")))
+          .setProperties(Map(GraftTable.SortColsProp -> "cluster") ++ props)
       finally booksThread.join()
       rethrowBooksFailure()
     }
@@ -184,7 +200,9 @@ object AnnIndex {
   /** Extend the index for `delta` (vec_id, embedding) rows: assign +
     * encode against the FROZEN codebooks (narrow maps over the delta
     * only — zero training jobs, zero existing-file rewrites) and
-    * lake-append into `codes`. O(delta) at any index size.
+    * lake-append into `codes`, whose sort order makes the write one
+    * cluster-sorted file per task of the delta — a one-task delta sorts
+    * in place, with no shuffle. O(delta) at any index size.
     */
   def append(s: SparkSession, delta: DataFrame, indexRoot: String,
       extraProps: Map[String, String] = Map.empty): Unit =
@@ -193,23 +211,7 @@ object AnnIndex {
       val pqRows = delta.select(col("vec_id"), col("embedding"))
         .withColumn("cluster", exprs.nearestCentroid(col("embedding"), q.cents))
         .withColumn("embedding", exprs.centroidResidual(col("embedding"), q.cents))
-      val codes = encodeWith(pqRows, q.books)
-      // one file per list: a delta that runs as one task already writes
-      // at most one file per cluster partition, so only a multi-task
-      // delta pays the repartition shuffle
-      new GraftTable(codesRoot(indexRoot), s).append(
-        if (runsAsOneTask(codes)) codes else codes.repartition(col("cluster")),
-        extraProps)
-    }
-
-  /** Does `df` run as a single task? Asked of the physical plan without
-    * running it — an adaptive plan (one with an exchange) would run its
-    * shuffle stages to answer, so it counts as many tasks.
-    */
-  private def runsAsOneTask(df: DataFrame): Boolean =
-    df.queryExecution.executedPlan match {
-      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => false
-      case _ => df.queryExecution.toRdd.getNumPartitions == 1
+      new GraftTable(codesRoot(indexRoot), s).append(encodeWith(pqRows, q.books), extraProps)
     }
 
   private def probeLutBytes(nq: Long): Long =
@@ -218,11 +220,11 @@ object AnnIndex {
   private def qBytes(nq: Long): Long = nq * (EmbDim.toLong * 4 + 32)
 
   /** The ADC candidate pool behind [[query]] and
-    * [[mineHardNegatives]]: probe nprobe lists per query, partition-
-    * prune the codes table to the probed lists (the distinct-probed-
-    * cluster pull is ≤ nlist values — bounded by the index geometry,
-    * not the query volume), ADC-scan only those lists' codes, return
-    * the ADC top-50 (query_id, n_id) pairs. Cost is
+    * [[mineHardNegatives]]: probe nprobe lists per query, prune the
+    * codes table to the files holding the probed lists (the
+    * distinct-probed-cluster pull is ≤ nlist values — bounded by the
+    * index geometry, not the query volume), ADC-scan only those
+    * lists' codes, return the ADC top-50 (query_id, n_id) pairs. Cost is
     * O(queries × probed-lists), never queries × corpus — the shape
     * that survives a million-query batch over a 100 TB corpus.
     */
@@ -248,9 +250,11 @@ object AnnIndex {
         .select(col("query_id"), col("cluster"),
           exprs.dotFD(col("embedding"), col("c_emb")).as("qc_dot"))
 
-      // partition pruning: the probed-list set is ≤ nlist values no
-      // matter how many queries probe — collect it and push an IN
-      // filter so the lake scan lists only those partitions' files
+      // list pruning: the probed-list set is ≤ nlist values no matter
+      // how many queries probe — collect it and push an IN filter, so
+      // the lake scan plans only the files whose manifest cluster
+      // min/max range holds a probed list (partition values, on an
+      // index written with the cluster-partitioned layout)
       val probedClusters = probes.select(col("cluster")).distinct()
         .collect().map(_.getInt(0)).sorted
       val codesT = new GraftTable(codesRoot(indexRoot), s)
@@ -316,7 +320,7 @@ object AnnIndex {
   }
 
   /** Answer `queries` (query_id, embedding) from the persisted index:
-    * [[adcCandidates]] over only the probed partitions, then exact
+    * [[adcCandidates]] over only the probed lists' files, then exact
     * top-[[VectorOps.TopK]] rerank against `corpus` — the C42 scan
     * plan with the encode/training stages replaced by table reads.
     */
@@ -333,8 +337,8 @@ object AnnIndex {
     * handful of anchors but a scale-killer for the operator's actual
     * use (contrastive training mines negatives for EVERY anchor:
     * millions of anchors × the full corpus). Here each anchor pays
-    * only its probed inverted lists: [[adcCandidates]] partition-
-    * prunes the codes table to the probed lists and returns the ADC
+    * only its probed inverted lists: [[adcCandidates]] prunes the
+    * codes table to the probed lists' files and returns the ADC
     * top-50, and the cosine ceiling (`< ceil` — above it sit
     * positives/near-dups mislabeled as negatives) filters BEFORE the
     * rerank window, so the rank shuffle carries only rows that can be
@@ -346,7 +350,7 @@ object AnnIndex {
     * ([[VectorOps.IvfProbes]], 50): mining is an offline training-prep
     * batch where missed hard negatives cost model quality, while
     * serving trades recall for latency — FAISS users make the same
-    * split (nprobe per workload, one index). Still a probed-partition
+    * split (nprobe per workload, one index). Still a probed-list
     * scan with a constant per-anchor candidate pool: cost stays
     * O(anchors × probed-lists) + O(anchors × pool) rerank, and both
     * drop as real (clustered) embeddings concentrate neighbors in
@@ -381,17 +385,14 @@ object AnnIndex {
     * merge-on-read mode so [[sync]]'s delete-fold is O(deletes) with
     * zero target I/O (the key list itself is the delete file; the
     * query path applies it on read through the ordinary lake scan).
+    * These properties ride the codes table's one property commit.
     */
   def buildFromTable(s: SparkSession, corpus: GraftTable, indexRoot: String): Unit = {
     val snapId = corpus.currentId
-    build(s, corpus.read().select(col("vec_id"), col("embedding")), indexRoot)
-    val codesT = new GraftTable(codesRoot(indexRoot), s)
-    // one metadata commit, not three (r14)
-    codesT.setProperties(Map(
+    build(s, corpus.read().select(col("vec_id"), col("embedding")), indexRoot, Map(
       GraftTable.MergeModeProp -> "merge-on-read",
       GraftTable.MergeDeleteKindProp -> "equality",
       SyncedSnapshotProp -> snapId.toString))
-    ()
   }
 
   /** Maintain the index against its lake corpus table — one row-level

@@ -260,6 +260,23 @@ class AnnIndexSpec extends SparkSpec {
       "a rebuilt index must not serve the previous build's quantizers")
   }
 
+  /** The IvfProbes lists one query probes — [[AnnIndex.query]]'s probe
+    * step, re-derived from the loaded centroids.
+    */
+  private def probedLists(oneQuery: org.apache.spark.sql.DataFrame): Set[Int] = {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val qz = AnnIndex.load(spark, root)
+    val centsDf = qz.cents.zipWithIndex.map { case (c, i) => (i, c) }
+      .toSeq.toDF("cluster", "c_emb")
+    val w = Window.partitionBy(col("query_id")).orderBy(col("c_dot").desc, col("cluster"))
+    oneQuery.crossJoin(centsDf)
+      .withColumn("c_dot", graft.functions.exprs.cosineSimFD(col("embedding"), col("c_emb")))
+      .withColumn("prn", org.apache.spark.sql.functions.row_number().over(w))
+      .filter(col("prn") <= VectorOps.IvfProbes)
+      .select("cluster").collect().map(_.getInt(0)).toSet
+  }
+
   test("probing IS partition pruning: a single query's scan plans only its nprobe lists' files") {
     AnnIndex.build(spark, corpus, root)
     val codesT = new GraftTable(s"$root/codes", spark)
@@ -267,31 +284,93 @@ class AnnIndexSpec extends SparkSpec {
     assert(nFiles > VectorOps.IvfProbes,
       s"precondition: more list files ($nFiles) than probes (${VectorOps.IvfProbes})")
     // one query probes IvfProbes of the nlist clusters — the codes
-    // scan must plan at most that many partition files (this is the
-    // A15 machinery doing ANN list selection)
+    // scan must plan at most that many files. The build writes each
+    // file over a disjoint cluster range, so the manifest's cluster
+    // min/max stats do the list selection (the A59 sort-order pruning;
+    // the test's name keeps the earlier cluster-partitioned layout's)
     val oneQuery = corpus.filter(col("vec_id") === 0L)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val got = AnnIndex.query(spark, root, corpus, oneQuery, 1L).collect()
     assert(got.length === VectorOps.TopK)
     // re-derive the probed set and check the pruned file plan directly
-    val qz = AnnIndex.load(spark, root)
-    val probed = {
-      import org.apache.spark.sql.expressions.Window
-      import spark.implicits._
-      val centsDf = qz.cents.zipWithIndex.map { case (c, i) => (i, c) }
-        .toSeq.toDF("cluster", "c_emb")
-      val w = Window.partitionBy(col("query_id")).orderBy(col("c_dot").desc, col("cluster"))
-      oneQuery.crossJoin(centsDf)
-        .withColumn("c_dot", graft.functions.exprs.cosineSimFD(col("embedding"), col("c_emb")))
-        .withColumn("prn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("prn") <= VectorOps.IvfProbes)
-        .select("cluster").collect().map(_.getInt(0)).toSet
-    }
+    val probed = probedLists(oneQuery)
     assert(probed.size === VectorOps.IvfProbes)
     val (survivors, total, _) = codesT.pruneFiles(
       col("cluster").isin(probed.toSeq.map(Int.box): _*))
     assert(total === nFiles && survivors.size <= VectorOps.IvfProbes,
       s"codes scan must prune to the probed lists: ${survivors.size}/$total")
+  }
+
+  test("cluster-sorted codes: an append-only sync adds one file; a query plans <= nprobe base files plus the sync files") {
+    val t = GraftTable.create(spark, s"$root-sorted-corpus", corpus)
+    AnnIndex.buildFromTable(spark, t, root)
+    val codesT = new GraftTable(s"$root/codes", spark)
+    assert(codesT.current.partitionCols.isEmpty &&
+      codesT.properties.get(GraftTable.SortColsProp).contains("cluster"),
+      "codes keeps its lists by sort order, not by partition directory")
+    val base = codesT.current.files.map(_.path).toSet
+    // two micro-batches, two syncs: each delta spans several lists,
+    // yet adds one sorted file (the delta runs as one task)
+    val synced = Seq(600000000L, 700000000L).map { off =>
+      val pre = codesT.current.files.map(_.path).toSet
+      t.append(plantedRows(off, 6).coalesce(1))
+      assert(AnnIndex.sync(spark, t, root) === 6L)
+      val lists = codesT.read().filter(col("n_id") >= off && col("n_id") < off + 6)
+        .select("cluster").distinct().count()
+      assert(lists > 1L, s"precondition: the delta spans several lists, got $lists")
+      val added = codesT.current.files.filterNot(f => pre.contains(f.path))
+      assert(added.size === 1, s"an append-only sync must add one codes file, added ${added.size}")
+      assert(added.head.rows === 6L)
+      added.head.path
+    }
+    val oneQuery = corpus.filter(col("vec_id") === 0L)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val (survivors, total, _) = codesT.pruneFiles(
+      col("cluster").isin(probedLists(oneQuery).toSeq.map(Int.box): _*))
+    assert(total === base.size + synced.size)
+    val baseSurvivors = survivors.count(f => base.contains(f.path))
+    assert(baseSurvivors <= VectorOps.IvfProbes && survivors.size <= VectorOps.IvfProbes + synced.size,
+      s"a query must plan <= ${VectorOps.IvfProbes} base files plus the sync files: " +
+        s"$baseSurvivors base of ${survivors.size} planned")
+  }
+
+  test("an index written with the cluster-partitioned codes layout still syncs and answers") {
+    val t = GraftTable.create(spark, s"$root-legacy-corpus", corpus)
+    AnnIndex.buildFromTable(spark, t, root)
+    // the same index in the earlier layout: identical books, the same
+    // codes rows partitioned by cluster, the same properties
+    val legacy = s"$root-legacy"
+    val codesT = new GraftTable(s"$root/codes", spark)
+    GraftTable.create(spark, s"$legacy/books", new GraftTable(s"$root/books", spark).read())
+    val staged = GraftTable.create(spark, s"$legacy-stage", codesT.read())
+    val legacyCodes = GraftTable.create(spark, s"$legacy/codes",
+      staged.read().repartition(col("cluster")), Seq("cluster"))
+    legacyCodes.setProperties(codesT.properties - GraftTable.SortColsProp)
+    assert(legacyCodes.current.partitionCols === Seq("cluster"))
+    // an insert window, then a delete window, synced into both
+    def syncBoth(): Unit = Seq(root, legacy).foreach(r => AnnIndex.sync(spark, t, r))
+    t.append(plantedRows(600000000L, 2))
+    syncBoth()
+    t.delete(col("vec_id") === 600000000L)
+    syncBoth()
+    def codeRows(r: String) = new GraftTable(s"$r/codes", spark).read()
+      .select("n_id", "cluster", "codes").collect().map(_.toString).sorted.toSeq
+    assert(codeRows(legacy) === codeRows(root), "both layouts must hold the same live codes")
+    assert(new GraftTable(s"$legacy/codes", spark).current.files
+      .forall(_.partition.contains("cluster")), "legacy syncs keep writing cluster partitions")
+    // the same quantizers over the same codes answer identically, and
+    // the surviving planted copy finds its original
+    val live = t.read().select(col("vec_id"), col("embedding"))
+    val qs = plantedRows(600000000L, 2).filter(col("vec_id") =!= 600000000L)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+      .unionByName(queriesDf.filter(col("query_id") < 3L))
+    def answers(r: String) = AnnIndex.query(spark, r, live, qs, 4L)
+      .collect().map(_.toString).toSeq
+    val got = answers(legacy)
+    assert(got === answers(root), "the partitioned layout must answer like the sorted one")
+    assert(got.exists(_.startsWith("[600000001,1,")),
+      s"the synced planted copy must retrieve its original: $got")
+    assert(!got.exists(_.contains(",600000000,")), s"deleted vector surfaced: $got")
   }
 
   test("driver entries: persisted results well-formed; check twin green") {

@@ -1784,6 +1784,55 @@ class LakeSpec extends SparkSpec {
     assert(t.read().count() === o.count())
   }
 
+  test("write.sort.columns: a one-task append sorts in place — no exchange, the range path's rows and order") {
+    import spark.implicits._
+    // unique keys in a scrambled order, so "sorted" has one answer
+    val input = (0 until 300).map(i => ((i * 7919L) % 300L, s"v$i")).toDF("k", "v")
+    def sortedTable(name: String) = {
+      val t = GraftTable.createEmpty(spark, tmp(name), input.schema, Seq.empty, Seq.empty)
+      t.setProperty(GraftTable.SortColsProp, "k")
+      t
+    }
+    /** Shuffle records written by the jobs `body` starts. */
+    def shuffleRecords(body: => Unit): Long = {
+      val recs = new java.util.concurrent.atomic.AtomicLong(0L)
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val sentinel = s"sorted-write-sentinel-${java.util.UUID.randomUUID()}"
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => recs.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull == sentinel)
+            drained.countDown()
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(l)
+      try {
+        body
+        sc.setJobGroup(sentinel, "drain")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+        recs.get()
+      } finally sc.removeSparkListener(l)
+    }
+    def fileRows(t: GraftTable, f: graft.lake.FileEntry) =
+      spark.read.parquet(s"${t.root}/${f.path}").collect().map(r => (r.getLong(0), r.getString(1)))
+    val one = sortedTable("sortw-one")
+    assert(shuffleRecords(one.append(input.coalesce(1))) === 0L,
+      "a one-task sorted append must not shuffle")
+    val ranged = sortedTable("sortw-range")
+    assert(shuffleRecords(ranged.append(input.repartition(3))) > 0L,
+      "precondition: a multi-task sorted append takes the range shuffle")
+    assert(one.current.files.size === 1 && ranged.current.files.size > 1)
+    // the range path's files, in key-range order, hold the rows in the
+    // one-task file's order: the input sorted by key
+    val rangedRows = ranged.current.files.sortBy(_.stats("k").min.toLong)
+      .flatMap(fileRows(ranged, _))
+    val oneRows = fileRows(one, one.current.files.head).toSeq
+    assert(oneRows === rangedRows)
+    assert(oneRows.map(_._1) === (0L until 300L))
+  }
+
   test("ClaimCommitLock (object-store impl): exclusion, double-claim settle, stale-break, holder-only release") {
     // object-store schemes select the claim-and-verify lock; exercise
     // the protocol directly against a local MetaIO (same primitives)

@@ -64,4 +64,17 @@ class SourceGuardSpec extends AnyFunSuite {
         "open footers through GraftTable.openFooter instead: " +
         oneArg.map { case (p, args) => s"$p: open($args)" }.mkString("; "))
   }
+
+  test("toRdd.getNumPartitions is asked in one place: the writer's one-task check") {
+    val call = "toRdd.getNumPartitions"
+    val hits = mainSources.flatMap { p =>
+      val src = new String(Files.readAllBytes(p), "UTF-8")
+      Iterator.iterate(src.indexOf(call))(i => src.indexOf(call, i + 1))
+        .takeWhile(_ >= 0).map(_ => p.getFileName.toString).toSeq
+    }
+    assert(hits === Seq("GraftTable.scala"),
+      s"$call builds the physical plan's RDD (and runs an adaptive plan's " +
+        "shuffle stages) to count tasks; ask it once, in GraftTable.writeFiles, " +
+        s"and let sorted writes decide there: found in ${hits.mkString(", ")}")
+  }
 }

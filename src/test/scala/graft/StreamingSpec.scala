@@ -150,9 +150,10 @@ class StreamingSpec extends SparkSpec {
     // interleaved appends, dv deletes, and index syncs
     assert(corpus.current.files.size <= 8,
       s"corpus files unbounded: ${corpus.current.files.size}")
-    // codes is partitioned by cluster, so the compaction bound is
-    // PER-PARTITION (min-files=4 steady state, plus the tail appended
-    // since the last pack)
+    // codes keeps its lists in one cluster-sorted partition, so the
+    // per-partition compaction bound is the table-wide one (min-files=4
+    // steady state, plus the tail appended since the last pack); an
+    // index in the earlier cluster-partitioned layout is bounded per list
     val codesPerPart = codesT.current.files.groupBy(_.partition).values.map(_.size)
     assert(codesPerPart.max <= 8,
       s"codes per-partition files unbounded: ${codesPerPart.toSeq.sorted.reverse.take(3)}")
