@@ -133,14 +133,19 @@ final class GraftTable(val root: String, spark: SparkSession) {
     try f finally commitLock.release()
   }
 
-  /** Non-commutative commit (overwrite / DML / compaction / rollback):
-    * inside the lock, verify the table has not moved since the writer
-    * computed its file set (compare-and-swap on the parent id) — a
-    * concurrent append landing in between would otherwise be silently
-    * dropped from the new snapshot's file list.
+  /** Non-commutative commit (overwrite / DML / compaction / rollback,
+    * and the creating commit): inside the lock, verify the table has
+    * not moved since the writer computed its file set (compare-and-swap
+    * on the parent id) — a concurrent append landing in between would
+    * otherwise be silently dropped from the new snapshot's file list.
+    * Every snapshot reaches it through one of two doors:
+    * [[commitNext]] builds a verb's successor of the snapshot it read,
+    * and [[commitCreate]] a table's first snapshot. The append-shaped
+    * commits take [[appendOnto]] instead, which rebases rather than
+    * refusing a moved table.
     */
-  private[lake] def commit(s0: Snapshot): Unit = {
-    withCommitLock {
+  private def commit(s0: Snapshot): Unit = {
+    val s = withCommitLock {
       // no version hint yet = the creating commit (parentId -1)
       val cur = if (hasCurrent) currentId else -1L
       if (cur != s0.parentId)
@@ -153,8 +158,79 @@ final class GraftTable(val root: String, spark: SparkSession) {
         s0.copy(id = math.max(s0.id, snapshotIds.max) + 1) else s0
       stage(s)
       publishGuarded(s.id, s0.parentId)
+      s
     }
-    autoExpire() // outside the lock: expire re-acquires it for the tag ledger
+    autoExpire(s) // outside the lock: expire re-acquires it for the tag ledger
+  }
+
+  /** The one successor constructor: `base`'s next snapshot, with the
+    * id, parent, timestamp and operation set and no files counted as
+    * added or deleted. Every other field carries over from `base`, so
+    * properties, schema and spec persist unless a verb changes them.
+    */
+  private def successor(base: Snapshot, op: String): Snapshot =
+    base.copy(id = base.id + 1, parentId = base.id, tsMillis = nextTs(base),
+      operation = op, addedFiles = 0, deletedFiles = 0)
+
+  /** Commit `cur`'s successor with the verb's delta applied, where
+    * `cur` is the snapshot the verb computed against (never re-read
+    * here: the compare-and-swap in [[commit]] is against it). Returns
+    * this table.
+    */
+  private def commitNext(cur: Snapshot, op: String)(delta: Snapshot => Snapshot): GraftTable = {
+    commit(delta(successor(cur, op)))
+    this
+  }
+
+  /** The creating commit: a table's first snapshot, with no parent.
+    * `id` is 1 for a new table; a clone or an import keeps its source
+    * snapshot's id, so every inherited `addedBy` and equality-delete
+    * stamp stays below any id the new table allocates.
+    */
+  private[lake] def commitCreate(id: Long, op: String, schemaJson: String,
+      partitionCols: Seq[String], deps: Seq[DepSpec], files: Seq[FileEntry],
+      addedFiles: Int, deleteFiles: Seq[DeleteFileEntry] = Seq.empty,
+      properties: Map[String, String] = Map.empty): GraftTable = {
+    commit(Snapshot(id = id, parentId = -1L, tsMillis = System.currentTimeMillis(),
+      operation = op, schemaJson = schemaJson, partitionCols = partitionCols,
+      deps = deps, files = files, addedFiles = addedFiles, deletedFiles = 0,
+      properties = properties, deleteFiles = deleteFiles))
+    this
+  }
+
+  /** The append-shaped commit behind [[commitAppend]], [[appendBatch]]
+    * and [[publishCherryPick]], run under the commit lock: `delta` lands
+    * on `cur`, the current snapshot read under the same lock, with the
+    * next free id (a parked staged snapshot may hold `cur.id + 1`).
+    * Appends commute, so a table that moved since the files were
+    * written is rebased onto, never refused. The caller runs
+    * [[autoExpire]] on the result once the lock is released.
+    */
+  private def appendOnto(cur: Snapshot, op: String, delta: Seq[FileEntry],
+      properties: Map[String, String]): Snapshot = {
+    val next = successor(cur, op).copy(id = math.max(cur.id, snapshotIds.max) + 1,
+      files = cur.files ++ delta, addedFiles = delta.size, properties = properties)
+    stage(next, Some(delta.iterator.map(_.partition).toSet))
+    publishGuarded(next.id, cur.id)
+    next
+  }
+
+  /** Stage `added` onto `base` without moving any pointer (the
+    * write-audit-publish stage and a branch append). Staging takes no
+    * table-wide id reservation, so on a collision with a concurrent
+    * stager or committer it steps to the next free id — gaps are fine,
+    * ids are not dense. Returns the staged id.
+    */
+  private def stageOnto(base: Snapshot, op: String, added: Seq[FileEntry]): Long = {
+    val next = successor(base, op).copy(files = base.files ++ added, addedFiles = added.size)
+    val parts = Some(added.iterator.map(_.partition).toSet)
+    var nid = math.max(base.id, snapshotIds.max) + 1
+    var staged = false
+    while (!staged) {
+      try { stage(next.copy(id = nid), parts); staged = true }
+      catch { case _: java.util.ConcurrentModificationException => nid += 1 }
+    }
+    nid
   }
 
   /** Retention policy (A78): `history.keep.max-snapshots` = N makes
@@ -164,10 +240,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * maintenance job. A commit a minute for a year is half a million
     * manifests; with the dial it is N, forever, and expiration cost is
     * O(expired batch), amortized to O(1) snapshots per commit once in
-    * steady state.
+    * steady state. The dial is read from the snapshot just committed.
     */
-  private def autoExpire(): Unit = {
-    val keep = current.properties.get(GraftTable.MaxSnapshotsProp)
+  private def autoExpire(committed: Snapshot): Unit = {
+    val keep = committed.properties.get(GraftTable.MaxSnapshotsProp)
       .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ >= 1)
     keep.foreach { n =>
       val ids = snapshotIds.sorted
@@ -384,37 +460,35 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * it would resurrect deleted data). Returns the published id (a new
     * one when a rebase happened).
     */
-  def publishCherryPick(id: Long): Long = withCommitLock {
-    require(io.exists(s"snapshot-$id.json"),
-      s"no staged snapshot $id under $root")
-    val staged = snapshot(id)
-    val cur = current
-    if (id == cur.id) id
-    else if (staged.parentId == cur.id) { publishGuarded(id, cur.id); id }
-    else {
-      val parentPaths = snapshot(staged.parentId).files.map(_.path).toSet
-      // APPEND-SHAPED structurally, whatever the operation label says
-      // (tagged transaction members carry their batch tag as the op):
-      // rebase is sound iff the snapshot only ADDS files vs its parent
-      require(staged.deletedFiles == 0 &&
-          parentPaths.subsetOf(staged.files.iterator.map(_.path).toSet),
-        s"cherry-pick supports append-shaped snapshots only; $id " +
-          s"('${staged.operation}') removes files")
-      // Reset the rebased delta's addedBy to pending: the files carry the
-      // parked STAGED id, which is <= the live current id whenever a rebase
-      // is needed, so incremental/streaming readers filtering
-      // `addedBy > startId` would silently never emit them. stage() below
-      // re-stamps pending files with the NEW published id.
-      val delta = staged.files.filterNot(f => parentPaths.contains(f.path))
-        .map(_.copy(addedBy = GraftTable.PendingAddedBy))
-      val next = cur.copy(
-        id = math.max(cur.id, snapshotIds.max) + 1, parentId = cur.id,
-        tsMillis = nextTs(Some(cur)), operation = staged.operation,
-        files = cur.files ++ delta, addedFiles = delta.size, deletedFiles = 0)
-      stage(next, Some(delta.iterator.map(_.partition).toSet))
-      publishGuarded(next.id, cur.id)
-      next.id
+  def publishCherryPick(id: Long): Long = {
+    val rebased = withCommitLock {
+      require(io.exists(s"snapshot-$id.json"),
+        s"no staged snapshot $id under $root")
+      val staged = snapshot(id)
+      val cur = current
+      if (id == cur.id) None
+      else if (staged.parentId == cur.id) { publishGuarded(id, cur.id); None }
+      else {
+        val parentPaths = snapshot(staged.parentId).files.map(_.path).toSet
+        // APPEND-SHAPED structurally, whatever the operation label says
+        // (tagged transaction members carry their batch tag as the op):
+        // rebase is sound iff the snapshot only ADDS files vs its parent
+        require(staged.deletedFiles == 0 &&
+            parentPaths.subsetOf(staged.files.iterator.map(_.path).toSet),
+          s"cherry-pick supports append-shaped snapshots only; $id " +
+            s"('${staged.operation}') removes files")
+        // Reset the rebased delta's addedBy to pending: the files carry the
+        // parked STAGED id, which is <= the live current id whenever a rebase
+        // is needed, so incremental/streaming readers filtering
+        // `addedBy > startId` would silently never emit them. stage()
+        // re-stamps pending files with the NEW published id.
+        val delta = staged.files.filterNot(f => parentPaths.contains(f.path))
+          .map(_.copy(addedBy = GraftTable.PendingAddedBy))
+        Some(appendOnto(cur, staged.operation, delta, cur.properties))
+      }
     }
+    rebased.foreach(autoExpire)
+    rebased.fold(id)(_.id)
   }
 
   /** Write-audit-publish: stage an append as a new snapshot WITHOUT
@@ -425,23 +499,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   def stageAppend(df: DataFrame, op: String = "append"): Long = {
     val cur = current
-    val added = writeFiles(df, cur.partitionCols, cur.deps, cur.id + 1)
-    // staging does not take the commit lock (it never moves the
-    // pointer); on an id collision with a concurrent stager/committer
-    // just step to the next free id — gaps are fine, ids are not dense
-    var nid = math.max(cur.id, snapshotIds.max) + 1
-    var staged = false
-    while (!staged) {
-      try {
-        stage(cur.copy(
-          id = nid, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-          operation = op, files = cur.files ++ added,
-          addedFiles = added.size, deletedFiles = 0),
-          Some(added.iterator.map(_.partition).toSet))
-        staged = true
-      } catch { case _: java.util.ConcurrentModificationException => nid += 1 }
-    }
-    nid
+    // staging does not take the commit lock: it never moves the pointer
+    stageOnto(cur, op, writeFiles(df, cur.partitionCols, cur.deps, cur.id + 1))
   }
 
   /** Batch tags consumed by [[appendBatch]] — the durable exactly-once
@@ -530,21 +589,17 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val committed = withCommitLock {
       // re-check inside the lock: a concurrent writer replaying the
       // same tag may have committed since the fast-path check above
-      if (consumedTags.contains(batchTag)) false
+      if (consumedTags.contains(batchTag)) None
       else {
         val c = current
-        val next = c.copy(
-          id = math.max(c.id, snapshotIds.max) + 1, parentId = c.id,
-          tsMillis = nextTs(Some(c)), operation = batchTag,
-          files = c.files ++ added, addedFiles = added.size, deletedFiles = 0,
-          properties = GraftTable.mergeNdvProps(c.properties, ndvDelta))
-        stage(next, Some(added.iterator.map(_.partition).toSet))
-        publishGuarded(next.id, c.id)
+        val next = appendOnto(c, batchTag, added,
+          GraftTable.mergeNdvProps(c.properties, ndvDelta))
         recordTag(batchTag)
-        true
+        Some(next)
       }
     }
-    if (!committed) {
+    committed.foreach(autoExpire)
+    if (committed.isEmpty) {
       // lost the race: this batch's files are orphans. Delete through the
       // Hadoop FS resolved from the table root (matching writeFiles'
       // staging cleanup) — java.nio silently no-ops on object stores.
@@ -555,8 +610,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     }
     // the streaming sink is auto-compaction's primary customer: a
     // batch-per-minute stream otherwise accumulates a file per batch
-    if (committed) maybeAutoCompact()
-    committed
+    if (committed.nonEmpty) maybeAutoCompact()
+    committed.nonEmpty
   }
 
   /** Drop a staged-but-unpublished snapshot and its orphaned files. */
@@ -664,19 +719,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     withCommitLock {
       val m = refEntries
       val head = snapshot(m(name)._1) // re-read inside the lock: rebase
-      var nid = math.max(head.id, snapshotIds.max) + 1
-      var staged = false
-      while (!staged) {
-        try {
-          stage(head.copy(
-            id = nid, parentId = head.id, tsMillis = nextTs(Some(head)),
-            operation = "append", files = head.files ++ added,
-            addedFiles = added.size, deletedFiles = 0),
-            Some(added.iterator.map(_.partition).toSet))
-          staged = true
-        } catch { case _: java.util.ConcurrentModificationException => nid += 1 }
-      }
-      writeRefEntries(m + (name -> (nid, true)))
+      writeRefEntries(m + (name -> (stageOnto(head, "append", added), true)))
     }
     this
   }
@@ -708,8 +751,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
   /** Strictly increasing commit timestamps even within one millisecond
     * (time travel by timestamp must totally order snapshots).
     */
-  private def nextTs(parent: Option[Snapshot]): Long =
-    math.max(System.currentTimeMillis(), parent.map(_.tsMillis + 1).getOrElse(0L))
+  private def nextTs(parent: Snapshot): Long =
+    math.max(System.currentTimeMillis(), parent.tsMillis + 1)
 
   def schema: StructType = DataType.fromJson(current.schemaJson).asInstanceOf[StructType]
 
@@ -1019,16 +1062,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
       // sketch MERGE happens inside the lock against the latest
       // properties (two concurrent appends must both land their delta);
       // it is a driver-side union of kilobyte sketches, not a data pass
-      val next = cur.copy(
-        id = math.max(cur.id, snapshotIds.max) + 1, parentId = cur.id,
-        tsMillis = nextTs(Some(cur)), operation = op,
-        files = cur.files ++ added, addedFiles = added.size, deletedFiles = 0,
-        properties = GraftTable.mergeNdvProps(cur.properties, ndvDelta) ++ extraProps)
-      stage(next, Some(added.iterator.map(_.partition).toSet))
-      publishGuarded(next.id, cur.id)
-      next
+      appendOnto(cur, op, added,
+        GraftTable.mergeNdvProps(cur.properties, ndvDelta) ++ extraProps)
     }
-    autoExpire() // outside the lock, same as commit()
+    autoExpire(committed) // outside the lock, same as commit()
     committed
   }
 
@@ -1133,13 +1170,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
       else GraftTable.mergeNdvProps(
         cur.properties.filterNot(kv => kv._1.startsWith("stats.hll.") ||
           kv._1.startsWith("stats.ndv.")), ndvFromObs(obs))
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "overwrite", files = added,
+    commitNext(cur, "overwrite")(_.copy(files = added,
       addedFiles = added.size, deletedFiles = cur.files.size,
       deleteFiles = Seq.empty, // every deletable row was replaced
       properties = props))
-    this
   }
 
   /** INSERT OVERWRITE PARTITION (static single-partition overwrite —
@@ -1157,12 +1191,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
       s"rows outside target partition $partSpec: ${badNew.map(_.partition)}")
     val (dropped, kept) = cur.files.partition(
       f => partSpec.forall(kv => f.partition.get(kv._1).contains(kv._2)))
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "overwrite-partition", files = kept ++ added,
+    commitNext(cur, "overwrite-partition")(_.copy(files = kept ++ added,
       addedFiles = added.size, deletedFiles = dropped.size,
       properties = GraftTable.mergeNdvProps(cur.properties, ndvFromObs(obs))))
-    this
   }
 
   /** Dynamic partition overwrite: replace exactly the partitions
@@ -1176,12 +1207,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val added = writeFiles(dfObs, cur.partitionCols, cur.deps, cur.id + 1)
     val touched = added.map(_.partition).toSet
     val (dropped, kept) = cur.files.partition(f => touched.contains(f.partition))
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "overwrite-dynamic", files = kept ++ added,
+    commitNext(cur, "overwrite-dynamic")(_.copy(files = kept ++ added,
       addedFiles = added.size, deletedFiles = dropped.size,
       properties = GraftTable.mergeNdvProps(cur.properties, ndvFromObs(obs))))
-    this
   }
 
   import GraftTable.{Assigned, ByKeys, ByPredicate, PostImage, Removed, RowMatch, WholeSource}
@@ -1225,10 +1253,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
     *  - commits ONE snapshot with `extraProps` riding it. A verb with
     *    `commitEmpty = false` (mergeDelete, run per stream micro-batch)
     *    commits only the properties, if any, when nothing was removed.
-    * Source keys are projected once. The key-bounds agg reads them
-    * unpersisted; the copy-on-write and vector paths persist them only
-    * once a candidate file exists, so a keyed verb that can match no
-    * file runs the bounds agg alone. The equality path reads them once.
+    * Source keys are projected once and never persisted: the
+    * key-bounds agg and the one join (or the equality-delete write)
+    * each read them once, so a cache would cost its materialization
+    * job and buy no reuse.
     */
   private def rowLevel(op: String, modeProp: String, hit: RowMatch, post: PostImage,
       extraProps: Map[String, String] = Map.empty,
@@ -1238,13 +1266,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val props = cur.properties
     val sch = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     def commitWith(operation: String, files: Seq[FileEntry], added: Int, deleted: Int,
-        deleteFiles: Seq[DeleteFileEntry] = cur.deleteFiles): GraftTable = {
-      commit(cur.copy(
-        id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-        operation = operation, files = files, addedFiles = added, deletedFiles = deleted,
-        deleteFiles = deleteFiles, properties = props ++ extraProps))
-      this
-    }
+        deleteFiles: Seq[DeleteFileEntry] = cur.deleteFiles): GraftTable =
+      commitNext(cur, operation)(_.copy(files = files, addedFiles = added,
+        deletedFiles = deleted, deleteFiles = deleteFiles, properties = props ++ extraProps))
     def unchanged: GraftTable =
       if (extraProps.isEmpty) this else commitWith("set-properties", cur.files, 0, 0)
 
@@ -1297,66 +1321,62 @@ final class GraftTable(val root: String, spark: SparkSession) {
       case ByPredicate(pred) => pruneFiles(pred)._1
       case ByKeys(_, keyCols) => sourceKeyCandidates(srcKeys, keyCols)
     }
-    val keysCached = !equality && keys.isDefined && cands.nonEmpty
-    if (keysCached) srcKeys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (!mor) {
-        if (cands.isEmpty && !commitEmpty) return unchanged
-        val scan = readSnapshot(cur.copy(files = cands, shards = Seq.empty))
-        val rewritten = hit match {
-          case ByPredicate(pred) => post match {
-            case Assigned(set) => assign(scan, set, Some(pred <=> lit(true)))
-            case _ => scan.filter(!(pred <=> lit(true)))
-          }
-          case ByKeys(source, keyCols) =>
-            // the USING join puts the keys first: restore the column order
-            val kept = scan.join(srcKeys, keyCols, "left_anti")
-            if (post == WholeSource) kept.select(source.columns.map(col): _*).unionByName(source)
-            else kept.select(sch.fieldNames.toSeq.filterNot(depDests.contains).map(col): _*)
+    if (!mor) {
+      if (cands.isEmpty && !commitEmpty) return unchanged
+      val scan = readSnapshot(cur.copy(files = cands, shards = Seq.empty))
+      val rewritten = hit match {
+        case ByPredicate(pred) => post match {
+          case Assigned(set) => assign(scan, set, Some(pred <=> lit(true)))
+          case _ => scan.filter(!(pred <=> lit(true)))
         }
-        val added = if (cands.isEmpty && post != WholeSource) Seq.empty else write(rewritten)
-        val candPaths = cands.map(_.path).toSet
-        commitWith(op, cur.files.filterNot(f => candPaths.contains(f.path)) ++ added,
-          added.size, cands.size)
-      } else {
-        val (deleteFiles, removed, images) =
-          if (equality) {
-            // the key projection's columns are the key columns
-            val dels = writeEqDeleteFiles(srcKeys, srcKeys.columns.toSeq, cur.id + 1)
-            (cur.deleteFiles ++ dels, dels.nonEmpty, Seq.empty[FileEntry])
-          } else if (cands.isEmpty) (cur.deleteFiles, false, Seq.empty[FileEntry])
-          else {
-            val live = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
-            val hits = hit match {
-              case ByPredicate(pred) => live.filter(pred <=> lit(true))
-              case ByKeys(_, keyCols) =>
-                live.join(sourceKeysHinted(props, srcKeys), keyCols, "left_semi")
-            }
-            // an UPDATE reads its hits twice (coordinates, post-images):
-            // persist so the candidate scan and predicate run once
-            val twice = post.isInstanceOf[Assigned]
-            if (twice) hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val (dvOld, other) = cur.deleteFiles.partition(_.dv)
-              val (dvList, any) = mergedDvEntries(
-                hits.select(col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index")),
-                cur.id + 1, dvOld)
-              val images = post match {
-                // every row here is a hit, so SET applies unconditionally
-                case Assigned(set) if any => write(assign(hits.drop(PosFileCol, PosIdxCol), set, None))
-                case _ => Seq.empty[FileEntry]
-              }
-              (if (any) other ++ dvList else cur.deleteFiles, any, images)
-            } finally if (twice) hits.unpersist()
-          }
-        if (!removed && !commitEmpty) return unchanged
-        val added = (hit, post) match {
-          case (ByKeys(source, _), WholeSource) => write(source)
-          case _ => images
-        }
-        commitWith(op, cur.files ++ added, added.size, 0, deleteFiles)
+        case ByKeys(source, keyCols) =>
+          // the USING join puts the keys first: restore the column order
+          val kept = scan.join(srcKeys, keyCols, "left_anti")
+          if (post == WholeSource) kept.select(source.columns.map(col): _*).unionByName(source)
+          else kept.select(sch.fieldNames.toSeq.filterNot(depDests.contains).map(col): _*)
       }
-    } finally if (keysCached) srcKeys.unpersist(blocking = false)
+      val added = if (cands.isEmpty && post != WholeSource) Seq.empty else write(rewritten)
+      val candPaths = cands.map(_.path).toSet
+      commitWith(op, cur.files.filterNot(f => candPaths.contains(f.path)) ++ added,
+        added.size, cands.size)
+    } else {
+      val (deleteFiles, removed, images) =
+        if (equality) {
+          // the key projection's columns are the key columns
+          val dels = writeEqDeleteFiles(srcKeys, srcKeys.columns.toSeq, cur.id + 1)
+          (cur.deleteFiles ++ dels, dels.nonEmpty, Seq.empty[FileEntry])
+        } else if (cands.isEmpty) (cur.deleteFiles, false, Seq.empty[FileEntry])
+        else {
+          val live = readSnapshotPos(cur.copy(files = cands, shards = Seq.empty))
+          val hits = hit match {
+            case ByPredicate(pred) => live.filter(pred <=> lit(true))
+            case ByKeys(_, keyCols) =>
+              live.join(sourceKeysHinted(props, srcKeys), keyCols, "left_semi")
+          }
+          // an UPDATE reads its hits twice (coordinates, post-images):
+          // persist so the candidate scan and predicate run once
+          val twice = post.isInstanceOf[Assigned]
+          if (twice) hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val (dvOld, other) = cur.deleteFiles.partition(_.dv)
+            val (dvList, any) = mergedDvEntries(
+              hits.select(col(PosFileCol).as("file_name"), col(PosIdxCol).as("row_index")),
+              cur.id + 1, dvOld)
+            val images = post match {
+              // every row here is a hit, so SET applies unconditionally
+              case Assigned(set) if any => write(assign(hits.drop(PosFileCol, PosIdxCol), set, None))
+              case _ => Seq.empty[FileEntry]
+            }
+            (if (any) other ++ dvList else cur.deleteFiles, any, images)
+          } finally if (twice) hits.unpersist()
+        }
+      if (!removed && !commitEmpty) return unchanged
+      val added = (hit, post) match {
+        case (ByKeys(source, _), WholeSource) => write(source)
+        case _ => images
+      }
+      commitWith(op, cur.files ++ added, added.size, 0, deleteFiles)
+    }
   }
 
   /** Candidate files whose key min/max range overlaps the source's key
@@ -1394,12 +1414,11 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * (10 % of a 100 TB table), and an unconditional hint would force
     * the driver to materialize it on every such write. The size
     * estimate is the optimizer's own (`stats.sizeInBytes`). In
-    * [[rowLevel]] the key frame's cache is not built yet when this
-    * runs (the key-bounds agg read the frame unpersisted), so the
-    * estimate is the plan's — exact for a local source, derived from
-    * the file size for a file source; no filter shrinks it, so a
-    * doubtful estimate errs toward the shuffled join. A materialized
-    * cache answers with its actual size.
+    * [[rowLevel]] the key frame is never cached, so the estimate is
+    * the plan's — exact for a local source, derived from the file size
+    * for a file source; no filter shrinks it, so a doubtful estimate
+    * errs toward the shuffled join. A materialized cache answers with
+    * its actual size.
     */
   private[graft] def sourceKeysHinted(props: Map[String, String], srcKeys: DataFrame): DataFrame = {
     val limit = props.get(GraftTable.DeleteBroadcastProp).map(_.toLong)
@@ -1433,12 +1452,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val (dvOld, eqDels) = cur.deleteFiles.filterNot(posDels.contains)
       .partition(_.dv)
     val (dvList, _) = mergedDvEntries(hits, cur.id + 1, dvOld)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "convert-deletes", files = cur.files,
-      addedFiles = 0, deletedFiles = 0,
-      deleteFiles = eqDels ++ dvList))
-    this
+    commitNext(cur, "convert-deletes")(_.copy(deleteFiles = eqDels ++ dvList))
   }
 
   /** The commit kernel of every merge-on-read coordinate delete
@@ -1629,12 +1643,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val added =
       if (cands.isEmpty) Seq.empty
       else writeFiles(survivors, cur.partitionCols, cur.deps, cur.id + 1)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "apply-deletes", files = kept ++ added,
-      addedFiles = added.size, deletedFiles = cands.size,
-      deleteFiles = Seq.empty))
-    this
+    commitNext(cur, "apply-deletes")(_.copy(files = kept ++ added,
+      addedFiles = added.size, deletedFiles = cands.size, deleteFiles = Seq.empty))
   }
 
   /** TRUNCATE — drop every file from the manifest; O(metadata), no
@@ -1643,12 +1653,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   def truncate(): GraftTable = {
     val cur = current
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "truncate", files = Seq.empty,
-      addedFiles = 0, deletedFiles = cur.files.size,
-      deleteFiles = Seq.empty))
-    this
+    commitNext(cur, "truncate")(_.copy(files = Seq.empty,
+      deletedFiles = cur.files.size, deleteFiles = Seq.empty))
   }
 
   /** REPLACE TABLE … AS SELECT (RTAS): atomically swap the table's
@@ -1675,15 +1681,12 @@ final class GraftTable(val root: String, spark: SparkSession) {
     }
     val files = writeFiles(df, partitionCols, deps, snapId = cur.id + 1,
       replacing = true)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "replace", schemaJson = withDeps.schema.json,
+    commitNext(cur, "replace")(_.copy(schemaJson = withDeps.schema.json,
       partitionCols = partitionCols, deps = deps, files = files,
       addedFiles = files.size, deletedFiles = cur.files.size,
-      deleteFiles = Seq.empty, shards = Seq.empty,
+      deleteFiles = Seq.empty,
       properties = cur.properties
         .filterNot(_._1.startsWith(GraftTable.CheckPropPrefix))))
-    this
   }
 
   /** UPDATE … SET … WHERE `pred`. Every SET expression and the
@@ -1746,18 +1749,16 @@ final class GraftTable(val root: String, spark: SparkSession) {
       if (newPartitionCols.isEmpty) withDeps
       else withDeps.repartition(newPartitionCols.map(col): _*)
     val added = writeFiles(data, newPartitionCols, newDeps, cur.id + 1)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "repartition-spec", partitionCols = newPartitionCols,
+    commitNext(cur, "repartition-spec")(_.copy(partitionCols = newPartitionCols,
       deps = newDeps, schemaJson = data.schema.json, files = added,
       addedFiles = added.size, deletedFiles = cur.files.size,
       deleteFiles = Seq.empty)) // full rewrite read through (and applied) pending deletes
-    this
   }
 
   /** Table properties (TBLPROPERTIES equivalent). Every commit builds
-    * on `cur.copy(…)`, so properties persist across snapshots without
-    * any path having to thread them. Write-affecting keys:
+    * its snapshot as the successor of the one it read ([[successor]]),
+    * so properties persist across snapshots without any verb having to
+    * thread them. Write-affecting keys:
     *  - `write.bloom.columns` = comma-separated columns that get a
     *    parquet bloom filter in every NEW data file ([[writeFiles]]).
     *    Point predicates on high-cardinality non-partition keys then
@@ -1776,12 +1777,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   def setProperties(kvs: Map[String, String]): GraftTable = {
     val cur = current
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "set-properties",
-      properties = cur.properties ++ kvs,
-      addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "set-properties")(_.copy(properties = cur.properties ++ kvs))
   }
 
   def unsetProperty(key: String): GraftTable = unsetProperties(Seq(key))
@@ -1793,12 +1789,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   def unsetProperties(keys: Seq[String]): GraftTable = {
     val cur = current
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "set-properties",
-      properties = cur.properties -- keys,
-      addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "set-properties")(_.copy(properties = cur.properties -- keys))
   }
 
   /** CHECK constraint DDL (A73, Delta `ALTER TABLE ADD CONSTRAINT`
@@ -1854,11 +1845,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
   def addColumn(name: String, dt: DataType): GraftTable = {
     val cur = current
     val newSchema = StructType(schema.fields :+ StructField(name, dt, nullable = true))
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "add-column", schemaJson = newSchema.json,
-      addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "add-column")(_.copy(schemaJson = newSchema.json))
   }
 
   /** ALTER TABLE … ADD COLUMN … DEFAULT — metadata-only add with an
@@ -1893,11 +1880,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
       .build()
     val newSchema = StructType(
       schema.fields :+ StructField(name, dt, nullable = true, md))
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "add-column", schemaJson = newSchema.json,
-      addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "add-column")(_.copy(schemaJson = newSchema.json))
   }
 
   /** ALTER TABLE … DROP COLUMN — metadata-only: the column vanishes
@@ -1920,17 +1903,13 @@ final class GraftTable(val root: String, spark: SparkSession) {
     requireNoCheckReference(cur, name, "drop")
     val remaining = StructType(sch.fields.filterNot(_.name == name))
     require(remaining.nonEmpty, "cannot drop the last column")
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "drop-column", schemaJson = remaining.json,
+    commitNext(cur, "drop-column")(_.copy(schemaJson = remaining.json,
       // per-column properties go WITH the column — a stale notnull.<col>
       // bricks every later write ("batch omits the column"), a stale
       // stats.ndv/hll poisons a re-added same-name column, a stale
       // comment ghosts through DESCRIBE
       properties = GraftTable.ColumnPropPrefixes
-        .foldLeft(cur.properties)((ps, p) => ps - (p + name)),
-      addedFiles = 0, deletedFiles = 0))
-    this
+        .foldLeft(cur.properties)((ps, p) => ps - (p + name))))
   }
 
   /** Refuse a column DDL when any `check.*` predicate references the
@@ -2003,11 +1982,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
           case None    => ps
         }
       }
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "rename-column", schemaJson = StructType(fields).json,
-      properties = props, addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "rename-column")(_.copy(schemaJson = StructType(fields).json,
+      properties = props))
   }
 
   /** ALTER TABLE … ALTER COLUMN … TYPE — metadata-only type WIDENING:
@@ -2045,11 +2021,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
       "float->double, decimal precision growth) are metadata-only")
     val fields = sch.fields.map(x =>
       if (x.name == name) StructField(x.name, to, x.nullable, x.metadata) else x)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "widen-column", schemaJson = StructType(fields).json,
-      addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "widen-column")(_.copy(schemaJson = StructType(fields).json))
   }
 
   /** NOT NULL constraints (Delta `ALTER COLUMN … SET/DROP NOT NULL`
@@ -2091,11 +2063,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     // snapshot so time travel sees consistent flag+enforcement state
     val props = if (nullable) cur.properties - propKey
                 else cur.properties + (propKey -> "true")
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "set-nullability", schemaJson = StructType(fields).json,
-      properties = props, addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "set-nullability")(_.copy(schemaJson = StructType(fields).json,
+      properties = props))
   }
 
   /** The compliance proof behind `SET NOT NULL`, commit-free so a
@@ -2171,14 +2140,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val plainProps = plain.zipWithIndex.map { case (c, i) =>
       s"stats.ndv.$c" -> row.getLong(sk.size + i).toString }
     val cur = current
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "analyze",
-      properties = GraftTable.mergeNdvProps(
-        cur.properties -- sk.map(c => s"stats.hll.$c"), // full pass replaces, not merges
-        skBytes) ++ plainProps,
-      addedFiles = 0, deletedFiles = 0))
-    this
+    commitNext(cur, "analyze")(_.copy(properties = GraftTable.mergeNdvProps(
+      cur.properties -- sk.map(c => s"stats.hll.$c"), // full pass replaces, not merges
+      skBytes) ++ plainProps))
   }
 
   /** logical → physical column names (non-identity entries only). */
@@ -2249,12 +2213,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
         cur.deleteFiles.filter(d =>
           d.targets.isEmpty || d.targets.exists(keptBases.contains))
       }
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "optimize", files = kept ++ added,
+    commitNext(cur, "optimize")(_.copy(files = kept ++ added,
       addedFiles = added.size, deletedFiles = scoped.size,
       deleteFiles = remainingDeletes))
-    this
   }
 
   /** Exact partition-scope predicate for maintenance commands: the
@@ -2362,11 +2323,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
       else writeFiles(readSnapshot(cur.copy(files = foldCands, shards = Seq.empty)),
         cur.partitionCols, cur.deps, cur.id + 1)
     val added = packAdded ++ foldAdded
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "compact", files = kept ++ added,
+    commitNext(cur, "compact")(_.copy(files = kept ++ added,
       addedFiles = added.size, deletedFiles = packCands.size + foldCands.size))
-    this
   }
 
   /** FILE-granular small-file packing — the [[maybeAutoCompact]]
@@ -2397,11 +2355,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
       else frag.repartition(math.max(1,
         math.ceil(smallSel.map(_.bytes).sum.toDouble / targetBytes).toInt))
     val added = writeFiles(packed, cur.partitionCols, cur.deps, cur.id + 1)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "compact", files = kept ++ added,
+    commitNext(cur, "compact")(_.copy(files = kept ++ added,
       addedFiles = added.size, deletedFiles = smallSel.size))
-    this
   }
 
   /** Partitions whose pending-delete density crosses the compaction
@@ -2669,14 +2624,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
   def rollback(toId: Long): GraftTable = {
     val cur = current
     val target = snapshot(toId)
-    commit(cur.copy(
-      id = cur.id + 1, parentId = cur.id, tsMillis = nextTs(Some(cur)),
-      operation = "rollback", schemaJson = target.schemaJson, files = target.files,
-      addedFiles = 0, deletedFiles = 0,
+    commitNext(cur, "rollback")(_.copy(schemaJson = target.schemaJson, files = target.files,
       // the target's pending deletes are part of its logical state —
       // carrying CUR's would resurrect (or re-kill) the wrong rows
       deleteFiles = target.deleteFiles))
-    this
   }
 
   /** Expire snapshots with id < keepFrom (current always retained).
@@ -2760,8 +2711,6 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   def cloneTo(destRoot: String, deep: Boolean): GraftTable = {
     val cur = current
-    val destP = new HPath(destRoot)
-    val hfs = destP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the shallow clone's entries must pass isAbsoluteEntry or they'd
     // silently resolve under the CLONE's root — qualify a relative
     // source root (e.g. a cwd-relative test dir) before building them
@@ -2771,10 +2720,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
       else rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .makeQualified(rp).toString
     }
-    if (hfs.exists(destP)) hfs.delete(destP, true)
-    GraftTable.invalidate(destRoot)
-    hfs.mkdirs(destP)
-    val t = new GraftTable(destRoot, spark)
+    val t = GraftTable.wiped(spark, destRoot)
     // the dest-relative path of an entry: relative entries keep their
     // layout (hive dirs, bucket-id names — the BucketSpec claim
     // survives a deep clone); absolute entries (cloning a clone)
@@ -2809,16 +2755,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
         (cur.files.map(f => f.copy(path = rel(f.path))),
           cur.deleteFiles.map(d => d.copy(path = rel(d.path))))
       }
-    t.commit(cur.copy(
-      parentId = -1L,
-      tsMillis = System.currentTimeMillis(),
-      operation = "clone",
-      files = files,
-      deleteFiles = dels,
-      shards = Seq.empty, // source shards are source-owned metadata
-      properties = cur.properties + ("clone.source" -> s"$srcRoot@${cur.id}"),
-      addedFiles = 0, deletedFiles = 0))
-    t
+    t.commitCreate(cur.id, "clone", cur.schemaJson, cur.partitionCols, cur.deps,
+      files, addedFiles = 0, dels,
+      cur.properties + ("clone.source" -> s"$srcRoot@${cur.id}"))
   }
 
   /** Remove UNREFERENCED files — the leak class [[expire]] cannot see:
@@ -3574,16 +3513,18 @@ object GraftTable {
     }
   }
 
-  /** Operations emitted by graft's own DML — anything else in a
+  /** Every operation graft itself writes — anything else in a
     * snapshot's `operation` field is a user batch tag (see
-    * [[GraftTable.appendBatch]]).
+    * [[GraftTable.appendBatch]]), which [[GraftTable.expire]] and the
+    * ledger seeding record as consumed.
     */
   private[lake] val StandardOps: Set[String] = Set(
     "create", "append", "overwrite", "overwrite-partition",
     "overwrite-dynamic", "delete", "truncate", "update", "merge",
     "merge-delete", "repartition-spec", "set-properties", "add-column",
     "drop-column", "rename-column", "widen-column", "set-nullability",
-    "analyze", "optimize", "compact", "rollback", "adopt", "apply-deletes")
+    "analyze", "optimize", "compact", "rollback", "adopt", "apply-deletes",
+    "replace", "clone", "convert-deletes", "iceberg-import")
 
   /** TBLPROPERTIES prefix marking a column NOT NULL (A88): write-time
     * enforcement keys on this, never on bare schema nullability.
@@ -3859,12 +3800,7 @@ object GraftTable {
       spark: SparkSession, root: String, df: DataFrame,
       partitionCols: Seq[String] = Seq.empty,
       deps: Seq[DepSpec] = Seq.empty): GraftTable = {
-    val rootP = new HPath(root)
-    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hfs.exists(rootP)) hfs.delete(rootP, true)
-    invalidate(root)
-    hfs.mkdirs(rootP)
-    val t = new GraftTable(root, spark)
+    val t = wiped(spark, root)
     // resolve the full schema (incl. derived dep columns) by writing
     val withDeps = deps.foldLeft(df) { (d, dep) =>
       if (d.columns.contains(dep.dest)) d
@@ -3872,32 +3808,30 @@ object GraftTable {
         Deps.columnTyped(dep.transform, col(dep.src), d.schema(dep.src).dataType))
     }
     val files = t.writeFiles(df, partitionCols, deps, snapId = 1)
-    t.commit(Snapshot(
-      id = 1, parentId = -1L, tsMillis = System.currentTimeMillis(),
-      operation = "create", schemaJson = withDeps.schema.json,
-      partitionCols = partitionCols, deps = deps, files = files,
-      addedFiles = files.size, deletedFiles = 0))
-    t
+    t.commitCreate(1, "create", withDeps.schema.json, partitionCols, deps, files, files.size)
   }
 
-  /** CREATE TABLE without data: commit snapshot-0 with the declared
+  /** CREATE TABLE without data: commit snapshot 1 with the declared
     * schema and no files (the SQL-DDL entry point; inserts fill it).
     */
   def createEmpty(
       spark: SparkSession, root: String, schema: StructType,
-      partitionCols: Seq[String], deps: Seq[DepSpec]): GraftTable = {
+      partitionCols: Seq[String], deps: Seq[DepSpec]): GraftTable =
+    wiped(spark, root).commitCreate(1, "create", schema.json, partitionCols, deps,
+      Seq.empty, addedFiles = 0)
+
+  /** An empty table at `root`: whatever the root held is deleted and
+    * its cached metadata dropped. Every creating commit but
+    * [[adopt]]'s (which keeps `data/`) starts here, and then commits
+    * through [[GraftTable.commitCreate]].
+    */
+  private[lake] def wiped(spark: SparkSession, root: String): GraftTable = {
     val rootP = new HPath(root)
     val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (hfs.exists(rootP)) hfs.delete(rootP, true)
     invalidate(root)
     hfs.mkdirs(rootP)
-    val t = new GraftTable(root, spark)
-    t.commit(Snapshot(
-      id = 1, parentId = -1L, tsMillis = System.currentTimeMillis(),
-      operation = "create", schemaJson = schema.json,
-      partitionCols = partitionCols, deps = deps, files = Seq.empty,
-      addedFiles = 0, deletedFiles = 0))
-    t
+    new GraftTable(root, spark)
   }
 
   /** Bring pre-existing hive-layout parquet under graft management
@@ -3957,13 +3891,8 @@ object GraftTable {
     val partCols = entries.headOption.map(
       _.path.split('/').drop(1).dropRight(1).filter(_.contains('='))
         .map(_.takeWhile(_ != '=')).toSeq).getOrElse(Seq.empty)
-    val t = new GraftTable(root, spark)
-    t.commit(Snapshot(
-      id = 1, parentId = -1L, tsMillis = System.currentTimeMillis(),
-      operation = "adopt", schemaJson = schema.json,
-      partitionCols = partCols, deps = Seq.empty, files = entries,
-      addedFiles = entries.size, deletedFiles = 0))
-    t
+    new GraftTable(root, spark).commitCreate(1, "adopt", schema.json, partCols,
+      Seq.empty, entries, entries.size)
   }
 
   /** Root-relative form of a path/URI. Both sides are QUALIFIED

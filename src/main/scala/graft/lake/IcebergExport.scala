@@ -723,23 +723,14 @@ object IcebergExport {
           else Seq.empty)
     }
 
-    val destP = new HPath(destRoot)
-    val hfs = destP.getFileSystem(conf)
-    if (hfs.exists(destP)) hfs.delete(destP, true)
-    GraftTable.invalidate(destRoot)
-    hfs.mkdirs(destP)
-    val t = new GraftTable(destRoot, spark)
     // keep the SOURCE snapshot id (like cloneTo) so inherited addedBy /
     // equality-delete sequencing survives the import
-    t.commit(Snapshot(
-      id = curId, parentId = -1L, tsMillis = System.currentTimeMillis(),
-      operation = "iceberg-import", schemaJson = schema.json,
-      partitionCols = partitionCols, deps = deps, files = files,
-      addedFiles = 0, deletedFiles = 0, deleteFiles = deleteFiles,
-      properties = Option(md.get("properties")).map(p =>
+    val t = GraftTable.wiped(spark, destRoot).commitCreate(curId, "iceberg-import",
+      schema.json, partitionCols, deps, files, addedFiles = 0, deleteFiles,
+      Option(md.get("properties")).map(p =>
         p.fieldNames().asScala.map(k => k -> p.get(k).asText()).toMap)
         .getOrElse(Map.empty) +
-        ("import.source" -> metadataPath)))
+        ("import.source" -> metadataPath))
     // named refs: re-create the ones that resolve against the imported
     // snapshot (the import starts a fresh single-snapshot history, so
     // refs at other snapshots have nothing to point at — skipped, like

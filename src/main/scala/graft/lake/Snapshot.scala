@@ -114,7 +114,7 @@ final case class Snapshot(
     id: Long,
     parentId: Long, // -1 = none (plain Long: jackson-scala erases Option[Long] to boxed Int)
     tsMillis: Long,
-    operation: String, // create | append | overwrite | overwrite-partition | overwrite-dynamic | rollback | add-column
+    operation: String, // one of GraftTable.StandardOps, or an appendBatch batch tag
     schemaJson: String,
     partitionCols: Seq[String],
     deps: Seq[DepSpec],
@@ -125,7 +125,8 @@ final case class Snapshot(
     // shards on disk; the loader re-inlines them (see GraftTable)
     shards: Seq[ShardRef] = Seq.empty,
     // table properties (TBLPROPERTIES equivalent); carried forward by
-    // every commit since they all build on cur.copy(…)
+    // every commit, since each builds its snapshot as the successor of
+    // the one it read (GraftTable.successor)
     properties: Map[String, String] = Map.empty,
     // pending merge-on-read position deletes; empty once OPTIMIZE /
     // applyDeletes folds them into rewritten data files

@@ -81,11 +81,10 @@ class DmlJobsSpec extends SparkSpec {
   private val merge = Seq("merge")
   private val mergeDelete = Seq("merge-delete")
 
-  // (case, properties, verb, jobs, committed operations). The equality
-  // rows read their source keys once and persist nothing, so they skip
-  // the cache-materialization job AQE runs for a cached input; the
-  // no-match rows persist nothing either (the keys are cached only once
-  // a candidate file exists), so they run the key-bounds agg alone. A
+  // (case, properties, verb, jobs, committed operations). No keyed row
+  // persists its source keys (the key-bounds agg and the join each read
+  // them once), so none pays the cache-materialization job AQE runs for
+  // a cached input; the no-match rows run the key-bounds agg alone. A
   // change here is a plan change: argue it, do not just re-pin.
   private val cases: Seq[(String, Map[String, String], GraftTable => Unit, Int, Seq[String])] = Seq(
     ("delete-partition", Vectors, _.delete(col("g") === 1L), 0, delete),
@@ -97,14 +96,14 @@ class DmlJobsSpec extends SparkSpec {
     ("update-dv", Vectors, _.update(col("k") <= 5L, Map("v" -> (col("v") + 1.0))), 4, update),
     ("update-cow-nomatch", Cow, _.update(col("k") > 1000L, Map("v" -> lit(0.0))), 0, update),
     ("update-dv-nomatch", Vectors, _.update(col("k") > 1000L, Map("v" -> lit(0.0))), 0, update),
-    ("merge-cow", Cow, _.merge(upsert(), Seq("k")), 5, merge),
-    ("merge-dv", Vectors, _.merge(upsert(), Seq("k")), 7, merge),
+    ("merge-cow", Cow, _.merge(upsert(), Seq("k")), 4, merge),
+    ("merge-dv", Vectors, _.merge(upsert(), Seq("k")), 6, merge),
     ("merge-eq", Equality, _.merge(upsert(), Seq("k")), 3, merge),
-    ("mergeDelete-cow", Cow, _.mergeDelete(doomed(), Seq("k")), 5, mergeDelete),
-    ("mergeDelete-dv", Vectors, _.mergeDelete(doomed(), Seq("k")), 6, mergeDelete),
+    ("mergeDelete-cow", Cow, _.mergeDelete(doomed(), Seq("k")), 4, mergeDelete),
+    ("mergeDelete-dv", Vectors, _.mergeDelete(doomed(), Seq("k")), 5, mergeDelete),
     ("mergeDelete-eq", Equality, _.mergeDelete(doomed(), Seq("k")), 2, mergeDelete),
-    ("mergeDelete-cow-props", Cow, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 5, mergeDelete),
-    ("mergeDelete-dv-props", Vectors, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 6, mergeDelete),
+    ("mergeDelete-cow-props", Cow, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 4, mergeDelete),
+    ("mergeDelete-dv-props", Vectors, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 5, mergeDelete),
     ("mergeDelete-eq-props", Equality, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 2, mergeDelete),
     ("mergeDelete-cow-nomatch", Cow, _.mergeDelete(nothing(), Seq("k")), 2, Seq.empty),
     ("mergeDelete-dv-nomatch", Vectors, _.mergeDelete(nothing(), Seq("k")), 2, Seq.empty),

@@ -40,6 +40,19 @@ class SourceGuardSpec extends AnyFunSuite {
       }.toSeq
   }
 
+  /** (file, enclosing `def`) of every occurrence of `needle` in
+    * `src/main` that is not itself a definition.
+    */
+  private def sitesOf(needle: String): Seq[(String, String)] = mainSources.flatMap { p =>
+    val src = new String(Files.readAllBytes(p), "UTF-8")
+    val defs = """def\s+(\w+)""".r.findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+    Iterator.iterate(src.indexOf(needle))(i => src.indexOf(needle, i + 1))
+      .takeWhile(_ >= 0)
+      .filterNot(i => src.startsWith("def ", i - 4))
+      .map(i => p.getFileName.toString -> defs.takeWhile(_._1 < i).lastOption.fold("")(_._2))
+      .toSeq
+  }
+
   /** Commas outside any nested parentheses: arguments minus one. */
   private def topLevelCommas(args: String): Int =
     args.foldLeft((0, 0)) { case ((depth, n), c) =>
@@ -76,5 +89,17 @@ class SourceGuardSpec extends AnyFunSuite {
       s"$call builds the physical plan's RDD (and runs an adaptive plan's " +
         "shuffle stages) to count tasks; ask it once, in GraftTable.writeFiles, " +
         s"and let sorted writes decide there: found in ${hits.mkString(", ")}")
+  }
+
+  test("one successor path: only successor sets a parent, only commitCreate makes a first snapshot") {
+    assert(sitesOf("nextTs(") === Seq("GraftTable.scala" -> "successor"),
+      "commit timestamps are stamped by GraftTable.successor alone; build the next " +
+        "snapshot with commitNext, appendOnto or stageOnto")
+    assert(sitesOf("parentId = -1L") === Seq("GraftTable.scala" -> "commitCreate"),
+      "a parentless snapshot is a table's first; commit it through GraftTable.commitCreate")
+    assert(sitesOf("parentId = ") ===
+      Seq("GraftTable.scala" -> "successor", "GraftTable.scala" -> "commitCreate"),
+      "snapshot ids, parents and timestamps are set in GraftTable.successor and " +
+        "GraftTable.commitCreate only: a hand-built successor drifts from the others")
   }
 }
