@@ -45,6 +45,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     */
   private[lake] lazy val io = new MetaIO(root, spark.sparkContext.hadoopConfiguration)
   private lazy val commitLock = CommitLock.forRoot(root, io)
+  // the snapshot this thread made current under the commit lock
+  private val madeCurrent = new ThreadLocal[java.lang.Long]
 
   // ---- control plane ------------------------------------------------
 
@@ -125,12 +127,18 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * primitive is per-filesystem (see [[CommitLock]]): POSIX atomic
     * mkdir locally, exclusive-create on HDFS, conditional-PUT /
     * metastore for object stores. Held for one manifest write + one
-    * rename — never during data writes.
+    * rename — never during data writes. A holder that moved the
+    * pointer ([[publishUnlocked]]) gets the retention dial
+    * ([[autoExpire]]) run on the snapshot it made current once the
+    * lock is released: expire re-acquires it for the tag ledger.
     */
   private[lake] def withCommitLock[T](f: => T): T = {
     io.mkdirs()
     commitLock.acquire()
-    try f finally commitLock.release()
+    madeCurrent.remove() // a failed holder's pointer move is not this one's
+    val out = try f finally commitLock.release()
+    Option(madeCurrent.get).foreach { id => madeCurrent.remove(); autoExpire(snapshot(id)) }
+    out
   }
 
   /** Non-commutative commit (overwrite / DML / compaction / rollback,
@@ -144,23 +152,19 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * commits take [[appendOnto]] instead, which rebases rather than
     * refusing a moved table.
     */
-  private def commit(s0: Snapshot): Unit = {
-    val s = withCommitLock {
-      // no version hint yet = the creating commit (parentId -1)
-      val cur = if (hasCurrent) currentId else -1L
-      if (cur != s0.parentId)
-        throw new java.util.ConcurrentModificationException(
-          s"table $root moved to snapshot $cur while this writer computed " +
-            s"against ${s0.parentId}; re-read and retry")
-      // a parked staged (write-audit-publish) snapshot occupying the next
-      // id is NOT a conflict — step over it; ids need not be dense
-      val s = if (io.exists(s"snapshot-${s0.id}.json"))
-        s0.copy(id = math.max(s0.id, snapshotIds.max) + 1) else s0
-      stage(s)
-      publishGuarded(s.id, s0.parentId)
-      s
-    }
-    autoExpire(s) // outside the lock: expire re-acquires it for the tag ledger
+  private def commit(s0: Snapshot): Unit = withCommitLock {
+    // no version hint yet = the creating commit (parentId -1)
+    val cur = if (hasCurrent) currentId else -1L
+    if (cur != s0.parentId)
+      throw new java.util.ConcurrentModificationException(
+        s"table $root moved to snapshot $cur while this writer computed " +
+          s"against ${s0.parentId}; re-read and retry")
+    // a parked staged (write-audit-publish) snapshot occupying the next
+    // id is NOT a conflict — step over it; ids need not be dense
+    val s = if (io.exists(s"snapshot-${s0.id}.json"))
+      s0.copy(id = math.max(s0.id, snapshotIds.max) + 1) else s0
+    stage(s)
+    publishGuarded(s.id, s0.parentId)
   }
 
   /** The one successor constructor: `base`'s next snapshot, with the
@@ -203,8 +207,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * on `cur`, the current snapshot read under the same lock, with the
     * next free id (a parked staged snapshot may hold `cur.id + 1`).
     * Appends commute, so a table that moved since the files were
-    * written is rebased onto, never refused. The caller runs
-    * [[autoExpire]] on the result once the lock is released.
+    * written is rebased onto, never refused.
     */
   private def appendOnto(cur: Snapshot, op: String, delta: Seq[FileEntry],
       properties: Map[String, String]): Snapshot = {
@@ -234,7 +237,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** Retention policy (A78): `history.keep.max-snapshots` = N makes
-    * every commit expire all but the newest N snapshots (ref-pinned
+    * every pointer move expire all but the newest N snapshots (ref-pinned
     * ones and the current survive, exactly as in [[expire]]) — bounded
     * metadata on high-frequency writers without a scheduled
     * maintenance job. A commit a minute for a year is half a million
@@ -425,6 +428,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     require(io.exists(s"snapshot-$id.json"),
       s"no staged snapshot $id under $root")
     io.writeAtomic(GraftTable.HintName, id.toString.getBytes(StandardCharsets.UTF_8))
+    madeCurrent.set(id)
     // still under the commit lock ⇒ listeners observe commits in order
     GraftTable.notifyCommit(spark, root)
   }
@@ -487,7 +491,6 @@ final class GraftTable(val root: String, spark: SparkSession) {
         Some(appendOnto(cur, staged.operation, delta, cur.properties))
       }
     }
-    rebased.foreach(autoExpire)
     rebased.fold(id)(_.id)
   }
 
@@ -598,7 +601,6 @@ final class GraftTable(val root: String, spark: SparkSession) {
         Some(next)
       }
     }
-    committed.foreach(autoExpire)
     if (committed.isEmpty) {
       // lost the race: this batch's files are orphans. Delete through the
       // Hadoop FS resolved from the table root (matching writeFiles'
@@ -1057,7 +1059,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     // equally effective before, and O(#added) exists-calls must not
     // stretch the critical section (a stretched holder looks stale)
     verifyPayloads(added)
-    val committed = withCommitLock {
+    withCommitLock {
       val cur = current
       // sketch MERGE happens inside the lock against the latest
       // properties (two concurrent appends must both land their delta);
@@ -1065,8 +1067,6 @@ final class GraftTable(val root: String, spark: SparkSession) {
       appendOnto(cur, op, added,
         GraftTable.mergeNdvProps(cur.properties, ndvDelta) ++ extraProps)
     }
-    autoExpire(committed) // outside the lock, same as commit()
-    committed
   }
 
   /** Attach an [[org.apache.spark.sql.Observation]] computing a
@@ -2438,15 +2438,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
   private[graft] def rewriteCarrySkips(startId: Long, endId: Long,
       consumed: FileEntry => Boolean): Set[String] = {
     if (startId <= 0 || endId <= startId) return Set.empty
-    var snaps = List.empty[Snapshot]
-    var a = endId
-    while (a > startId) {
-      snapshotIfExists(a) match {
-        case Some(s) => snaps ::= s; a = s.parentId
-        case None    => return Set.empty
-      }
-      if (a < 0) return Set.empty // chain root above startId: disjoint history
-    }
+    val snaps = lineage(startId, endId).getOrElse(return Set.empty)
     val skips = scala.collection.mutable.Set[String]()
     def seen(f: FileEntry): Boolean = consumed(f) || skips.contains(f.path)
     for (s <- snaps if GraftTable.ContentInvariantOps(s.operation) && s.parentId >= 0;
@@ -2465,6 +2457,19 @@ final class GraftTable(val root: String, spark: SparkSession) {
         skips ++= added.map(_.path)
     }
     skips.toSet
+  }
+
+  /** The snapshots of the window `(startId, endId]`, oldest first; None
+    * when one has expired or `startId` is not an ancestor of `endId`.
+    */
+  private def lineage(startId: Long, endId: Long): Option[List[Snapshot]] = {
+    var snaps = List.empty[Snapshot]
+    var a = endId
+    while (a > startId) snapshotIfExists(a) match {
+      case Some(s) => snaps ::= s; a = s.parentId
+      case None    => return None
+    }
+    if (a == startId) Some(snaps) else None
   }
 
   /** Row-level change-data-capture between two snapshots (Iceberg's
@@ -2494,8 +2499,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
         // no removal and no delete entry in the window: every change is
         // an insert of an added file's row, and no live delete entry
         // can name a file that is new in the window
-        val df = readSnapshot(to.copy(files = added, shards = Seq.empty,
-          deleteFiles = Seq.empty))
+        val df = addedRows(to, added)
         df.withColumn(GraftTable.changeTypeCol(df.columns.toSeq),
           org.apache.spark.sql.functions.lit("insert"))
       case None => rowLevelChangelog(from, to)
@@ -2518,6 +2522,40 @@ final class GraftTable(val root: String, spark: SparkSession) {
       to.deleteFiles.toSet == from.deleteFiles.toSet &&
       added.forall(_.addedBy > fromId)
     if (appendOnly) Some(added) else None
+  }
+
+  /** The rows of files new in a window, which no live delete entry names. */
+  private def addedRows(to: Snapshot, added: Seq[FileEntry]): DataFrame =
+    readSnapshot(to.copy(files = added, shards = Seq.empty, deleteFiles = Seq.empty))
+
+  /** The window `(fromId, toId]` as (appended files, their rows, deleted
+    * rows) when each commit appended ([[appendOnlyAdds]]) or is a
+    * `delete`, the delete entries are unchanged, the appended files are
+    * live, and their `key` ranges (long stats) miss those of the removed
+    * files, so no `key` is both deleted and inserted. The deleted rows
+    * (None if no file was removed) are the [[rowLevelChangelog]] without
+    * the appended files: a delete rewrite keeps a subset of its rows.
+    */
+  private[graft] def appendDeleteSplit(fromId: Long, toId: Long, key: String)
+      : Option[(Seq[FileEntry], DataFrame, Option[DataFrame])] = {
+    val (from, to) = (snapshot(fromId), snapshot(toId))
+    val appendedPaths = lineage(fromId, toId).getOrElse(return None).flatMap(s =>
+      appendOnlyAdds(s.parentId, s.id).orElse(Some(Nil).filter(_ => s.operation == "delete"))
+        .getOrElse(return None)).map(_.path).toSet
+    val appended = to.files.filter(f => appendedPaths.contains(f.path))
+    val live = to.files.iterator.map(_.path).toSet
+    val removed = from.files.filterNot(f => live.contains(f.path))
+    def range(f: FileEntry): Option[(Long, Long)] = f.stats.get(key)
+      .filter(c => c.tpe == "long" && c.nulls == 0L).map(c => (c.min.toLong, c.max.toLong))
+    val disjoint = appended.isEmpty || removed.isEmpty || {
+      val (a, r) = (appended.map(range), removed.map(range))
+      (a ++ r).forall(_.isDefined) &&
+        a.flatten.forall { case (lo, hi) => r.flatten.forall(o => hi < o._1 || o._2 < lo) }
+    }
+    if (from.schemaJson != to.schemaJson || to.deleteFiles.toSet != from.deleteFiles.toSet ||
+        appended.size != appendedPaths.size || !disjoint) None
+    else Some((appended, addedRows(to, appended), if (removed.isEmpty) None else Some(
+      rowLevelChangelog(from, to.copy(files = to.files.filterNot(f => appendedPaths(f.path)))))))
   }
 
   /** [[changelog]] over a window with removals or delete entries (any
@@ -2624,7 +2662,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
   def rollback(toId: Long): GraftTable = {
     val cur = current
     val target = snapshot(toId)
-    commitNext(cur, "rollback")(_.copy(schemaJson = target.schemaJson, files = target.files,
+    commitNext(cur, "rollback")(_.copy(schemaJson = target.schemaJson,
+      // the target's spec and deps lay out its files, whatever CUR's are
+      partitionCols = target.partitionCols, deps = target.deps, files = target.files,
       // the target's pending deletes are part of its logical state —
       // carrying CUR's would resurrect (or re-kill) the wrong rows
       deleteFiles = target.deleteFiles))
@@ -3672,7 +3712,7 @@ object GraftTable {
   val DefaultAddedAtKey = "graft.default-added-at"
 
   /** Retention policy property (A78): keep at most N snapshots,
-    * auto-expiring the rest on every commit (see
+    * auto-expiring the rest on every pointer move (see
     * [[GraftTable.autoExpire]]).
     */
   val MaxSnapshotsProp = "history.keep.max-snapshots"

@@ -411,11 +411,13 @@ object AnnIndex {
     *    rewrite — sync refuses loudly and the remedy is
     *    [[buildFromTable]].
     *
-    * A window that only appended ([[GraftTable.appendOnlyAdds]] — the
-    * streaming-ingest case) can hold no delete and no rewrite, so it
-    * skips the classification: its inserts are counted from the
-    * manifest and encoded straight from the added files, and the codes
-    * write is the sync's only job.
+    * A window of appends and `delete` commits whose appended vec_id
+    * ranges are disjoint from the removed files'
+    * ([[GraftTable.appendDeleteSplit]] — the streaming-ingest case)
+    * cannot rewrite a vector, so it skips the persisted changelog and
+    * the classify: the deletes fold (counted by an Observation on the
+    * delete write), then the appended files encode straight from the
+    * manifest — one job for an append-only one-file window.
     *
     * Returns the number of changed rows folded (inserts + deletes).
     */
@@ -433,14 +435,19 @@ object AnnIndex {
       // one commit per sync saved on every insert- or delete-only
       // window; the empty window keeps the explicit property commit
       val wm = Map(SyncedSnapshotProp -> cur.toString)
-      corpus.appendOnlyAdds(last, cur) match {
-        case Some(added) =>
+      def foldDelta(nIns: Long, inserts: DataFrame, deletes: Option[DataFrame]): Unit = {
+        deletes.foreach(d => codesT.mergeDelete(d.select(col("vec_id").as("n_id")),
+          Seq("n_id"), if (nIns > 0L) Map.empty[String, String] else wm))
+        if (nIns > 0L) append(s, inserts.select(col("vec_id"), col("embedding")), indexRoot, wm)
+        else if (deletes.isEmpty) codesT.setProperty(SyncedSnapshotProp, cur.toString)
+      }
+      corpus.appendDeleteSplit(last, cur, "vec_id") match {
+        case Some((added, inserts, deletes)) =>
           val nIns = added.map(_.rows).sum
-          if (nIns > 0L) append(s,
-            corpus.changelog(last, cur).select(col("vec_id"), col("embedding")),
-            indexRoot, wm)
-          else codesT.setProperty(SyncedSnapshotProp, cur.toString)
-          return nIns
+          // the delete count rides the delete-file write: no count job
+          val obs = org.apache.spark.sql.Observation(s"ann-sync-${java.util.UUID.randomUUID()}")
+          foldDelta(nIns, inserts, deletes.map(_.observe(obs, count(lit(1)).as("n"))))
+          return nIns + deletes.fold(0L)(_ => obs.get("n").asInstanceOf[Long])
         case None =>
       }
       val cl = corpus.changelog(last, cur)
@@ -472,15 +479,8 @@ object AnnIndex {
             "rebuild with buildFromTable")
         val nDel = stats.getLong(1)
         val nIns = stats.getLong(2)
-        if (nDel > 0L) codesT.mergeDelete(
-          ch.filter(col("op") === "delete").select(col("vec_id").as("n_id")),
-          Seq("n_id"), if (nIns > 0L) Map.empty[String, String] else wm)
-        if (nIns > 0L) append(s,
-          ch.filter(col("op") === "insert").select(col("vec_id"), col("embedding")),
-          indexRoot, wm)
-        if (nDel == 0L && nIns == 0L)
-          new GraftTable(codesRoot(indexRoot), s)
-            .setProperty(SyncedSnapshotProp, cur.toString)
+        foldDelta(nIns, ch.filter(col("op") === "insert"),
+          if (nDel > 0L) Some(ch.filter(col("op") === "delete")) else None)
         nIns + nDel
       } finally { ch.unpersist(); () }
     }

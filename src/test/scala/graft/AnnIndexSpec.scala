@@ -242,6 +242,75 @@ class AnnIndexSpec extends SparkSpec {
     assert(codeRows === fast, "both paths must encode the same codes")
   }
 
+  test("append + copy-on-write delete window: split sync runs 4 jobs and encodes what the row-level path does") {
+    val t = GraftTable.create(spark, s"$root-split-corpus", corpus)
+    AnnIndex.buildFromTable(spark, t, root)
+    AnnIndex.load(spark, root) // the one codebook load: later syncs hit the cache
+    val codesT = new GraftTable(s"$root/codes", spark)
+    val (w0, codes0) = (t.currentId, codesT.currentId)
+    val victim = 7L
+    // the victim's own vector, asked under another id: while indexed,
+    // the victim is its nearest neighbour
+    val probe = corpus.filter(col("vec_id") === victim)
+      .select(lit(900000000L).as("query_id"), col("embedding"))
+    def neighbours = AnnIndex.query(spark, root, corpus, probe, 1L)
+      .collect().map(_.getAs[Long]("neighbor_id")).toSeq
+    assert(neighbours.contains(victim), "precondition: the indexed victim is found")
+    // one micro-batch (one file) and a copy-on-write delete of an older row
+    t.append(plantedRows(600000000L, 3).coalesce(1))
+    t.delete(col("vec_id") === victim)
+    assert(t.appendDeleteSplit(w0, t.currentId, "vec_id").isDefined,
+      "precondition: the window splits into appends and deletes")
+    val (n, jobs) = buildJobsOf(AnnIndex.sync(spark, t, root))
+    assert(n === 4L, s"sync must report 3 inserts + 1 delete, got $n")
+    assert(jobs === 4, s"a split sync is the delete-file write and the codes write, ran $jobs jobs")
+    assert(codesT.properties(AnnIndex.SyncedSnapshotProp).toLong === t.currentId)
+    assert(!neighbours.contains(victim), "the deleted victim came back as a neighbour")
+    def codeRows = codesT.read().select("n_id", "cluster", "codes")
+      .collect().map(_.toString).sorted.toSeq
+    val split = codeRows
+    assert(split.size === codesT.snapshot(codes0).files.map(_.rows).sum + 3L - 1L)
+
+    // the same window through the row-level path (see the append-only test)
+    codesT.rollback(codes0)
+    codesT.setProperty(AnnIndex.SyncedSnapshotProp, w0.toString)
+    t.optimizeCompact(1L << 30)
+    assert(t.appendDeleteSplit(w0, t.currentId, "vec_id").isEmpty,
+      "precondition: the compacted window takes the row-level path")
+    assert(AnnIndex.sync(spark, t, root) === 4L)
+    assert(codeRows === split, "both paths must leave the same live codes")
+  }
+
+  test("windows that do not split take the row-level path: overlapping keys refuse, merge-on-read deletes fold") {
+    val t = GraftTable.create(spark, s"$root-nosplit-corpus", corpus)
+    AnnIndex.buildFromTable(spark, t, root)
+    val codesT = new GraftTable(s"$root/codes", spark)
+    // delete row 0, then append a new row 0: the appended key range
+    // overlaps the removed file's, and the window rewrites vector 0
+    t.delete(col("vec_id") === 0L)
+    t.append(plantedRows(0L, 1))
+    val w = t.currentId
+    assert(t.appendDeleteSplit(codesT.properties(AnnIndex.SyncedSnapshotProp).toLong, w,
+      "vec_id").isEmpty, "precondition: overlapping key ranges do not split")
+    val ex = intercept[IllegalArgumentException] { AnnIndex.sync(spark, t, root) }
+    assert(ex.getMessage.contains("rebuild"))
+
+    // a merge-on-read delete adds a delete entry: the row-level path
+    // folds it with the window's append
+    val u = GraftTable.create(spark, s"$root-mor-corpus", corpus)
+    u.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    AnnIndex.buildFromTable(spark, u, root)
+    val w0 = u.currentId
+    u.append(plantedRows(600000000L, 2).coalesce(1))
+    u.delete(col("vec_id") === 9L)
+    assert(u.current.deleteFiles.nonEmpty && u.appendDeleteSplit(w0, u.currentId, "vec_id").isEmpty,
+      "precondition: a merge-on-read delete does not split")
+    assert(AnnIndex.sync(spark, u, root) === 3L)
+    assert(codesT.properties(AnnIndex.SyncedSnapshotProp).toLong === u.currentId)
+    assert(codesT.read().filter(col("n_id") === 9L).count() === 0L)
+    assert(codesT.read().count() === u.read().count())
+  }
+
   test("a rebuild at the same root replaces the cached quantizers") {
     def tableCents = new GraftTable(s"$root/books", spark).read()
       .filter(col("kind") === "centroid").orderBy(col("cluster"))

@@ -2975,4 +2975,47 @@ class LakeSpec extends SparkSpec {
     val t2 = GraftTable.create(spark, tmp("micros-own"), df)
     assert(t2.current.files.forall(_.stats.contains("ts")))
   }
+
+  test("rollback across a partition-spec change restores the target's spec and reads its rows") {
+    import spark.implicits._
+    val rows = (1L to 6L).map(k => (k, k % 2, k * 1.5))
+    val t = GraftTable.create(spark, tmp("rollback-spec"),
+      rows.toDF("k", "g", "v").repartition(col("g")), Seq("g"))
+    t.repartitionSpec(Seq.empty)
+    assert(t.current.partitionCols.isEmpty)
+    t.rollback(1)
+    assert(t.current.partitionCols === Seq("g"))
+    assert(t.read().select("k", "g", "v").as[(Long, Long, Double)].collect().sorted.toSeq
+      === rows)
+  }
+
+  test("publish and fastForward run the retention dial: a keep-2 table keeps 2 snapshots") {
+    import spark.implicits._
+    def rows(ks: Seq[Long]) = ks.map(k => (k, k * 1.5)).toDF("k", "v").coalesce(1)
+    val wap = GraftTable.create(spark, tmp("keep2-publish"), rows(Seq(1L, 2L)))
+    wap.setProperty(GraftTable.MaxSnapshotsProp, "2")
+    (1 to 4).foreach(i => wap.publish(wap.stageAppend(rows(Seq(10L + i)))))
+    assert(wap.snapshotIds.size <= 2, s"snapshots ${wap.snapshotIds}")
+    assert(wap.read().count() === 6L)
+
+    val br = GraftTable.create(spark, tmp("keep2-ff"), rows(Seq(1L, 2L)))
+    br.setProperty(GraftTable.MaxSnapshotsProp, "2")
+    br.branch("dev")
+    (1 to 3).foreach(i => br.appendToBranch("dev", rows(Seq(10L + i))))
+    br.fastForward("dev")
+    // the branch head is the current snapshot: nothing else is pinned
+    assert(br.snapshotIds.size <= 2, s"snapshots ${br.snapshotIds}")
+    assert(br.read().count() === 5L)
+
+    val txn = Seq("a", "b").map { n =>
+      val t = GraftTable.create(spark, tmp(s"keep2-txn-$n"), rows(Seq(1L, 2L)))
+      t.setProperty(GraftTable.MaxSnapshotsProp, "2")
+    }
+    (1 to 3).foreach(i => graft.lake.GraftTxn.publishStaged(spark,
+      txn.map(t => t -> t.stageAppend(rows(Seq(10L + i))))))
+    txn.foreach { t =>
+      assert(t.snapshotIds.size <= 2, s"${t.root}: snapshots ${t.snapshotIds}")
+      assert(t.read().count() === 5L)
+    }
+  }
 }
