@@ -937,15 +937,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
     // and micros is what Iceberg/Delta writers emit. Session-conf
     // scoped around the one staging write (no per-write parquet option
     // exists); restored even on failure.
-    val TsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(TsTypeKey)
-    spark.conf.set(TsTypeKey, "TIMESTAMP_MICROS")
-    try {
+    GraftTable.withMicrosTimestamps(spark) {
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
         .parquet(staging.toString)
-    } finally prevTsType match {
-      case Some(v) => spark.conf.set(TsTypeKey, v)
-      case None    => spark.conf.unset(TsTypeKey)
     }
 
     // Plan dest names on the driver (pure path arithmetic over one
@@ -1539,11 +1533,10 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** The `(file_name, row_index)` coordinates present in `toDels`'
-    * bitmaps but not `fromDels`' — the in-window deletion set both the
-    * batch changelog and the streaming change feed reconstruct victims
-    * from. Output is O(in-window deletions) rows, never a vector
-    * rescan; vectors only grow along forward history (merge = union),
-    * so the diff is exact.
+    * bitmaps but not `fromDels`' — the in-window deletion set
+    * [[windowVictims]] reconstructs vector victims from. Output is
+    * O(in-window deletions) rows, never a vector rescan; vectors only
+    * grow along forward history (merge = union), so the diff is exact.
     */
   private[graft] def dvDiffRows(toDels: Seq[DeleteFileEntry],
       fromDels: Seq[DeleteFileEntry]): DataFrame = {
@@ -2462,7 +2455,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
   /** The snapshots of the window `(startId, endId]`, oldest first; None
     * when one has expired or `startId` is not an ancestor of `endId`.
     */
-  private def lineage(startId: Long, endId: Long): Option[List[Snapshot]] = {
+  private[graft] def lineage(startId: Long, endId: Long): Option[List[Snapshot]] = {
     var snaps = List.empty[Snapshot]
     var a = endId
     while (a > startId) snapshotIfExists(a) match {
@@ -2572,59 +2565,18 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val addedDf = readSnapshot(to.copy(files = added, shards = Seq.empty))
     val removedDf = readSnapshot(from.copy(files = removed, shards = Seq.empty))
     // a MOR delete changes NO data files, so the file diff alone is
-    // blind to it: rows of files present on BOTH sides that `to`'s
-    // delete list (but not `from`'s) kills were deleted in-window
-    val newDels = {
+    // blind to it: rows of files present on BOTH sides that `to`'s new
+    // delete entries kill were deleted in-window. Vectors diff by
+    // bitmap: a merge commit writes a file's vector under a new path
+    // and the old entry only shrinks, so the new paths hold every
+    // changed bitmap.
+    val (newDv, newRest) = {
       val fromDel = from.deleteFiles.map(_.path).toSet
-      to.deleteFiles.filterNot(d => fromDel.contains(d.path))
+      to.deleteFiles.filterNot(d => fromDel.contains(d.path)).partition(_.dv)
     }
-    val (newEq, newPosAll) = newDels.partition(_.equalityCols.nonEmpty)
-    // dv entries diff by BITMAP, not by path (a merge commit rewrites a
-    // file's vector under a new path while the old entry shrinks) —
-    // handled below as dvDeletedDf, so keep them out of the position set
-    val newPos = newPosAll.filterNot(_.dv)
-    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    val common = from.files.filter(f => toPaths.contains(f.path))
-    val posDeletedDf =
-      if (newPos.isEmpty) None
-      else {
-        val base = readSnapshotPos(from.copy(files = common, shards = Seq.empty))
-        val delRows = deleteRowsHinted(to.properties, newPos)
-        Some(base.join(delRows,
-            base(PosFileCol) === delRows("file_name") && base(PosIdxCol) === delRows("row_index"),
-            "left_semi")
-          .drop(PosFileCol, PosIdxCol))
-      }
-    // equality deletes name no coordinates — reconstruct their victims
-    // as (rows visible in `from` over key-bounds-pruned candidates)
-    // MINUS (the same rows with the new equality deletes applied)
-    val eqDeletedDf =
-      if (newEq.isEmpty) None
-      else {
-        val cands = eqDeleteCandidates(common, newEq)
-        if (cands.isEmpty) None
-        else {
-          val sub = from.copy(files = cands, shards = Seq.empty)
-          eqDeleteSplit(readSnapshotPos(sub), sub, newEq)._2
-            .map(_.drop(PosFileCol, PosIdxCol))
-        }
-      }
-    // deletion vectors: in-window victims are exactly the positions in
-    // `to`'s per-file bitmap missing from `from`'s (vectors only grow
-    // along forward history — merge = union) — the diff explodes to
-    // O(in-window deletions) coordinates, never a full vector rescan
-    val dvDeletedDf = {
-      val toDvE = to.deleteFiles.filter(_.dv)
-      if (toDvE.isEmpty) None
-      else {
-        val diff = dvDiffRows(toDvE, from.deleteFiles.filter(_.dv))
-        val base = readSnapshotPos(from.copy(files = common, shards = Seq.empty))
-        Some(base.join(diff,
-            base(PosFileCol) === diff("file_name") && base(PosIdxCol) === diff("row_index"),
-            "left_semi")
-          .drop(PosFileCol, PosIdxCol))
-      }
-    }
+    val (newEq, newPos) = newRest.partition(_.equalityCols.nonEmpty)
+    val victims = windowVictims(from, from.files.filter(f => toPaths.contains(f.path)),
+      from.deleteFiles, newPos, newEq, newDv, isStreaming = false)
     // One signed-multiplicity pass replaces the two EXCEPT ALL
     // directions (r13 optimization): exceptAll executes BOTH child
     // subtrees per direction, so added/removed files were each scanned
@@ -2651,9 +2603,74 @@ final class GraftTable(val root: String, spark: SparkSession) {
           when(col(w) > 0L, lit("insert")).otherwise(lit("delete"))
             .as(changeType): _*)
     }
-    val morDeletes = posDeletedDf.toSeq ++ eqDeletedDf.toSeq ++ dvDeletedDf.toSeq
-    morDeletes.foldLeft(fileDiff)((acc, df) => acc.unionByName(
+    victims.fold(fileDiff)(df => fileDiff.unionByName(
       df.withColumn(changeType, org.apache.spark.sql.functions.lit("delete"))))
+  }
+
+  /** The pre-window rows a window's merge-on-read entries killed, each
+    * victim once: the one victim reconstruction behind the batch
+    * [[changelog]] and the streaming change feed
+    * ([[graft.streaming.GraftSource]]). `pre` holds the pre-window
+    * rows, `startDels` the delete entries live at the window start, and
+    * `winPos`/`winEq`/`winDv` the window's position, equality and
+    * deletion-vector entries. The kinds claim victims in that order,
+    * each reading with the earlier kinds' victims hidden: position
+    * coordinates, then the bitmap diff dv(window) ∖ dv(start), then the
+    * equality split — so a row that a vector and an equality delete
+    * both kill in one window is one victim. Position and vector reads
+    * are pruned to their target files (a vector's are in the manifest;
+    * position files are read once for theirs); a window with no entry
+    * reads nothing. `at` supplies the schema, defaults and broadcast
+    * gates.
+    */
+  private[graft] def windowVictims(at: Snapshot, pre: Seq[FileEntry],
+      startDels: Seq[DeleteFileEntry], winPos: Seq[DeleteFileEntry],
+      winEq: Seq[DeleteFileEntry], winDv: Seq[DeleteFileEntry],
+      isStreaming: Boolean): Option[DataFrame] = {
+    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
+    val (startDv, startRest) = startDels.partition(_.dv)
+    // the rows of `files` that `dels` leave, with their coordinates
+    def visible(files: Seq[FileEntry], dels: Seq[DeleteFileEntry]): DataFrame = {
+      val s = at.copy(files = files, shards = Seq.empty)
+      hideDeleted(relationWithDefaults(s, withRowPos = true, isStreaming), s, dels)
+    }
+    // the rows of the `targets` files that `dels` leave, at `coords`
+    def claim(targets: Set[String], dels: Seq[DeleteFileEntry],
+        coords: => DataFrame): Option[DataFrame] = {
+      val files = pre.filter(f => targets.contains(GraftTable.baseName(f.path)))
+      if (files.isEmpty) None
+      else {
+        val (base, c) = (visible(files, dels), coords)
+        Some(base.join(c, base(PosFileCol) === c("file_name") &&
+          base(PosIdxCol) === c("row_index"), "left_semi"))
+      }
+    }
+    val posVictims =
+      if (winPos.isEmpty) None
+      else {
+        val rows = deleteRowsHinted(at.properties, winPos)
+        claim(rows.select(col("file_name")).distinct().collect().map(_.getString(0)).toSet,
+          startDels, rows)
+      }
+    // a coordinate in the diff was live in its start vector, so the
+    // start vectors need not be hidden; start position entries must be
+    // (an in-window position → vector conversion re-names their victims)
+    val dvVictims =
+      if (winDv.isEmpty) None
+      else claim(winDv.flatMap(_.targets).toSet, startRest ++ winPos,
+        dvDiffRows(winDv, startDv))
+    val eqVictims = Some(winEq).filter(_.nonEmpty).map(eqDeleteCandidates(pre, _))
+      .filter(_.nonEmpty).flatMap { cands =>
+        // the window's vectors own the files they touched: each file
+        // keeps one bitmap, as hideDeleted's vector probe requires
+        val owned = winDv.flatMap(_.targets).toSet
+        val endDv = winDv ++ startDv.map(d => d.copy(targets = d.targets.filterNot(owned)))
+          .filter(_.targets.nonEmpty)
+        eqDeleteSplit(visible(cands, startRest ++ winPos ++ endDv),
+          at.copy(files = cands, shards = Seq.empty), winEq)._2
+      }
+    (posVictims ++ dvVictims ++ eqVictims).map(_.drop(PosFileCol, PosIdxCol))
+      .reduceOption(_ unionByName _)
   }
 
   /** Roll the table back to an earlier snapshot's file set — recorded
@@ -3017,11 +3034,12 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * its file subset, and tables without defaults take the unchanged
     * single-relation fast path.
     */
-  private def relationWithDefaults(s: Snapshot, withRowPos: Boolean): DataFrame = {
+  private def relationWithDefaults(s: Snapshot, withRowPos: Boolean,
+      isStreaming: Boolean = false): DataFrame = {
     val sch = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
     val defaulted = sch.fields.filter(_.metadata.contains(GraftTable.DefaultMetaKey))
     def rel(snap: Snapshot) = org.apache.spark.sql.graft.GraftFileIndex
-      .relation(spark, root, snap, isStreaming = false, withRowPos)
+      .relation(spark, root, snap, isStreaming, withRowPos)
     if (defaulted.isEmpty || s.files.isEmpty) rel(s)
     else {
       val groups = s.files.groupBy(f => defaulted
@@ -3094,7 +3112,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * avoids. Rows are split exactly once even across multiple key-set
     * groups (each group consumes the previous group's survivors).
     */
-  private[graft] def eqDeleteSplit(
+  private def eqDeleteSplit(
       df: DataFrame, s: Snapshot, eqDels: Seq[DeleteFileEntry]): (DataFrame, Option[DataFrame]) = {
     import org.apache.spark.sql.graft.GraftFileIndex.PosFileCol
     val SeqCol = "__graft_file_seq"
@@ -3140,7 +3158,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * delete. Null delete keys disable bounds pruning for the group
     * (stats min/max are null-blind), keeping the age filter only.
     */
-  private[graft] def eqDeleteCandidates(
+  private def eqDeleteCandidates(
       files: Seq[FileEntry], eqDels: Seq[DeleteFileEntry]): Seq[FileEntry] = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     val sch = schema
@@ -3191,7 +3209,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * write time, so the decision is metadata-only; past the threshold
     * Spark's planner (and AQE, from runtime sizes) picks the join.
     */
-  private[graft] def deleteRowsHinted(
+  private def deleteRowsHinted(
       props: Map[String, String], dels: Seq[DeleteFileEntry]): DataFrame = {
     val df = deleteRows(dels)
     val limit = props.get(GraftTable.DeleteBroadcastProp).map(_.toLong)
@@ -4024,6 +4042,35 @@ object GraftTable {
     * reads go through [[openFooter]] with this conf (or the caller's).
     */
   @transient private lazy val taskConf = new Configuration()
+
+  /** Graft writes in flight per session, and the session's parquet
+    * timestamp type from before the first of them.
+    */
+  private val microsScopes = scala.collection.mutable.Map[SparkSession, (Int, Option[String])]()
+
+  /** Run `body` with `spark.sql.parquet.outputTimestampType` set to
+    * `TIMESTAMP_MICROS` on the session. Writes may overlap on one
+    * session (`AnnIndex.build` writes books and codes at once): the
+    * first one in sets the type, the last one out restores the type
+    * the caller had, even on failure.
+    */
+  private[graft] def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    microsScopes.synchronized {
+      val (n, prev) = microsScopes.getOrElse(spark, (0, spark.conf.getOption(key)))
+      if (n == 0) spark.conf.set(key, "TIMESTAMP_MICROS")
+      microsScopes(spark) = (n + 1, prev)
+    }
+    try body
+    finally microsScopes.synchronized {
+      val (n, prev) = microsScopes(spark)
+      if (n > 1) microsScopes(spark) = (n - 1, prev)
+      else {
+        microsScopes.remove(spark)
+        prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+    }
+  }
 
   /** Open a parquet file for its footer with read options built from
     * `conf` — the conf the caller already holds. About 0.7 ms a file,

@@ -379,7 +379,13 @@ class GraftSource(
     * Inserts and delete targets are planned from each committing
     * snapshot's OWN manifest, not the end snapshot's — an in-window
     * compaction that replaced those files in later manifests doesn't
-    * lose them (the physical files live until expire).
+    * lose them (the physical files live until expire). The deleted
+    * pre-window rows come from [[graft.lake.GraftTable.windowVictims]],
+    * the victim reconstruction the batch changelog shares: both rebuild
+    * merge-on-read victims through that one path. The feed still takes
+    * the window's vectors from the end snapshot, so a vector that an
+    * in-window `applyDeletes` folds away is not streamed (an open gap
+    * the changelog's file diff does not have).
     */
   private def cdcBatch(startId: Long, endId: Long, endSnap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -406,17 +412,11 @@ class GraftSource(
         else applyDels(rel, endSnap.files, endSnap.deleteFiles).drop(PosFileCol, PosIdxCol)
       return withChangeType(visible, "insert").select(order: _*)
     }
-    // window lineage (startId, endId], oldest-first
-    var snaps = List.empty[Snapshot]
-    var a = endId
-    while (a > startId) {
-      val s = table.snapshotIfExists(a).getOrElse(throw new IllegalStateException(
-        s"changelog stream window ($startId, $endId] crosses snapshot $a, which " +
-          "has been expired — the change history is gone. Retain snapshots at " +
-          "least as long as stream downtime, or restart the stream."))
-      snaps ::= s
-      a = s.parentId
-    }
+    def expired = new IllegalStateException(
+      s"changelog stream window ($startId, $endId] crosses a snapshot that has been " +
+        "expired — the change history is gone. Retain snapshots at least as long as " +
+        "stream downtime, or restart the stream.")
+    val snaps = table.lineage(startId, endId).getOrElse(throw expired)
     def isRewrite(s: Snapshot): Boolean =
       s.deletedFiles > 0 || s.operation == "rollback"
     snaps.find(s => isRewrite(s) && !GraftSource.DataPreservingOps.contains(s.operation))
@@ -437,7 +437,8 @@ class GraftSource(
     // pre-addedBy manifests (stamp 0) fall back to the end-minus-start diff
     val winDels: Seq[DeleteFileEntry] =
       if (snaps.exists(_.deleteFiles.exists(_.addedBy == 0L))) {
-        val startDel = table.snapshot(startId).deleteFiles.map(_.path).toSet
+        val startDel = table.snapshotIfExists(startId).getOrElse(throw expired)
+          .deleteFiles.map(_.path).toSet
         endSnap.deleteFiles.filterNot(d => startDel.contains(d.path))
       } else
         additive.flatMap(s => s.deleteFiles.filter(d => d.addedBy == s.id && !d.dv))
@@ -446,7 +447,7 @@ class GraftSource(
     // deletion vectors diff by BITMAP, not by entry path (a merge
     // commit rewrites a file's vector under a new path while the old
     // entry shrinks): the in-window victims are exactly dv(end) ∖
-    // dv(start) per file, reconstructed below. The END snapshot's
+    // dv(start) per file (GraftTable.windowVictims). The END snapshot's
     // age-filtered entries are the current owners of every bitmap an
     // in-window dv commit touched (an entry stamped ≤ startId cannot
     // target in-window files).
@@ -461,105 +462,22 @@ class GraftSource(
       if (!anyDels) inserts else inserts.drop(PosFileCol, PosIdxCol),
       "insert").select(order: _*)
     if (!anyDels) return insTagged
-    def base(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    // deletes committed at or before the window start — rows they
-    // already killed were never visible at startId and must not re-emit
-    // as pre-images (position deletes never overlap them by
-    // construction, equality deletes are applied explicitly below).
-    // Position entries come from the START snapshot when it is retained:
-    // an in-window position→dv conversion drops them from the end
-    // snapshot while its vectors re-name their long-dead victims.
-    val startEq = endSnap.deleteFiles.filter(d =>
-      d.equalityCols.nonEmpty && d.addedBy != 0L && d.addedBy <= startId)
-    val startPos = table.snapshotIfExists(startId).map(_.deleteFiles)
-      .getOrElse(endSnap.deleteFiles.filter(d => d.addedBy != 0L && d.addedBy <= startId))
-      .filter(d => d.equalityCols.isEmpty && !d.dv)
-    // position pre-images: the target list is control-plane small by
-    // design (MOR position deletes ARE the point-delete path), so
-    // collecting its file names prunes the scan to the touched files
-    val posPre: Option[DataFrame] =
-      if (winPos.isEmpty) None
-      else {
-        val delRows = table.deleteRowsHinted(endSnap.properties, winPos)
-        val targets = delRows.select(col("file_name")).distinct()
-          .collect().map(_.getString(0)).toSet
-        val preFiles = snaps.flatMap(s => s.files.filter(f =>
-            targets.contains(base(f.path)) && f.addedBy <= startId))
-          .groupBy(_.path).map(_._2.head).toSeq
-        if (preFiles.isEmpty) None
-        else {
-          val preRel = GraftFileIndex.relation(spark, root,
-            endSnap.copy(files = preFiles, shards = Seq.empty),
-            isStreaming = true, withRowPos = true)
-          val preBase = applyDels(preRel, preFiles, startEq)
-          Some(preBase.join(delRows, preBase(PosFileCol) === delRows("file_name") &&
-            preBase(PosIdxCol) === delRows("row_index"), "left_semi").drop(PosFileCol, PosIdxCol))
-        }
-      }
-    // equality pre-images: no coordinates to collect — candidates come
-    // from metadata key-bounds + age pruning, then the split's killed
-    // half IS the delete stream (stream-static-safe joins throughout)
-    val eqPre: Option[DataFrame] =
-      if (winEq.isEmpty) None
-      else {
-        val preAll = snaps.flatMap(s => s.files.filter(_.addedBy <= startId))
-          .groupBy(_.path).map(_._2.head).toSeq
-        val cands = table.eqDeleteCandidates(preAll, winEq)
-        if (cands.isEmpty) None
-        else {
-          val preRel = GraftFileIndex.relation(spark, root,
-            endSnap.copy(files = cands, shards = Seq.empty),
-            isStreaming = true, withRowPos = true)
-          // winPos and the dv bitmaps apply here too: a row position-
-          // or dv-deleted IN-WINDOW already streamed as its own delete
-          // (and a row dv-dead BEFORE the window was never visible at
-          // start) — letting either reach the equality split would
-          // emit a pre-image twice / wrongly (a retraction consumer
-          // would subtract it twice)
-          val preBase = applyDels(preRel, cands,
-            startPos ++ winPos ++ startEq ++ endSnap.deleteFiles.filter(_.dv))
-          table.eqDeleteSplit(preBase,
-              endSnap.copy(files = cands, shards = Seq.empty), winEq)._2
-            .map(_.drop(PosFileCol, PosIdxCol))
-        }
-      }
-    // dv pre-images: in-window victims = dv(end) ∖ dv(start) coordinates
-    // on PRE-WINDOW files (in-window insert files were suppressed on the
-    // insert side instead — Delta CDC semantics: added-and-deleted
-    // in-window appears as neither). Coordinates are exact, so no
-    // overlap with posPre (each victim is claimed by exactly one delete
-    // mechanism: the dv scan at its commit applied all pending deletes)
-    val dvPre: Option[DataFrame] =
-      if (winDv.isEmpty) None
-      else {
-        val diff = table.dvDiffRows(
-          endSnap.deleteFiles.filter(_.dv),
-          table.snapshot(startId).deleteFiles.filter(_.dv))
-        // touched-file pull: bounded by the dv target lists, which the
-        // manifest already holds driver-side
-        val targets = winDv.flatMap(_.targets).toSet
-        val preFiles = snaps.flatMap(s => s.files.filter(f =>
-            targets.contains(base(f.path)) && f.addedBy <= startId))
-          .groupBy(_.path).map(_._2.head).toSeq
-        if (preFiles.isEmpty) None
-        else {
-          val preRel = GraftFileIndex.relation(spark, root,
-            endSnap.copy(files = preFiles, shards = Seq.empty),
-            isStreaming = true, withRowPos = true)
-          // startPos matters here: a position→dv CONVERSION in-window
-          // makes the bitmap diff name coordinates that were already
-          // position-dead at the window start — those rows were never
-          // visible at startId and must not emit as deletes
-          val preBase = applyDels(preRel, preFiles, startPos ++ startEq)
-          Some(preBase.join(diff,
-              preBase(PosFileCol) === diff("file_name") &&
-                preBase(PosIdxCol) === diff("row_index"),
-              "left_semi")
-            .drop(PosFileCol, PosIdxCol))
-        }
-      }
-    (posPre.toSeq ++ eqPre.toSeq ++ dvPre.toSeq).foldLeft(insTagged)((acc, d) =>
-      acc.unionByName(withChangeType(d, "delete").select(order: _*)))
+    // deletes of pre-window rows: the one victim reconstruction the
+    // batch changelog uses (GraftTable.windowVictims), over every
+    // pre-window file an in-window manifest lists. The start snapshot's
+    // entries are the ones live there; when it has expired, the end
+    // snapshot's entries that predate the window stand in, unless the
+    // window wrote vectors: an in-window merge moves a file's whole
+    // bitmap to its new entry, so the start bitmaps the diff needs are
+    // gone and the window is refused.
+    val startDels = table.snapshotIfExists(startId).map(_.deleteFiles).getOrElse {
+      if (winDv.nonEmpty) throw expired
+      endSnap.deleteFiles.filter(d => d.addedBy != 0L && d.addedBy <= startId)
+    }
+    val pre = snaps.flatMap(s => s.files.filter(_.addedBy <= startId))
+      .groupBy(_.path).map(_._2.head).toSeq
+    table.windowVictims(endSnap, pre, startDels, winPos, winEq, winDv, isStreaming = true)
+      .fold(insTagged)(d => insTagged.unionByName(withChangeType(d, "delete").select(order: _*)))
   }
 
   override def stop(): Unit = ()

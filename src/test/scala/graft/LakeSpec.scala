@@ -3018,4 +3018,54 @@ class LakeSpec extends SparkSpec {
       assert(t.read().count() === 5L)
     }
   }
+
+  test("changelog: a vector and an equality delete of one key in one window is one delete") {
+    import spark.implicits._
+    import graft.lake.MatView
+    import graft.lake.MatView.AggSpec
+    val t = GraftTable.create(spark, tmp("changelog-dv-eq"),
+      (1L to 8L).map(k => (k, k % 2, s"v$k")).toDF("k", "g", "v").coalesce(1))
+    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
+    MatView.create(spark, tmp("changelog-dv-eq-mv"), t, Seq("g"), Seq(AggSpec("n", "count", "")))
+    val from = t.currentId
+    t.delete(col("k") === 5L)                      // a deletion vector
+    t.mergeDelete(Seq(5L, 6L).toDF("k"), Seq("k")) // an equality entry naming k = 5 again
+    val to = t.currentId
+    assert(t.current.deleteFiles.exists(_.dv) &&
+      t.current.deleteFiles.exists(_.equalityCols.nonEmpty),
+      "precondition: the window adds a vector and an equality entry")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "_change_type").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+    val cl = rows(t.changelog(from, to))
+    assert(cl === Seq((5L, "v5", "delete"), (6L, "v6", "delete")))
+    graft.sql.GraftCatalog.register("changelog_dv_eq", t.root)
+    assert(rows(spark.sql(
+      s"CHANGES BETWEEN $from AND $to SELECT * FROM changelog_dv_eq")) === cl)
+    MatView.refresh(spark, tmp("changelog-dv-eq-mv"))
+    val mv = new GraftTable(tmp("changelog-dv-eq-mv"), spark).read()
+    val rec = MatView.recompute(spark, tmp("changelog-dv-eq-mv"))
+    assert(mv.exceptAll(rec).isEmpty && rec.exceptAll(mv).isEmpty,
+      s"refresh ${mv.collect().toSeq} vs recompute ${rec.collect().toSeq}")
+  }
+
+  test("overlapping graft writes on one session restore the caller's parquet timestamp type") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val key = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.getOption(key)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try (1 to 4).foreach { round =>
+      val writes = (1 to 3).map(i => Future {
+        GraftTable.create(spark, tmp(s"ts-type-overlap-$round-$i"),
+          (1L to (20L * i)).map(k => (k, s"v$k")).toDF("k", "v").repartition(i))
+      })
+      Await.result(Future.sequence(writes), 5.minutes)
+      assert(spark.conf.getOption(key) === before, s"round $round left $key changed")
+    } finally pool.shutdown()
+  }
 }

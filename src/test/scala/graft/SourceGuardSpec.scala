@@ -102,4 +102,19 @@ class SourceGuardSpec extends AnyFunSuite {
       "snapshot ids, parents and timestamps are set in GraftTable.successor and " +
         "GraftTable.commitCreate only: a hand-built successor drifts from the others")
   }
+
+  test("one victim reconstruction: the streaming source calls none of its primitives") {
+    val streaming = mainSources.filter(_.toString.contains("graft/streaming/"))
+    assert(streaming.nonEmpty, s"no streaming sources under $mainDir")
+    val primitives = Seq("dvDiffRows(", "eqDeleteSplit(", "eqDeleteCandidates(", "deleteRowsHinted(")
+    val hits = for {
+      p <- streaming
+      src = new String(Files.readAllBytes(p), "UTF-8")
+      call <- primitives if src.contains(call)
+    } yield s"${p.getFileName}: $call"
+    assert(hits.isEmpty,
+      "the change feed rebuilds merge-on-read victims through GraftTable.windowVictims, " +
+        "the path the batch changelog takes; a second reconstruction drifts from it: " +
+        hits.mkString(", "))
+  }
 }

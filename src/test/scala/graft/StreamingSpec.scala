@@ -1169,6 +1169,38 @@ class StreamingSpec extends SparkSpec {
       "only the genuine in-window delete may retract across a conversion")
   }
 
+  test("D12-dv-expired: a vector window whose start snapshot expired is refused, not re-emitted") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    val root = "/root/repo/target/laketest/cdcstream-dv-expired"
+    val f = new java.io.File(root)
+    if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", root).! }
+    val t = GraftTable.create(spark, root,
+      (1L to 4L).map(i => (i, s"k$i")).toDF("id", "k").coalesce(1))
+    t.setProperty(GraftTable.DeleteModeProp, "dv")
+    t.setProperty(GraftTable.MaxSnapshotsProp, "2")
+    t.delete(col("id") === 1L) // the file's first vector, before the window
+    // a running stream that has consumed through `start`
+    val src = new graft.streaming.GraftSource(spark, root, changeFeed = true)
+    val start = t.currentId
+    // in the window: a second delete in the same file merges its vector
+    // (the new entry holds both rows' bitmap), then an append expires
+    // the stream's start snapshot under keep-2
+    t.delete(col("id") === 2L)
+    t.append(Seq((5L, "k5")).toDF("id", "k"))
+    graft.lake.GraftTable.snapshotCache.clear()
+    graft.lake.GraftTable.shardCache.clear()
+    assert(t.snapshotIfExists(start).isEmpty, "precondition: the start snapshot expired")
+    assert(t.lineage(start, t.currentId).nonEmpty, "precondition: the window itself is retained")
+    assert(t.current.deleteFiles.exists(d => d.dv && d.addedBy > start),
+      "precondition: the window merged the file's vector")
+    // the start bitmap is gone with the start snapshot: without it the
+    // diff would name row 1 again, so the window is refused
+    val e = intercept[IllegalStateException](
+      src.getBatch(Some(LongOffset(start)), LongOffset(t.currentId)))
+    assert(e.getMessage.contains("has been expired"), e.getMessage)
+  }
+
   test("D12b: a copy-on-write rewrite stops the change feed unless skipChangeCommits") {
     import spark.implicits._
     val root = "/root/repo/target/laketest/cdccow"
