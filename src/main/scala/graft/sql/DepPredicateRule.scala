@@ -1,13 +1,13 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graft.GraftFileIndex
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
-import graft.lake.{GraftTable, Pruning}
+import graft.lake.Pruning
 
 /** Optimizer rule: for filters over graft-table scans, *add* partition
   * predicates on dependency destination columns inferred from source
@@ -20,7 +20,7 @@ import graft.lake.{GraftTable, Pruning}
   * never changes results, and the rule is idempotent (skips when the
   * conjunct is already present).
   */
-case class DepPredicateRule(spark: SparkSession) extends Rule[LogicalPlan] {
+object DepPredicateRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
@@ -47,34 +47,17 @@ case class DepPredicateRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** The deps (+ column types, for literal-encoding-aware inference) of
-    * the graft table this subtree scans, if any — detected by the
-    * scan's file paths living under a registered table root.
+    * the graft snapshot this subtree scans, if any: read off the scan's
+    * own [[GraftFileIndex]], so an `AS OF` read infers through the deps
+    * of the snapshot it plans, and planning reads no table metadata.
     */
   private def graftDepsFor(plan: LogicalPlan)
-      : Option[(Seq[graft.lake.DepSpec], Map[String, org.apache.spark.sql.types.DataType])] = {
-    val rels = plan.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString)
-    }.flatten
-    // Match on path-component boundaries and prefer the longest root:
-    // a bare substring test would let /lake/t claim /lake/t2's scan
-    // (and pick nondeterministically among registrations), injecting
-    // another table's inferred predicates — silently wrong results.
-    val root = rels.iterator.flatMap { p =>
-      GraftCatalog.registeredRoots
-        .filter { r =>
-          val r0 = r.stripPrefix("file:").stripSuffix("/")
-          val i = p.indexOf(r0)
-          i >= 0 && (i + r0.length == p.length || p.charAt(i + r0.length) == '/')
-        }
-        .sortBy(-_.length).headOption
-    }.nextOption()
-    // a stale registration (deleted table dir) must not break planning
-    root.flatMap(r => scala.util.Try {
-      val t = new GraftTable(r, spark)
-      (t.current.deps, t.schema.fields.map(f => f.name -> f.dataType).toMap)
-    }.toOption)
-  }
+      : Option[(Seq[graft.lake.DepSpec], Map[String, org.apache.spark.sql.types.DataType])] =
+    plan.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.location.isInstanceOf[GraftFileIndex] =>
+        fs.location.asInstanceOf[GraftFileIndex].snapshot.deps
+    }.map(deps => (deps, plan.output.map(a => a.name -> a.dataType).toMap))
 
   private def toExprs(attr: Attribute, c: Pruning.Constraint): Seq[Expression] = {
     def lit(v: Any): Option[Literal] = (v, attr.dataType) match {

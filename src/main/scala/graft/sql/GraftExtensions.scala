@@ -42,10 +42,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // writes into root/meta fail loudly (reference:
     // IcebergTableWriteRule.scala:21-41)
     ext.injectPostHocResolutionRule(session => GraftWriteInterceptRule(session))
-    ext.injectOptimizerRule(session => DepPredicateRule(session))
+    ext.injectOptimizerRule(_ => DepPredicateRule)
     // COUNT/MIN/MAX over partition-filtered graft scans answered from
     // manifest stats alone — zero data files read (SURVEY.md §2.A87)
     ext.injectOptimizerRule(session => GraftMetaAggRule(session))
+    // small global aggregates (pruned graft scans, metadata views)
+    // folded on the driver with zero jobs
+    ext.injectPlannerStrategy(session =>
+      org.apache.spark.sql.graft.GraftLocalAggStrategy(session))
     // session-catalog stats follow every commit (see GraftSparkBridge)
     GraftSparkBridge.installStatsHook()
     GraftExtensions.functions.foreach(ext.injectFunction)

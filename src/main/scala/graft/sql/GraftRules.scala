@@ -330,9 +330,8 @@ object GraftWriteInterceptRule {
   /** `(root, targetsData)` when `path` lands inside a registered graft
     * table: its data dir (route through management) or its root/meta
     * (refuse). Staging dirs and unrelated paths return None. Longest
-    * root wins, and matching is on path-component boundaries (same
-    * rationale as [[DepPredicateRule]]: `/lake/t` must not claim
-    * `/lake/t2`).
+    * root wins, and matching is on path-component boundaries
+    * (`/lake/t` must not claim `/lake/t2`).
     */
   def managedTarget(path: String): Option[(String, Boolean)] = {
     val p = path.stripPrefix("file:").stripSuffix("/")

@@ -282,8 +282,10 @@ class GraftSource(
         case _                  => false
       }))
     if (newer) lastEnd = (endId, endP)
-    val endSnap = table.snapshot(endId)
     val (startId, startP) = start.map(parseOffset).getOrElse((0L, None))
+    // a restart re-plans its last committed batch: retention may have
+    // expired that batch's end snapshot meanwhile
+    val endSnap = table.snapshotIfExists(endId).getOrElse(throw expired(startId, endId))
     if (changeFeed) return cdcBatch(startId, endId, endSnap)
     if (retractions) return retractionBatch(startId, endId, endSnap)
     // a file added by an in-window content-invariant rewrite (A92
@@ -382,10 +384,7 @@ class GraftSource(
     * lose them (the physical files live until expire). The deleted
     * pre-window rows come from [[graft.lake.GraftTable.windowVictims]],
     * the victim reconstruction the batch changelog shares: both rebuild
-    * merge-on-read victims through that one path. The feed still takes
-    * the window's vectors from the end snapshot, so a vector that an
-    * in-window `applyDeletes` folds away is not streamed (an open gap
-    * the changelog's file diff does not have).
+    * merge-on-read victims through that one path.
     */
   private def cdcBatch(startId: Long, endId: Long, endSnap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -412,11 +411,7 @@ class GraftSource(
         else applyDels(rel, endSnap.files, endSnap.deleteFiles).drop(PosFileCol, PosIdxCol)
       return withChangeType(visible, "insert").select(order: _*)
     }
-    def expired = new IllegalStateException(
-      s"changelog stream window ($startId, $endId] crosses a snapshot that has been " +
-        "expired — the change history is gone. Retain snapshots at least as long as " +
-        "stream downtime, or restart the stream.")
-    val snaps = table.lineage(startId, endId).getOrElse(throw expired)
+    val snaps = table.lineage(startId, endId).getOrElse(throw expired(startId, endId))
     def isRewrite(s: Snapshot): Boolean =
       s.deletedFiles > 0 || s.operation == "rollback"
     snaps.find(s => isRewrite(s) && !GraftSource.DataPreservingOps.contains(s.operation))
@@ -437,7 +432,7 @@ class GraftSource(
     // pre-addedBy manifests (stamp 0) fall back to the end-minus-start diff
     val winDels: Seq[DeleteFileEntry] =
       if (snaps.exists(_.deleteFiles.exists(_.addedBy == 0L))) {
-        val startDel = table.snapshotIfExists(startId).getOrElse(throw expired)
+        val startDel = table.snapshotIfExists(startId).getOrElse(throw expired(startId, endId))
           .deleteFiles.map(_.path).toSet
         endSnap.deleteFiles.filterNot(d => startDel.contains(d.path))
       } else
@@ -446,13 +441,18 @@ class GraftSource(
     val (winEq, winPos) = winDels.filterNot(_.dv).partition(_.equalityCols.nonEmpty)
     // deletion vectors diff by BITMAP, not by entry path (a merge
     // commit rewrites a file's vector under a new path while the old
-    // entry shrinks): the in-window victims are exactly dv(end) ∖
-    // dv(start) per file (GraftTable.windowVictims). The END snapshot's
-    // age-filtered entries are the current owners of every bitmap an
-    // in-window dv commit touched (an entry stamped ≤ startId cannot
-    // target in-window files).
-    val winDv: Seq[DeleteFileEntry] = endSnap.deleteFiles.filter(d =>
-      d.dv && (d.addedBy == 0L || d.addedBy > startId))
+    // entry shrinks): the in-window victims are exactly dv(window) ∖
+    // dv(start) per file (GraftTable.windowVictims). A file's window
+    // bitmap is its newest in-window vector, taken like winDels from
+    // the committing snapshot's own manifest: an in-window applyDeletes
+    // that folds the vector away does not hide its victims.
+    val winDv: Seq[DeleteFileEntry] = {
+      val stamped = additive.flatMap(s => s.deleteFiles.filter(d => d.dv && d.addedBy == s.id))
+      val newest = stamped.flatMap(d => d.targets.map(_ -> d))
+        .groupMapReduce(_._1)(_._2)((a, b) => if (b.addedBy > a.addedBy) b else a)
+      stamped.map(d => d.copy(targets = d.targets.filter(newest(_).path == d.path)))
+        .filter(_.targets.nonEmpty)
+    }
     val anyDels = winDels.nonEmpty || winDv.nonEmpty
     val insRel = GraftFileIndex.relation(spark, root,
       endSnap.copy(files = insFiles, shards = Seq.empty),
@@ -471,7 +471,7 @@ class GraftSource(
     // bitmap to its new entry, so the start bitmaps the diff needs are
     // gone and the window is refused.
     val startDels = table.snapshotIfExists(startId).map(_.deleteFiles).getOrElse {
-      if (winDv.nonEmpty) throw expired
+      if (winDv.nonEmpty) throw expired(startId, endId)
       endSnap.deleteFiles.filter(d => d.addedBy != 0L && d.addedBy <= startId)
     }
     val pre = snaps.flatMap(s => s.files.filter(_.addedBy <= startId))
@@ -479,6 +479,12 @@ class GraftSource(
     table.windowVictims(endSnap, pre, startDels, winPos, winEq, winDv, isStreaming = true)
       .fold(insTagged)(d => insTagged.unionByName(withChangeType(d, "delete").select(order: _*)))
   }
+
+  /** The window's history is gone: a snapshot it needs has expired. */
+  private def expired(startId: Long, endId: Long) = new IllegalStateException(
+    s"stream window ($startId, $endId] crosses a snapshot that has been " +
+      "expired — the change history is gone. Retain snapshots at least as long as " +
+      "stream downtime, or restart the stream.")
 
   override def stop(): Unit = ()
 

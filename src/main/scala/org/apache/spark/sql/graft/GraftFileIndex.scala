@@ -47,7 +47,25 @@ class GraftFileIndex(
 
   override def sizeInBytes: Long = snapshot.files.map(_.bytes).sum
 
+  // the last listing and its key (the filters, and the session time
+  // zone temporal partition values parse in): a global aggregate's
+  // planning (GraftLocalAggStrategy) lists to size its read, and when it
+  // keeps the normal plan that plan's scan asks again with the same key
+  @volatile private var lastListing: Option[(Any, Seq[PartitionDirectory])] = None
+
   override def listFiles(
+      partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val key = (partitionFilters, dataFilters,
+      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    lastListing.collect { case (k, dirs) if k == key => dirs }.getOrElse {
+      val dirs = prune(partitionFilters, dataFilters)
+      lastListing = Some((key, dirs))
+      dirs
+    }
+  }
+
+  private def prune(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val cs0 = (partitionFilters ++ dataFilters)

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,32 +28,6 @@ class DmlJobsSpec extends SparkSpec {
     GraftTable.MergeModeProp -> "merge-on-read")
   private val Equality = Vectors + (GraftTable.MergeDeleteKindProp -> "equality")
 
-  /** Jobs started by `body` on this session: a sentinel job runs after
-    * it, and the listener bus has delivered every earlier job start
-    * once the sentinel's start arrives (one ordered queue).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val sentinelSeen = new CountDownLatch(1)
-    val sentinel = s"dml-jobs-sentinel-${java.util.UUID.randomUUID()}"
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == sentinel) sentinelSeen.countDown() else jobs.incrementAndGet()
-        ()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(sentinel, "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A fresh 60-row table partitioned on `g` (three partitions, two
     * files each) with `props` set; returns (jobs, operations the verb
     * committed).
@@ -68,7 +38,7 @@ class DmlJobsSpec extends SparkSpec {
       rows(1L to 60L, 1.0).repartition(2), partitionCols = Seq("g"))
     if (props.nonEmpty) t.setProperties(props)
     val before = t.currentId
-    val n = jobsOf(verb(t))
+    val n = SparkSpec.jobsOf(spark)(verb(t))
     (n, t.snapshots.filter(_.id > before).map(_.operation))
   }
 
@@ -84,8 +54,10 @@ class DmlJobsSpec extends SparkSpec {
   // (case, properties, verb, jobs, committed operations). No keyed row
   // persists its source keys (the key-bounds agg and the join each read
   // them once), so none pays the cache-materialization job AQE runs for
-  // a cached input; the no-match rows run the key-bounds agg alone. A
-  // change here is a plan change: argue it, do not just re-pin.
+  // a cached input. These sources are local relations, so the key-bounds
+  // agg folds on the driver with no job (GraftLocalAggStrategy), and the
+  // no-match rows run none. A change here is a plan change: argue it, do
+  // not just re-pin.
   private val cases: Seq[(String, Map[String, String], GraftTable => Unit, Int, Seq[String])] = Seq(
     ("delete-partition", Vectors, _.delete(col("g") === 1L), 0, delete),
     ("delete-cow", Cow, _.delete(col("k") <= 5L), 1, delete),
@@ -96,19 +68,19 @@ class DmlJobsSpec extends SparkSpec {
     ("update-dv", Vectors, _.update(col("k") <= 5L, Map("v" -> (col("v") + 1.0))), 4, update),
     ("update-cow-nomatch", Cow, _.update(col("k") > 1000L, Map("v" -> lit(0.0))), 0, update),
     ("update-dv-nomatch", Vectors, _.update(col("k") > 1000L, Map("v" -> lit(0.0))), 0, update),
-    ("merge-cow", Cow, _.merge(upsert(), Seq("k")), 4, merge),
-    ("merge-dv", Vectors, _.merge(upsert(), Seq("k")), 6, merge),
+    ("merge-cow", Cow, _.merge(upsert(), Seq("k")), 2, merge),
+    ("merge-dv", Vectors, _.merge(upsert(), Seq("k")), 4, merge),
     ("merge-eq", Equality, _.merge(upsert(), Seq("k")), 3, merge),
-    ("mergeDelete-cow", Cow, _.mergeDelete(doomed(), Seq("k")), 4, mergeDelete),
-    ("mergeDelete-dv", Vectors, _.mergeDelete(doomed(), Seq("k")), 5, mergeDelete),
+    ("mergeDelete-cow", Cow, _.mergeDelete(doomed(), Seq("k")), 2, mergeDelete),
+    ("mergeDelete-dv", Vectors, _.mergeDelete(doomed(), Seq("k")), 3, mergeDelete),
     ("mergeDelete-eq", Equality, _.mergeDelete(doomed(), Seq("k")), 2, mergeDelete),
-    ("mergeDelete-cow-props", Cow, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 4, mergeDelete),
-    ("mergeDelete-dv-props", Vectors, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 5, mergeDelete),
+    ("mergeDelete-cow-props", Cow, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 2, mergeDelete),
+    ("mergeDelete-dv-props", Vectors, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 3, mergeDelete),
     ("mergeDelete-eq-props", Equality, _.mergeDelete(doomed(), Seq("k"), Map("x" -> "1")), 2, mergeDelete),
-    ("mergeDelete-cow-nomatch", Cow, _.mergeDelete(nothing(), Seq("k")), 2, Seq.empty),
-    ("mergeDelete-dv-nomatch", Vectors, _.mergeDelete(nothing(), Seq("k")), 2, Seq.empty),
+    ("mergeDelete-cow-nomatch", Cow, _.mergeDelete(nothing(), Seq("k")), 0, Seq.empty),
+    ("mergeDelete-dv-nomatch", Vectors, _.mergeDelete(nothing(), Seq("k")), 0, Seq.empty),
     ("mergeDelete-dv-nomatch-props", Vectors,
-      _.mergeDelete(nothing(), Seq("k"), Map("x" -> "1")), 2, Seq("set-properties")))
+      _.mergeDelete(nothing(), Seq("k"), Map("x" -> "1")), 0, Seq("set-properties")))
 
   test("row-level DML: job counts and committed operations per verb x write mode") {
     // one throwaway DML first, so no case pays first-use planning jobs

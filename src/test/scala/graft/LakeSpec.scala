@@ -482,6 +482,27 @@ class LakeSpec extends SparkSpec {
     o.unpersist()
   }
 
+  test("AS OF infers partition filters through the deps of the snapshot it scans") {
+    val o = Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
+    val t = GraftTable.create(spark, tmp("asof-deps"), o.repartition(col("o_orderpriority")),
+      Seq("prio_t"), Seq(DepSpec("o_orderpriority", "prio_t", "truncate[1]")))
+    val withDep = t.currentId
+    // the new spec drops the dependency: the current snapshot has none
+    t.repartitionSpec(Seq("o_orderstatus"))
+    assert(t.current.deps.isEmpty)
+    graft.sql.GraftCatalog.register("asof_deps", t.root)
+    val df = spark.sql(s"AS OF '$withDep' SELECT o_orderkey FROM asof_deps " +
+      "WHERE o_orderpriority = '1-URGENT'")
+    val scans = df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size === 1)
+    assert(scans.head.partitionFilters.exists(_.references.exists(_.name == "prio_t")),
+      s"no inferred prio_t partition filter: ${scans.head.partitionFilters}")
+    assert(df.count() === o.filter(col("o_orderpriority") === "1-URGENT").count())
+  }
+
   test("compaction packs fragmented partitions and leaves compact ones alone") {
     val o = Tables.orders(spark, sfDir)
     val t = GraftTable.create(spark, tmp("compact"),

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,5 +28,31 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Jobs started by `body` on `spark`: a sentinel job runs after it,
+    * and the listener bus has delivered every earlier job start once
+    * the sentinel's start arrives (one ordered queue).
+    */
+  def jobsOf(spark: SparkSession)(body: => Unit): Int = {
+    val jobs = new AtomicInteger(0)
+    val sentinelSeen = new CountDownLatch(1)
+    val sentinel = s"jobs-sentinel-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == sentinel) sentinelSeen.countDown() else jobs.incrementAndGet()
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(sentinel, "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
   }
 }

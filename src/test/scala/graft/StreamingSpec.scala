@@ -1201,6 +1201,83 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("has been expired"), e.getMessage)
   }
 
+  test("D12-dv-fold: a vector delete that applyDeletes folds in the same window still streams") {
+    import spark.implicits._
+    val root = new java.io.File("target/laketest/cdcstream-dv-fold").getAbsolutePath
+    val ckpt = s"$root-ckpt"
+    for (p <- Seq(root, ckpt)) {
+      val f = new java.io.File(p)
+      if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", p).! }
+    }
+    val t = GraftTable.create(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "k").coalesce(1))
+    t.setProperty(GraftTable.DeleteModeProp, "dv")
+    val changes = scala.collection.mutable.ArrayBuffer[(String, Long, String)]()
+    def drainOnce(): Unit = {
+      val q = spark.readStream.format("graft.streaming.GraftSourceProvider")
+        .option("path", root).option("readChangeFeed", "true").load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          changes ++= batch.select("_change_type", "id", "k").collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getString(2))); ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    drainOnce()
+    changes.clear()
+    // one window: a vector delete, then the fold that rewrites its file
+    val start = t.currentId
+    t.delete(col("id") === 2L)
+    t.applyDeletes()
+    assert(t.current.deleteFiles.isEmpty, "precondition: the fold dropped the vector")
+    drainOnce()
+    assert(changes.toSet === Set(("delete", 2L, "b")), s"folded vector delete: $changes")
+    val batch = t.changelog(start, t.currentId).select("_change_type", "id", "k").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(changes.toSet === batch, "the feed and the batch changelog agree")
+    changes.clear()
+    // a row appended, vector-deleted and folded in one window never was
+    t.append(Seq((3L, "c"), (4L, "d")).toDF("id", "k").coalesce(1))
+    t.delete(col("id") === 3L)
+    t.applyDeletes()
+    drainOnce()
+    assert(changes.toSet === Set(("insert", 4L, "d")), s"appended, deleted and folded: $changes")
+  }
+
+  test("D9d: a restart after retention expired the last committed snapshot names the expired history") {
+    import spark.implicits._
+    val root = new java.io.File("target/laketest/streamsrc-restart-expired").getAbsolutePath
+    val ckpt = s"$root-ckpt"
+    for (p <- Seq(root, ckpt)) {
+      val f = new java.io.File(p)
+      if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", p).! }
+    }
+    val t = GraftTable.create(spark, root, Seq((1L, "a")).toDF("id", "k"))
+    t.setProperty(GraftTable.MaxSnapshotsProp, "2")
+    val seen = scala.collection.mutable.ArrayBuffer[Long]()
+    def drainOnce(): Unit = {
+      val q = spark.readStream.format("graft.streaming.GraftSourceProvider")
+        .option("path", root).load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen ++= batch.select("id").collect().map(_.getLong(0)); ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    drainOnce()
+    assert(seen.toSet === Set(1L))
+    val drained = t.currentId
+    t.append(Seq((2L, "b")).toDF("id", "k"))
+    t.append(Seq((3L, "c")).toDF("id", "k"))
+    graft.lake.GraftTable.snapshotCache.clear()
+    graft.lake.GraftTable.shardCache.clear()
+    assert(t.snapshotIfExists(drained).isEmpty, "precondition: keep-2 expired the drained snapshot")
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drainOnce())
+    assert(err.getCause.isInstanceOf[IllegalStateException], s"raw failure: ${err.getCause}")
+    assert(err.getCause.getMessage.contains("has been expired"), err.getCause.getMessage)
+  }
+
   test("D12b: a copy-on-write rewrite stops the change feed unless skipChangeCommits") {
     import spark.implicits._
     val root = "/root/repo/target/laketest/cdccow"
