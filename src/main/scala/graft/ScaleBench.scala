@@ -728,16 +728,7 @@ object ScaleBench {
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/root/repo/target/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned like Verify/Bench/specs: events NTZ normalization is
-      // timezone-sensitive
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
     if (sys.env.contains("SPARK_GRAFT_SCALEBENCH_PLAN")) {
       planBench(spark)
       spark.stop()

@@ -1291,7 +1291,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
 
     val morModes =
       if (modeProp == GraftTable.DeleteModeProp) Set("merge-on-read", "dv") else Set("merge-on-read")
-    val mor = props.get(modeProp).exists(morModes) && uniqueBaseNames(cur)
+    val mor = props.get(modeProp).exists(morModes) && uniqueBaseNames(cur.files)
     val equality = mor && hit.isInstanceOf[ByKeys] &&
       props.get(GraftTable.MergeDeleteKindProp).contains("equality")
     val keys: Option[DataFrame] = hit match {
@@ -1395,8 +1395,8 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * precondition for coordinate deletes (engine-written files always
     * satisfy it; adopted layouts may not).
     */
-  private def uniqueBaseNames(s: Snapshot): Boolean = {
-    val names = s.files.map(f => GraftTable.baseName(f.path))
+  private def uniqueBaseNames(files: Seq[FileEntry]): Boolean = {
+    val names = files.map(f => GraftTable.baseName(f.path))
     names.distinct.size == names.size
   }
 
@@ -1423,30 +1423,40 @@ final class GraftTable(val root: String, spark: SparkSession) {
   }
 
   /** Convert pending POSITION-delete files into deletion vectors — the
-    * migration path onto A90 (Iceberg v3's position-delete→DV rewrite):
-    * read the position parquets (delete-set scale, never data scale),
-    * fold their coordinates into per-file bitmaps merged with any
-    * existing vectors, and swap the entries in ONE commit. Equality
+    * migration path onto A90 (Iceberg v3's position-delete→DV rewrite)
+    * and `CALL system.rewrite_position_delete_files`: fold their
+    * coordinates into per-file bitmaps merged with any existing vectors
+    * ([[positionsToDv]]) and swap the entries in ONE commit. Equality
     * deletes are untouched (no coordinates to vectorize); logical
     * content is identical before and after (the commit is classified
-    * data-preserving, so change feeds stay silent across it) — the
-    * payoff is the A90 read contract (one bitmap probe per file
-    * instead of N anti-join inputs) WITHOUT paying applyDeletes' data
-    * rewrite. Position entries come only from legacy tables and
-    * Iceberg imports: graft itself writes merge-on-read deletes as
-    * vectors.
+    * data-preserving, so change feeds stay silent across it). The read
+    * path knows vectors and equality deletes only, so a table holding
+    * position entries (one written before vectors existed) reads only
+    * after this runs; Iceberg imports convert theirs on import.
     */
   def convertDeletesToDv(): GraftTable = {
     val cur = current
-    val posDels = cur.deleteFiles.filter(d => d.equalityCols.isEmpty && !d.dv)
+    val (posDels, rest) = cur.deleteFiles.partition(GraftTable.isPosition)
     if (posDels.isEmpty) return this
-    require(uniqueBaseNames(cur),
-      "position→dv conversion needs unique file basenames (adopted table?)")
-    val hits = deleteRows(posDels)
-    val (dvOld, eqDels) = cur.deleteFiles.filterNot(posDels.contains)
-      .partition(_.dv)
-    val (dvList, _) = mergedDvEntries(hits, cur.id + 1, dvOld)
+    val (dvOld, eqDels) = rest.partition(_.dv)
+    val dvList = positionsToDv(posDels.map(_.path), cur.files, cur.id + 1, dvOld)
     commitNext(cur, "convert-deletes")(_.copy(deleteFiles = eqDels ++ dvList))
+  }
+
+  /** The position→vector kernel of [[convertDeletesToDv]] and the
+    * Iceberg import: read the coordinates of the position files at
+    * `paths` (delete-set scale, never data scale), drop those naming a
+    * file outside `files`, and merge the rest into `dvOld`
+    * ([[mergedDvEntries]]); returns the replacement vector list.
+    */
+  private[lake] def positionsToDv(paths: Seq[String], files: Seq[FileEntry],
+      snapId: Long, dvOld: Seq[DeleteFileEntry]): Seq[DeleteFileEntry] = {
+    import spark.implicits._
+    require(uniqueBaseNames(files),
+      "position→dv conversion needs unique file basenames (adopted table?)")
+    val live = broadcast(files.map(f => GraftTable.baseName(f.path)).toDF("file_name"))
+    mergedDvEntries(deleteRows(paths).join(live, Seq("file_name"), "left_semi"),
+      snapId, dvOld)._1
   }
 
   /** The commit kernel of every merge-on-read coordinate delete
@@ -1613,16 +1623,11 @@ final class GraftTable(val root: String, spark: SparkSession) {
   def applyDeletes(): GraftTable = {
     val cur = current
     if (cur.deleteFiles.isEmpty) return this
-    val (eqDels, rest) = cur.deleteFiles.partition(_.equalityCols.nonEmpty)
-    val (dvDels, posDels) = rest.partition(_.dv)
+    GraftTable.refusePositionDeletes(cur.deleteFiles)
+    val (eqDels, dvDels) = cur.deleteFiles.partition(_.equalityCols.nonEmpty)
     // dv targets are complete by construction — affected set is
     // manifest metadata, zero delete-parquet I/O
     val dvAffected: Set[String] = dvDels.flatMap(_.targets).toSet
-    val posAffected: Set[String] =
-      if (posDels.isEmpty) Set.empty
-      else deleteRows(posDels)
-        .select(col("file_name")).distinct()
-        .collect().map(_.getString(0)).toSet
     // equality targets are not recorded — candidates come from key
     // bounds + age pruning (metadata-only; may rewrite a file that held
     // no matching key, which costs a rewrite, never correctness)
@@ -1630,7 +1635,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
       if (eqDels.isEmpty) Set.empty
       else eqDeleteCandidates(cur.files, eqDels)
         .map(f => GraftTable.baseName(f.path)).toSet
-    val affected = posAffected ++ eqAffected ++ dvAffected
+    val affected = eqAffected ++ dvAffected
     val (cands, kept) = cur.files.partition(f => affected.contains(GraftTable.baseName(f.path)))
     val survivors = readSnapshot(cur.copy(files = cands, shards = Seq.empty))
     val added =
@@ -2298,19 +2303,7 @@ final class GraftTable(val root: String, spark: SparkSession) {
     val packCands = cur.files.filter(f => fragParts.contains(f.partition))
     val foldCands = cur.files.filter(f => foldSel.contains(f.partition))
     val packAdded =
-      if (packCands.isEmpty) Seq.empty[FileEntry]
-      else {
-        val frag = readSnapshot(cur.copy(files = packCands, shards = Seq.empty))
-        // repartition on the partition columns → exactly one task (and
-        // so one file) per partition value; unpartitioned tables pack
-        // into targetBytes-sized splits
-        val packed =
-          if (cur.partitionCols.nonEmpty)
-            frag.repartition(cur.partitionCols.map(col): _*)
-          else frag.repartition(math.max(1,
-            math.ceil(packCands.map(_.bytes).sum.toDouble / targetBytes).toInt))
-        writeFiles(packed, cur.partitionCols, cur.deps, cur.id + 1)
-      }
+      if (packCands.isEmpty) Seq.empty[FileEntry] else pack(cur, packCands, targetBytes)
     val foldAdded =
       if (foldCands.isEmpty) Seq.empty[FileEntry]
       else writeFiles(readSnapshot(cur.copy(files = foldCands, shards = Seq.empty)),
@@ -2341,22 +2334,31 @@ final class GraftTable(val root: String, spark: SparkSession) {
     if (smallSel.isEmpty) return this
     val smallPaths = smallSel.map(_.path).toSet
     val kept = cur.files.filterNot(f => smallPaths.contains(f.path))
-    val frag = readSnapshot(cur.copy(files = smallSel, shards = Seq.empty))
-    val packed =
-      if (cur.partitionCols.nonEmpty)
-        frag.repartition(cur.partitionCols.map(col): _*)
-      else frag.repartition(math.max(1,
-        math.ceil(smallSel.map(_.bytes).sum.toDouble / targetBytes).toInt))
-    val added = writeFiles(packed, cur.partitionCols, cur.deps, cur.id + 1)
+    val added = pack(cur, smallSel, targetBytes)
     commitNext(cur, "compact")(_.copy(files = kept ++ added,
       addedFiles = added.size, deletedFiles = smallSel.size))
   }
 
+  /** The packing kernel of [[optimizeCompact]] and [[compactSmallFiles]]:
+    * read `files` through `cur`'s pending deletes and rewrite them
+    * repartitioned on the partition columns — exactly one task (and so
+    * one file) per partition value — or, unpartitioned, into
+    * `targetBytes`-sized splits.
+    */
+  private def pack(cur: Snapshot, files: Seq[FileEntry], targetBytes: Long): Seq[FileEntry] = {
+    val frag = readSnapshot(cur.copy(files = files, shards = Seq.empty))
+    val packed =
+      if (cur.partitionCols.nonEmpty) frag.repartition(cur.partitionCols.map(col): _*)
+      else frag.repartition(math.max(1,
+        math.ceil(files.map(_.bytes).sum.toDouble / targetBytes).toInt))
+    writeFiles(packed, cur.partitionCols, cur.deps, cur.id + 1)
+  }
+
   /** Partitions whose pending-delete density crosses the compaction
-    * ratio. Position entries attribute their rows to each recorded
+    * ratio. Vector entries attribute their rows to each recorded
     * target's partition (multi-target entries over-attribute —
     * compacts sooner, never later); unknown-target entries (equality
-    * flavor, legacy, past the target cap) can touch anything, so past
+    * flavor) can touch anything, so past
     * the ratio of the WHOLE table they nominate every partition.
     * Pure manifest arithmetic — no delete parquet is read.
     */
@@ -2554,7 +2556,9 @@ final class GraftTable(val root: String, spark: SparkSession) {
   /** [[changelog]] over a window with removals or delete entries (any
     * window, in fact: on an append-only one it returns the same rows).
     */
-  private[graft] def rowLevelChangelog(from: Snapshot, to: Snapshot): DataFrame = {
+  private[graft] def rowLevelChangelog(start: Snapshot, to: Snapshot): DataFrame = {
+    val from = start.copy(deleteFiles =
+      startVectors(start.deleteFiles, lineage(start.id, to.id).getOrElse(Nil)))
     val fromPaths = from.files.map(_.path).toSet
     val toPaths = to.files.map(_.path).toSet
     val removed = from.files.filterNot(f => toPaths.contains(f.path))
@@ -2570,13 +2574,12 @@ final class GraftTable(val root: String, spark: SparkSession) {
     // bitmap: a merge commit writes a file's vector under a new path
     // and the old entry only shrinks, so the new paths hold every
     // changed bitmap.
-    val (newDv, newRest) = {
+    val (newDv, newEq) = {
       val fromDel = from.deleteFiles.map(_.path).toSet
       to.deleteFiles.filterNot(d => fromDel.contains(d.path)).partition(_.dv)
     }
-    val (newEq, newPos) = newRest.partition(_.equalityCols.nonEmpty)
     val victims = windowVictims(from, from.files.filter(f => toPaths.contains(f.path)),
-      from.deleteFiles, newPos, newEq, newDv, isStreaming = false)
+      from.deleteFiles, newEq, newDv, isStreaming = false)
     // One signed-multiplicity pass replaces the two EXCEPT ALL
     // directions (r13 optimization): exceptAll executes BOTH child
     // subtrees per direction, so added/removed files were each scanned
@@ -2612,66 +2615,62 @@ final class GraftTable(val root: String, spark: SparkSession) {
     * [[changelog]] and the streaming change feed
     * ([[graft.streaming.GraftSource]]). `pre` holds the pre-window
     * rows, `startDels` the delete entries live at the window start, and
-    * `winPos`/`winEq`/`winDv` the window's position, equality and
-    * deletion-vector entries. The kinds claim victims in that order,
-    * each reading with the earlier kinds' victims hidden: position
-    * coordinates, then the bitmap diff dv(window) ∖ dv(start), then the
-    * equality split — so a row that a vector and an equality delete
-    * both kill in one window is one victim. Position and vector reads
-    * are pruned to their target files (a vector's are in the manifest;
-    * position files are read once for theirs); a window with no entry
-    * reads nothing. `at` supplies the schema, defaults and broadcast
-    * gates.
+    * `winEq`/`winDv` the window's equality and deletion-vector entries.
+    * The bitmap diff dv(window) ∖ dv(start) claims victims first, then
+    * the equality split reads with the window's vectors applied — so a
+    * row that a vector and an equality delete both kill in one window
+    * is one victim. Vector reads are pruned to their manifest targets;
+    * a window with no entry reads nothing. `at` supplies the schema, defaults and broadcast
+    * gates. `startDels` holds no position entry ([[startVectors]]).
     */
   private[graft] def windowVictims(at: Snapshot, pre: Seq[FileEntry],
-      startDels: Seq[DeleteFileEntry], winPos: Seq[DeleteFileEntry],
-      winEq: Seq[DeleteFileEntry], winDv: Seq[DeleteFileEntry],
-      isStreaming: Boolean): Option[DataFrame] = {
+      startDels: Seq[DeleteFileEntry], winEq: Seq[DeleteFileEntry],
+      winDv: Seq[DeleteFileEntry], isStreaming: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    val (startDv, startRest) = startDels.partition(_.dv)
+    val (startDv, startEq) = startDels.partition(_.dv)
     // the rows of `files` that `dels` leave, with their coordinates
     def visible(files: Seq[FileEntry], dels: Seq[DeleteFileEntry]): DataFrame = {
       val s = at.copy(files = files, shards = Seq.empty)
       hideDeleted(relationWithDefaults(s, withRowPos = true, isStreaming), s, dels)
     }
-    // the rows of the `targets` files that `dels` leave, at `coords`
-    def claim(targets: Set[String], dels: Seq[DeleteFileEntry],
-        coords: => DataFrame): Option[DataFrame] = {
-      val files = pre.filter(f => targets.contains(GraftTable.baseName(f.path)))
-      if (files.isEmpty) None
+    // a coordinate in the diff was live in its start vector, so the
+    // start vectors need not be hidden
+    val owned = winDv.flatMap(_.targets).toSet
+    val dvFiles = pre.filter(f => owned.contains(GraftTable.baseName(f.path)))
+    val dvVictims =
+      if (dvFiles.isEmpty) None
       else {
-        val (base, c) = (visible(files, dels), coords)
+        val (base, c) = (visible(dvFiles, startEq), dvDiffRows(winDv, startDv))
         Some(base.join(c, base(PosFileCol) === c("file_name") &&
           base(PosIdxCol) === c("row_index"), "left_semi"))
       }
-    }
-    val posVictims =
-      if (winPos.isEmpty) None
-      else {
-        val rows = deleteRowsHinted(at.properties, winPos)
-        claim(rows.select(col("file_name")).distinct().collect().map(_.getString(0)).toSet,
-          startDels, rows)
-      }
-    // a coordinate in the diff was live in its start vector, so the
-    // start vectors need not be hidden; start position entries must be
-    // (an in-window position → vector conversion re-names their victims)
-    val dvVictims =
-      if (winDv.isEmpty) None
-      else claim(winDv.flatMap(_.targets).toSet, startRest ++ winPos,
-        dvDiffRows(winDv, startDv))
     val eqVictims = Some(winEq).filter(_.nonEmpty).map(eqDeleteCandidates(pre, _))
       .filter(_.nonEmpty).flatMap { cands =>
         // the window's vectors own the files they touched: each file
         // keeps one bitmap, as hideDeleted's vector probe requires
-        val owned = winDv.flatMap(_.targets).toSet
         val endDv = winDv ++ startDv.map(d => d.copy(targets = d.targets.filterNot(owned)))
           .filter(_.targets.nonEmpty)
-        eqDeleteSplit(visible(cands, startRest ++ winPos ++ endDv),
+        eqDeleteSplit(visible(cands, startEq ++ endDv),
           at.copy(files = cands, shards = Seq.empty), winEq)._2
       }
-    (posVictims ++ dvVictims ++ eqVictims).map(_.drop(PosFileCol, PosIdxCol))
+    (dvVictims ++ eqVictims).map(_.drop(PosFileCol, PosIdxCol))
       .reduceOption(_ unionByName _)
   }
+
+  /** The delete entries live at a window's start, with its position
+    * entries (a table written before vectors existed) replaced by the
+    * vectors of the window's first [[convertDeletesToDv]] commit: they
+    * hold exactly the start's vectors and position coordinates, since
+    * no vector is written while position entries are pending (every
+    * verb that writes one reads the table first). A start holding
+    * position entries with no conversion in `window` is refused.
+    */
+  private[graft] def startVectors(startDels: Seq[DeleteFileEntry],
+      window: => Seq[Snapshot]): Seq[DeleteFileEntry] =
+    if (!startDels.exists(GraftTable.isPosition)) startDels
+    else window.find(_.operation == "convert-deletes")
+      .map(c => startDels.filter(_.equalityCols.nonEmpty) ++ c.deleteFiles.filter(_.dv))
+      .getOrElse { GraftTable.refusePositionDeletes(startDels); startDels }
 
   /** Roll the table back to an earlier snapshot's file set — recorded
     * as a NEW snapshot (history is never rewritten).
@@ -3068,30 +3067,21 @@ final class GraftTable(val root: String, spark: SparkSession) {
   private def readSnapshotPos(s: Snapshot): DataFrame =
     hideDeleted(relationWithDefaults(s, withRowPos = true), s, s.deleteFiles)
 
-  /** Hide from `df` the rows a delete set kills: position deletes
-    * first (anti-join on the row coordinates), then deletion vectors
-    * (one bitmap probe per row, O(1) per file however many commits
+  /** Hide from `df` the rows a delete set kills: deletion vectors
+    * first (one bitmap probe per row, O(1) per file however many commits
     * produced them), then equality deletes. `df` must carry the
     * `_graft_file`/`_graft_pos` position columns, which stay. `snap`
     * supplies the broadcast gate (its properties) and the addedBy-stamp
     * universe equality sequencing reads (its files). Every join is
     * against a STATIC delete frame, so this one chain serves the batch
-    * read path and the streaming source alike.
+    * read path and the streaming source alike. A position entry is
+    * refused ([[GraftTable.refusePositionDeletes]]).
     */
   private[graft] def hideDeleted(
       df: DataFrame, snap: Snapshot, dels: Seq[DeleteFileEntry]): DataFrame = {
-    import org.apache.spark.sql.graft.GraftFileIndex.{PosFileCol, PosIdxCol}
-    val (eqDels, rest) = dels.partition(_.equalityCols.nonEmpty)
-    val (dvDels, posDels) = rest.partition(_.dv)
-    val afterPos =
-      if (posDels.isEmpty) df
-      else {
-        val d = deleteRowsHinted(snap.properties, posDels)
-        df.join(d, df(PosFileCol) === d("file_name") && df(PosIdxCol) === d("row_index"),
-          "left_anti")
-      }
-    val afterDv =
-      if (dvDels.isEmpty) afterPos else minusDvDeletes(afterPos, snap.properties, dvDels)
+    GraftTable.refusePositionDeletes(dels)
+    val (eqDels, dvDels) = dels.partition(_.equalityCols.nonEmpty)
+    val afterDv = if (dvDels.isEmpty) df else minusDvDeletes(df, snap.properties, dvDels)
     if (eqDels.isEmpty) afterDv else eqDeleteSplit(afterDv, snap, eqDels)._1
   }
 
@@ -3192,29 +3182,19 @@ final class GraftTable(val root: String, spark: SparkSession) {
     hit.values.toSeq
   }
 
-  /** The union of the given position-delete files as a DataFrame of
-    * `(file_name, row_index)`.
+  /** The union of the position-delete files at `paths` as a DataFrame
+    * of `(file_name, row_index)`. A file holds either graft's layout
+    * (those two columns, as its Iceberg export writes them) or the
+    * Iceberg spec's `(file_path, pos)`, whose path is cut to its
+    * basename; the columns a file lacks read as null, so one scan takes
+    * both.
     */
-  private[graft] def deleteRows(dels: Seq[DeleteFileEntry]): DataFrame =
-    spark.read.schema("file_name STRING, row_index BIGINT")
-      .parquet(dels.map(d => GraftTable.resolveEntry(root, d.path)): _*)
-
-  /** [[deleteRows]] with a broadcast hint IF the set's recorded bytes
-    * fit under `write.delete.broadcast-threshold` (default 32 MB).
-    * MOR reads anti-join the pending delete set on every scan until
-    * OPTIMIZE folds it back; hinting broadcast unconditionally turns a
-    * TB-scale delete set (a 10 % MOR MERGE of a 100 TB table) into a
-    * guaranteed driver OOM, while never hinting costs every point-read
-    * a shuffle. The manifest records each delete file's length at
-    * write time, so the decision is metadata-only; past the threshold
-    * Spark's planner (and AQE, from runtime sizes) picks the join.
-    */
-  private def deleteRowsHinted(
-      props: Map[String, String], dels: Seq[DeleteFileEntry]): DataFrame = {
-    val df = deleteRows(dels)
-    val limit = props.get(GraftTable.DeleteBroadcastProp).map(_.toLong)
-      .getOrElse(GraftTable.DefaultDeleteBroadcastBytes)
-    if (GraftTable.deleteSetBytes(dels) <= limit) broadcast(df) else df
+  private def deleteRows(paths: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.substring_index
+    spark.read.schema("file_name STRING, row_index BIGINT, file_path STRING, pos BIGINT")
+      .parquet(paths.map(GraftTable.resolveEntry(root, _)): _*)
+      .select(coalesce(col("file_name"), substring_index(col("file_path"), "/", -1))
+        .as("file_name"), coalesce(col("row_index"), col("pos")).as("row_index"))
   }
 
   /** Full-table read of the current snapshot. */
@@ -3546,6 +3526,28 @@ object GraftTable {
     */
   val DriverStatThreshold = 16
 
+  /** A position-delete entry: exact `(file, row)` coordinates, neither
+    * a deletion vector nor an equality key set. Only tables written
+    * before vectors existed hold them; see [[refusePositionDeletes]].
+    */
+  private[graft] def isPosition(d: DeleteFileEntry): Boolean =
+    d.equalityCols.isEmpty && !d.dv
+
+  /** The one refusal of a delete set holding position entries: the read
+    * path (batch reads, `changelog`, the streaming source, maintenance)
+    * knows deletion vectors and equality deletes only, and
+    * [[GraftTable.convertDeletesToDv]] is the one reader of position
+    * coordinates.
+    */
+  private[graft] def refusePositionDeletes(dels: Seq[DeleteFileEntry]): Unit =
+    dels.find(isPosition).foreach { d =>
+      throw new UnsupportedOperationException(
+        s"pending position-delete file ${d.path}: graft reads deletion vectors and " +
+          "equality deletes only. Convert the table's position deletes first with " +
+          "CALL system.rewrite_position_delete_files(table => '<table>') " +
+          "(GraftTable.convertDeletesToDv); its rows read the same afterwards.")
+    }
+
   /** `FileEntry.addedBy` sentinel for files written but not yet
     * committed; [[GraftTable.stage]] replaces it with the final id.
     */
@@ -3654,8 +3656,8 @@ object GraftTable {
 
   /** TBLPROPERTIES key: max bytes of a merge-on-read helper frame
     * that is still broadcast-hinted — the recorded bytes of a pending
-    * delete set MOR reads join (see [[GraftTable.deleteRowsHinted]],
-    * [[GraftTable.minusDvDeletes]]) and the estimated bytes of a keyed
+    * delete set MOR reads join (see [[GraftTable.minusDvDeletes]] and
+    * the equality split) and the estimated bytes of a keyed
     * MOR write's source keys (see [[GraftTable.sourceKeysHinted]]).
     */
   val DeleteBroadcastProp = "write.delete.broadcast-threshold"
@@ -3818,7 +3820,7 @@ object GraftTable {
   val DefaultOrphanGraceMillis: Long = 24L * 60 * 60 * 1000
   val OrphanGraceProp = "vacuum.orphan.grace-ms"
 
-  private[lake] def baseName(path: String): String =
+  private[graft] def baseName(path: String): String =
     path.substring(path.lastIndexOf('/') + 1)
 
   /** (root, shard path) → parsed file entries. Shards are immutable

@@ -402,9 +402,9 @@ object IcebergAvro {
         // the spec's current name for field 3 is data_sequence_number
         // (renamed from v2's original sequence_number); accept either
         // so manifests from newer external writers decode too
-        // (GenericRecord.get returns null for an absent field name)
-        sequenceNumber = Option(r.get("sequence_number"))
-          .orElse(Option(r.get("data_sequence_number")))
+        // (GenericRecord.get throws on a field name its schema lacks)
+        sequenceNumber = Seq("sequence_number", "data_sequence_number")
+          .find(r.getSchema.getField(_) != null).flatMap(n => Option(r.get(n)))
           .map(_.asInstanceOf[Long]),
         content = df.get("content").asInstanceOf[Int],
         filePath = df.get("file_path").toString,

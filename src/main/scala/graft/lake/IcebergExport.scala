@@ -31,7 +31,8 @@ import org.apache.spark.sql.types._
   *    serialization) and null counts keyed by Iceberg field id;
   *    equality-delete entries carry `equality_ids` (content kind
   *    2 = equality, 1 = position). Deletion vectors export as position
-  *    deletes materialized under `<out>/deletes/`.
+  *    deletes materialized under `<out>/deletes/` and import back as
+  *    vectors.
   *  - `*.json` twins of every manifest list and manifest — the same
   *    logical entries with human-readable stat strings, for debugging
   *    (`snapshots[].graft-manifest-list-json` points at the twin
@@ -570,7 +571,8 @@ object IcebergExport {
     * claiming Iceberg's own `bucket[n]` imports WITHOUT the dep
     * (Iceberg's bucket murmur3 is not graft's hash — claiming it
     * would prune the wrong files; identity partition pruning over the
-    * imported per-file partition values still works).
+    * imported per-file partition values still works). Position deletes
+    * import as deletion vectors, equality deletes as themselves.
     */
   def importMetadata(spark: org.apache.spark.sql.SparkSession,
       metadataPath: String, destRoot: String): GraftTable = {
@@ -656,6 +658,11 @@ object IcebergExport {
         equalityIds = Option(df.get("equality_ids")).map(_.elements().asScala
           .map(_.asInt()).toSeq).getOrElse(Seq.empty))
     }
+    // an entry without a sequence number inherits its manifest's (the
+    // spec's rule for ADDED entries); stamping curId instead would put
+    // a foreign equality delete on the sequence of the data it kills
+    def inherit(seq: Long)(e: IcebergAvro.DecodedEntry): IcebergAvro.DecodedEntry =
+      if (e.sequenceNumber.isDefined) e else e.copy(sequenceNumber = Some(seq))
     val (dataEntries, delEntries): (Seq[IcebergAvro.DecodedEntry], Seq[IcebergAvro.DecodedEntry]) =
       if (mlPath.endsWith(".avro")) {
         val hp = new HPath(mlPath)
@@ -663,16 +670,18 @@ object IcebergExport {
         val ml = IcebergAvro.readManifestList(mfs, hp)
         // status 2 = DELETED by this snapshot (the removal half of an
         // incremental diff) — never part of the live file set
-        def rd(kind: Int) = ml.filter(_.content == kind).flatMap(e =>
-          IcebergAvro.readManifest(mfs, new HPath(e.manifestPath), idToType))
+        def rd(kind: Int) = ml.filter(_.content == kind).flatMap(m =>
+          IcebergAvro.readManifest(mfs, new HPath(m.manifestPath), idToType)
+            .map(inherit(m.sequenceNumber)))
           .filter(_.status != 2)
         (rd(0), rd(1))
       } else {
         val mlist = parse(mlPath).elements().asScala.toSeq
         def rd(kind: Int) = mlist.filter(_.get("content").asInt() == kind)
           .flatMap(m => parse(m.get("manifest_path").asText())
-            .get("entries").elements().asScala.toSeq)
-          .map(decodeJsonEntry)
+            .get("entries").elements().asScala.toSeq
+            .map(decodeJsonEntry)
+            .map(inherit(Option(m.get("sequence_number")).map(_.asLong()).getOrElse(curId))))
           .filter(_.status != 2)
         (rd(0), rd(1))
       }
@@ -694,7 +703,7 @@ object IcebergExport {
         // files with addedBy < the delete's — a uniform stamp would make
         // every imported equality delete inert (commit-time pruning
         // drops a delete nothing predates) and resurrect its victims
-        addedBy = e.sequenceNumber.getOrElse(curId))
+        addedBy = e.sequenceNumber.get)
     }
     // Spec evolution guard: graft attaches partition values from the
     // manifest for every column of the CURRENT (default) spec, so a
@@ -711,22 +720,29 @@ object IcebergExport {
           "to the current spec in the source engine before importing")
     }
 
-    val deleteFiles = delEntries.map { e =>
+    val (eqEntries, posEntries) = delEntries.partition(_.content == 2)
+    val eqDels = eqEntries.map { e =>
       DeleteFileEntry(
         path = e.filePath,
         rows = e.rows,
-        addedBy = e.sequenceNumber.getOrElse(curId),
+        addedBy = e.sequenceNumber.get,
         bytes = e.bytes,
-        equalityCols =
-          if (e.content == 2)
-            e.equalityIds.map(idToName.getOrElse(_, "")).filter(_.nonEmpty)
-          else Seq.empty)
+        equalityCols = e.equalityIds.map(idToName.getOrElse(_, "")).filter(_.nonEmpty))
     }
+    // position deletes become deletion vectors inside the import's own
+    // commit — the read path knows vectors and equality deletes only.
+    // Their coordinates read in the spec's (file_path, pos) layout or
+    // this bridge's export layout; those naming a file outside the
+    // imported snapshot are dropped
+    val dest = GraftTable.wiped(spark, destRoot)
+    val dvDels =
+      if (posEntries.isEmpty) Seq.empty
+      else dest.positionsToDv(posEntries.map(_.filePath), files, curId, Seq.empty)
 
     // keep the SOURCE snapshot id (like cloneTo) so inherited addedBy /
     // equality-delete sequencing survives the import
-    val t = GraftTable.wiped(spark, destRoot).commitCreate(curId, "iceberg-import",
-      schema.json, partitionCols, deps, files, addedFiles = 0, deleteFiles,
+    val t = dest.commitCreate(curId, "iceberg-import",
+      schema.json, partitionCols, deps, files, addedFiles = 0, eqDels ++ dvDels,
       Option(md.get("properties")).map(p =>
         p.fieldNames().asScala.map(k => k -> p.get(k).asText()).toMap)
         .getOrElse(Map.empty) +

@@ -73,15 +73,16 @@ final case class FileEntry(
   *    O(source) with ZERO target scan, while the post-images it
   *    appends in the same commit (equal `addedBy`) survive.
   *  - POSITION (neither): `(file_name, row_index)` pairs naming exact
-  *    coordinates, applied as an anti-join. Read-only: graft does not
-  *    write them; they come from legacy tables and Iceberg imports, and
-  *    [[GraftTable.convertDeletesToDv]] migrates them to vectors.
+  *    coordinates, found only in tables written before vectors existed.
+  *    No read path applies them: reading a snapshot that holds one
+  *    raises an error naming `CALL system.rewrite_position_delete_files`,
+  *    whose [[GraftTable.convertDeletesToDv]] migrates them to vectors.
+  *    Iceberg imports convert theirs to vectors on import.
   *
   * When a copy-on-write rewrite later removes every recorded target
-  * of a position or dv entry, the entry is provably stale and commits
+  * of a dv (or position) entry, the entry is provably stale and commits
   * prune it ([[GraftTable]] stage), keeping `deletedRows` (catalog
-  * rowCount, `$deletes`) exact. Position entries with no recorded
-  * targets stay conservatively.
+  * rowCount, `$deletes`) exact.
   */
 final case class DeleteFileEntry(
     path: String, rows: Long, addedBy: Long = 0L, bytes: Long = 0L,
@@ -128,7 +129,7 @@ final case class Snapshot(
     // every commit, since each builds its snapshot as the successor of
     // the one it read (GraftTable.successor)
     properties: Map[String, String] = Map.empty,
-    // pending merge-on-read position deletes; empty once OPTIMIZE /
+    // pending merge-on-read deletes; empty once OPTIMIZE /
     // applyDeletes folds them into rewritten data files
     deleteFiles: Seq[DeleteFileEntry] = Seq.empty) {
   // NOTE: counts rows as written — pending MOR deletes are not

@@ -366,7 +366,7 @@ object VectorOps {
   val IvfProbes = 6
 
   /** ANN query-side broadcast gate — the A56 recorded-size pattern
-    * ([[graft.lake.GraftTable.deleteRowsHinted]]) applied to the query
+    * ([[graft.lake.GraftTable.minusDvDeletes]]) applied to the query
     * batch: per-query LUTs/probes/candidate sets broadcast only while
     * their estimated bytes fit under this threshold (32 MB, matching
     * the MOR delete-set gate's default). The benched 10-query batch is

@@ -848,7 +848,7 @@ case class GraftCallCommand(
       case "rewrite_position_delete_files" =>
         // position→dv conversion (Iceberg v3 procedure parity): swap
         // pending position-delete files for per-file deletion vectors
-        val before = t.current.deleteFiles.count(d => d.equalityCols.isEmpty && !d.dv)
+        val before = t.current.deleteFiles.count(GraftTable.isPosition)
         t.convertDeletesToDv()
         s"converted $before position-delete file(s) to deletion vectors"
       case "rewrite_data_files" =>

@@ -367,8 +367,8 @@ class GraftSource(
     *
     *  - additive (append / adopt / batch tags / any merge-on-read DML):
     *    its added files are inserts, its added delete entries
-    *    (deletion vectors, equality deletes, imported position deletes)
-    *    are deletes of pre-window rows. Row-level reconstructible.
+    *    (deletion vectors, equality deletes) are deletes of pre-window
+    *    rows. Row-level reconstructible.
     *  - data-preserving rewrite (compact / optimize / apply-deletes /
     *    repartition-spec): bytes move, logical content doesn't —
     *    contributes NOTHING to the feed (emitting its rewritten files
@@ -411,34 +411,38 @@ class GraftSource(
         else applyDels(rel, endSnap.files, endSnap.deleteFiles).drop(PosFileCol, PosIdxCol)
       return withChangeType(visible, "insert").select(order: _*)
     }
+    // the end snapshot reads with its entries, so it must hold no
+    // position entry; one a window commit added and a later window
+    // conversion vectorized streams through the conversion's vectors
+    GraftTable.refusePositionDeletes(endSnap.deleteFiles)
     val snaps = table.lineage(startId, endId).getOrElse(throw expired(startId, endId))
     def isRewrite(s: Snapshot): Boolean =
       s.deletedFiles > 0 || s.operation == "rollback"
+    def refuse(s: Snapshot): Unit =
+      if (!skipChangeCommits) throw new UnsupportedOperationException(
+        s"snapshot ${s.id} ('${s.operation}') rewrites data in place; its " +
+          "row-level changes cannot be reconstructed from the manifest. Run " +
+          "DML in merge-on-read mode (write.delete.mode / write.update.mode / " +
+          "write.merge.mode = merge-on-read, which writes deletion vectors) for a " +
+          "streamable change feed, or set skipChangeCommits=true to stream " +
+          "past it (its changes are then silently dropped).")
     snaps.find(s => isRewrite(s) && !GraftSource.DataPreservingOps.contains(s.operation))
-      .foreach { s =>
-        if (!skipChangeCommits) throw new UnsupportedOperationException(
-          s"snapshot ${s.id} ('${s.operation}') rewrites data in place; its " +
-            "row-level changes cannot be reconstructed from the manifest. Run " +
-            "DML in merge-on-read mode (write.delete.mode / write.update.mode / " +
-            "write.merge.mode = merge-on-read, which writes deletion vectors) for a " +
-            "streamable change feed, or set skipChangeCommits=true to stream " +
-            "past it (its changes are then silently dropped).")
-      }
+      .foreach(refuse)
     val additive = snaps.filterNot(isRewrite)
     val insFiles = additive.flatMap(s => s.files.filter(_.addedBy == s.id))
       .groupBy(_.path).map(_._2.head).toSeq
-    // in-window position deletes, from the committing snapshot's own
+    // in-window equality deletes, from the committing snapshot's own
     // manifest (robust to an in-window applyDeletes folding them away);
     // pre-addedBy manifests (stamp 0) fall back to the end-minus-start diff
-    val winDels: Seq[DeleteFileEntry] =
+    val winEq: Seq[DeleteFileEntry] = (
       if (snaps.exists(_.deleteFiles.exists(_.addedBy == 0L))) {
         val startDel = table.snapshotIfExists(startId).getOrElse(throw expired(startId, endId))
           .deleteFiles.map(_.path).toSet
         endSnap.deleteFiles.filterNot(d => startDel.contains(d.path))
       } else
-        additive.flatMap(s => s.deleteFiles.filter(d => d.addedBy == s.id && !d.dv))
+        additive.flatMap(s => s.deleteFiles.filter(_.addedBy == s.id))
           .groupBy(_.path).map(_._2.head).toSeq
-    val (winEq, winPos) = winDels.filterNot(_.dv).partition(_.equalityCols.nonEmpty)
+      ).filter(_.equalityCols.nonEmpty)
     // deletion vectors diff by BITMAP, not by entry path (a merge
     // commit rewrites a file's vector under a new path while the old
     // entry shrinks): the in-window victims are exactly dv(window) ∖
@@ -453,11 +457,11 @@ class GraftSource(
       stamped.map(d => d.copy(targets = d.targets.filter(newest(_).path == d.path)))
         .filter(_.targets.nonEmpty)
     }
-    val anyDels = winDels.nonEmpty || winDv.nonEmpty
+    val anyDels = winEq.nonEmpty || winDv.nonEmpty
     val insRel = GraftFileIndex.relation(spark, root,
       endSnap.copy(files = insFiles, shards = Seq.empty),
       isStreaming = true, withRowPos = anyDels)
-    val inserts = applyDels(insRel, insFiles, winPos ++ winEq ++ winDv)
+    val inserts = applyDels(insRel, insFiles, winEq ++ winDv)
     val insTagged = withChangeType(
       if (!anyDels) inserts else inserts.drop(PosFileCol, PosIdxCol),
       "insert").select(order: _*)
@@ -470,13 +474,23 @@ class GraftSource(
     // window wrote vectors: an in-window merge moves a file's whole
     // bitmap to its new entry, so the start bitmaps the diff needs are
     // gone and the window is refused.
-    val startDels = table.snapshotIfExists(startId).map(_.deleteFiles).getOrElse {
-      if (winDv.nonEmpty) throw expired(startId, endId)
-      endSnap.deleteFiles.filter(d => d.addedBy != 0L && d.addedBy <= startId)
-    }
-    val pre = snaps.flatMap(s => s.files.filter(_.addedBy <= startId))
+    val startDels = table.startVectors(table.snapshotIfExists(startId).map(_.deleteFiles)
+      .getOrElse {
+        if (winDv.nonEmpty) throw expired(startId, endId)
+        endSnap.deleteFiles.filter(d => d.addedBy != 0L && d.addedBy <= startId)
+      }, snaps)
+    // an in-window compaction that repacked only pre-window rows moves
+    // them into a file stamped in the window: its rows are pre-window
+    // too. A vector on any other file the window wrote (a repack that
+    // mixed in window rows) cannot be split into pre-window victims
+    val carried = table.rewriteCarrySkips(startId, endId, _.addedBy <= startId)
+    val pre = snaps.flatMap(s => s.files.filter(f => f.addedBy <= startId || carried(f.path)))
       .groupBy(_.path).map(_._2.head).toSeq
-    table.windowVictims(endSnap, pre, startDels, winPos, winEq, winDv, isStreaming = true)
+    val known = (pre ++ insFiles).map(f => GraftTable.baseName(f.path)).toSet
+    val unsplit = winDv.flatMap(_.targets).filterNot(known).toSet
+    if (unsplit.nonEmpty) snaps.find(_.files.exists(f =>
+        unsplit(GraftTable.baseName(f.path)))).foreach(refuse)
+    table.windowVictims(endSnap, pre, startDels, winEq, winDv, isStreaming = true)
       .fold(insTagged)(d => insTagged.unionByName(withChangeType(d, "delete").select(order: _*)))
   }
 

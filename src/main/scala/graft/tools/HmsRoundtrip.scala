@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.lake.GraftTable
@@ -28,22 +27,13 @@ private[graft] object HmsRoundtrip {
     val phase = args(0)
     val work = args(1)
     val sf = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"hms-roundtrip-$phase")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.catalogImplementation", "hive")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$work/metastore_db;create=true")
-      .config("spark.hadoop.datanucleus.schema.autoCreateAll", "true")
-      .config("spark.hadoop.hive.metastore.schema.verification", "false")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(4, logLevel = "ERROR", shufflePartitions = 8, conf = Map(
+      "spark.sql.catalogImplementation" -> "hive",
+      "spark.sql.warehouse.dir" -> s"$work/warehouse",
+      "spark.hadoop.javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$work/metastore_db;create=true",
+      "spark.hadoop.datanucleus.schema.autoCreateAll" -> "true",
+      "spark.hadoop.hive.metastore.schema.verification" -> "false"))
     try {
       val ext = spark.sharedState.externalCatalog.unwrapped.getClass.getName
       require(ext.contains("HiveExternalCatalog"),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan gate over the entries whose plan shape carries the
   * 100 TB claim. FAILS (exit 1) on any CartesianProduct, or on more
   * BroadcastNestedLoopJoins than the entry's documented allowance —
@@ -15,13 +13,8 @@ import org.apache.spark.sql.SparkSession
 private[graft] object PlanAudit {
   def main(args: Array[String]): Unit = {
     val plant = args.contains("--plant")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("planaudit").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(8, logLevel = "ERROR", shufflePartitions = 32,
+      extensions = false)
     val d = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
     val failures = scala.collection.mutable.ArrayBuffer[String]()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named driver entries to files —
   * the optimization round's before/after plan artifacts under
   * plans/<tag>/. Not part of the library surface.
@@ -15,14 +13,7 @@ object PlanDump {
     val sfDir = args(2)
     val entries = args.drop(3).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(cpus.toInt, logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // PLANDUMP_EXEC=1 additionally executes the query and appends the
     // POST-execution plan (AQE's final plan — runtime exchange reuse,

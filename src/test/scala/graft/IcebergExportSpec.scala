@@ -384,8 +384,9 @@ class IcebergExportSpec extends SparkSpec {
     // stats (including binary-decoded bounds) agree with the JSON twin
     assert(impAvro.current.files.map(f => f.path -> f.stats).toMap ===
       impJson.current.files.map(f => f.path -> f.stats).toMap)
-    assert(impAvro.current.deleteFiles.map(d => (d.path, d.rows, d.addedBy)).toSet ===
-      impJson.current.deleteFiles.map(d => (d.path, d.rows, d.addedBy)).toSet)
+    // each import writes its own vectors from the position deletes
+    assert(impAvro.current.deleteFiles.map(d => (d.targets, d.rows, d.addedBy, d.dv)).toSet ===
+      impJson.current.deleteFiles.map(d => (d.targets, d.rows, d.addedBy, d.dv)).toSet)
     assert(impAvro.read().exceptAll(impJson.read()).count() === 0)
     assert(impJson.read().exceptAll(impAvro.read()).count() === 0)
     assert(impAvro.read().exceptAll(t.read()).count() === 0)
@@ -425,19 +426,16 @@ class IcebergExportSpec extends SparkSpec {
       assert(pos.count() === e.rows)
     }
 
+    // the import converts the position deletes back to vectors in its
+    // own commit: one snapshot, no position entry
     val imp = IcebergExport.importMetadata(spark, metaPath, root + "-imp")
-    assert(imp.current.deleteFiles.nonEmpty &&
-      imp.current.deleteFiles.forall(d => !d.dv && d.equalityCols.isEmpty))
+    assert(imp.snapshotIds.size === 1)
+    assert(imp.current.deleteFiles.nonEmpty && imp.current.deleteFiles.forall(_.dv))
+    val owners = imp.current.deleteFiles.flatMap(_.targets)
+    assert(owners.distinct.size === owners.size)
     assert(imp.current.deletedRows === t.current.deletedRows)
     assert(imp.read().exceptAll(t.read()).count() === 0)
     assert(t.read().exceptAll(imp.read()).count() === 0)
-
-    graft.sql.GraftCatalog.register("icemor_imp", imp.root)
-    spark.sql("CALL system.rewrite_position_delete_files(table => 'icemor_imp')").collect()
-    val conv = new GraftTable(imp.root, spark)
-    assert(conv.current.deleteFiles.nonEmpty && conv.current.deleteFiles.forall(_.dv))
-    assert(conv.read().exceptAll(t.read()).count() === 0)
-    assert(t.read().exceptAll(conv.read()).count() === 0)
   }
 
   /** Golden-bytes fixture (r10 mandate): the remaining export risk is
@@ -708,5 +706,110 @@ class IcebergExportSpec extends SparkSpec {
       IcebergExport.importMetadata(spark, mdV1.toString, root + "-imp-v1")
     }
     assert(exV1.getMessage.contains("format-version"))
+  }
+
+  /** A foreign Iceberg v2 tree with two data files (ids 1-2 in `cat=a`,
+    * 3-4 in `cat=b`) whose manifest entries omit `sequence_number` (the
+    * manifest list carries 5), plus the delete files `deletes` writes
+    * under the root, listed in one delete manifest at sequence 6 whose
+    * entries omit it too. Returns (the data file paths, the metadata
+    * path).
+    */
+  private def foreignWithDeletes(name: String)(
+      deletes: (String, Seq[String]) => Seq[IcebergAvro.DecodedEntry]): (Seq[String], String) = {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val root = new java.io.File(s"target/laketest/$name").getAbsolutePath
+    val rm = new java.io.File(root)
+    if (rm.exists()) { import scala.sys.process._; Seq("rm", "-rf", root).! }
+    val df = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b")).toDF("id", "cat")
+    for (cat <- Seq("a", "b"))
+      df.filter(col("cat") === cat).drop("cat").coalesce(1).write.parquet(s"$root/data/cat=$cat")
+    import scala.jdk.CollectionConverters._
+    val files = Seq("a", "b").map(cat =>
+      java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/data/cat=$cat"))
+        .iterator().asScala.find(_.toString.endsWith(".parquet")).get.toString)
+    val idToType = Map(4 -> LongType, 2 -> StringType)
+    def entry(path: String, content: Int, cat: String, rows: Long, eqIds: Seq[Int]) =
+      IcebergAvro.DecodedEntry(status = 1, snapshotId = 77L, sequenceNumber = None,
+        content = content, filePath = path, fileFormat = "PARQUET",
+        partition = Map("cat" -> cat), rows = rows,
+        bytes = java.nio.file.Files.size(java.nio.file.Paths.get(path)),
+        lower = Map.empty, upper = Map.empty, nulls = Map.empty, equalityIds = eqIds)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/metadata"))
+    val fs = hfs(root)
+    def manifest(file: String, content: String, es: Seq[IcebergAvro.DecodedEntry]): Long =
+      IcebergAvro.writeManifest(fs, new HPath(s"$root/metadata/$file"),
+        partitionFields = Seq(("cat", StringType, 1001)), idToType = idToType,
+        content = content, entries = es, schemaJson = "{}", specJson = "{}")
+    val dataLen = manifest("m-data.avro", "data",
+      files.zip(Seq("a", "b")).map { case (f, cat) => entry(f, 0, cat, 2L, Seq.empty) })
+    val dels = deletes(root, files).map(e => entry(e.filePath, e.content, "a", e.rows, e.equalityIds))
+    val delLen = manifest("m-deletes.avro", "deletes", dels)
+    val mlPath = s"$root/metadata/ml77.avro"
+    IcebergAvro.writeManifestList(fs, new HPath(mlPath), 77L, -1L, 6L, Seq(
+      IcebergAvro.MlEntry(s"$root/metadata/m-data.avro", dataLen, 0, 0, 5L, 5L, 77L,
+        2, 0, 0, 4L, 0L, 0L),
+      IcebergAvro.MlEntry(s"$root/metadata/m-deletes.avro", delLen, 0, 1, 6L, 6L, 77L,
+        dels.size, 0, 0, dels.map(_.rows).sum, 0L, 0L)))
+    val mdPath = s"$root/metadata/v1.metadata.json"
+    java.nio.file.Files.write(java.nio.file.Paths.get(mdPath),
+      s"""{"format-version": 2, "table-uuid": "00000000-0000-0000-0000-000000000077",
+         |  "location": "$root",
+         |  "schemas": [{"schema-id": 0, "type": "struct", "fields": [
+         |    {"id": 4, "name": "id", "required": true, "type": "long"},
+         |    {"id": 2, "name": "cat", "required": false, "type": "string"}]}],
+         |  "current-schema-id": 0,
+         |  "partition-specs": [{"spec-id": 0, "fields": [
+         |    {"name": "cat", "transform": "identity", "source-id": 2, "field-id": 1001}]}],
+         |  "default-spec-id": 0, "current-snapshot-id": 77,
+         |  "snapshots": [{"snapshot-id": 77, "sequence-number": 6,
+         |    "timestamp-ms": 1700000000000, "manifest-list": "$mlPath",
+         |    "summary": {"operation": "delete"}}]}""".stripMargin.getBytes("UTF-8"))
+    (files, mdPath)
+  }
+
+  test("foreign Iceberg import: entries without sequence numbers inherit their manifest's") {
+    import spark.implicits._
+    // an equality delete of id 3 at (inherited) sequence 6 kills the
+    // data at (inherited) sequence 5; one stamp for both would make it inert
+    val (_, md) = foreignWithDeletes("iceforeign-seq") { (root, _) =>
+      Seq(3L).toDF("id").coalesce(1).write.parquet(s"$root/eq")
+      val f = new java.io.File(s"$root/eq").listFiles().map(_.getPath).find(_.endsWith(".parquet")).get
+      Seq(IcebergAvro.DecodedEntry(1, 77L, None, 2, f, "PARQUET", Map.empty, 1L, 0L,
+        Map.empty, Map.empty, Map.empty, Seq(4)))
+    }
+    val t = IcebergExport.importMetadata(spark, md, new java.io.File(
+      "target/laketest/iceforeign-seq-imp").getAbsolutePath)
+    assert(t.current.files.map(_.addedBy).distinct === Seq(5L))
+    assert(t.current.deleteFiles.map(d => (d.addedBy, d.equalityCols)) === Seq((6L, Seq("id"))))
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 4L))
+  }
+
+  test("foreign Iceberg import: spec (file_path, pos) position deletes become deletion vectors") {
+    import spark.implicits._
+    // the spec's position-delete columns name the data file by its full
+    // path; a coordinate naming a file outside the snapshot is dropped
+    var killed = Set.empty[Long]
+    val (files, md) = foreignWithDeletes("iceforeign-pos") { (root, files) =>
+      killed = spark.read.parquet(files.head).select(col("id"), col("_metadata.row_index"))
+        .filter(col("row_index") === 0L).as[(Long, Long)].collect().map(_._1).toSet
+      Seq((files.head, 0L), (s"$root/data/cat=a/gone.parquet", 1L), (files(1), 1L))
+        .toDF("file_path", "pos").coalesce(1).write.parquet(s"$root/pos")
+      val f = new java.io.File(s"$root/pos").listFiles().map(_.getPath).find(_.endsWith(".parquet")).get
+      Seq(IcebergAvro.DecodedEntry(1, 77L, None, 1, f, "PARQUET", Map.empty, 3L, 0L,
+        Map.empty, Map.empty, Map.empty, Seq.empty))
+    }
+    killed ++= spark.read.parquet(files(1)).select(col("id"), col("_metadata.row_index"))
+      .filter(col("row_index") === 1L).as[(Long, Long)].collect().map(_._1)
+    assert(killed.size === 2)
+    val t = IcebergExport.importMetadata(spark, md, new java.io.File(
+      "target/laketest/iceforeign-pos-imp").getAbsolutePath)
+    assert(t.snapshotIds.size === 1)
+    assert(t.current.deleteFiles.nonEmpty && t.current.deleteFiles.forall(_.dv))
+    assert(t.current.deletedRows === 2L, "the coordinate outside the snapshot is dropped")
+    assert(t.current.deleteFiles.flatMap(_.targets).sorted ===
+      files.map(f => f.substring(f.lastIndexOf('/') + 1)).sorted)
+    assert(t.read().select("id").as[Long].collect().toSet === (1L to 4L).toSet -- killed)
   }
 }

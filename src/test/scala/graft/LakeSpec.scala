@@ -2803,25 +2803,31 @@ class LakeSpec extends SparkSpec {
 
   test("position→dv conversion: one commit swaps representations, content and counts exact") {
     import spark.implicits._
-    val src = GraftTable.create(spark, tmp("convert-dv-src"),
+    val t = GraftTable.create(spark, tmp("convert-dv"),
       (1L to 200L).map(i => (i, i % 4, i * 1.0)).toDF("k", "g", "v")
         .repartition(col("g")), Seq("g"))
-    src.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
-    src.setProperty(GraftTable.UpdateModeProp, "merge-on-read")
-    src.delete(col("k") % 13 === 0)
-    src.delete(col("k") === 2L)
-    src.update(col("k") === 3L, Map("v" -> lit(-3.0)))
-    src.setProperty(GraftTable.MergeModeProp, "merge-on-read")
-    src.setProperty(GraftTable.MergeDeleteKindProp, "equality")
-    src.merge(Seq((5L, 5L % 4, -5.0)).toDF("k", "g", "v").repartition(col("g")), Seq("k"))
-    // graft writes vectors; position entries come from an Iceberg import
-    val t = graft.lake.IcebergExport.importMetadata(spark,
-      graft.lake.IcebergExport.exportMetadata(src, tmp("convert-dv-ice")), tmp("convert-dv"))
-    val before = t.read().collect().map(_.toString).sorted.toSeq
-    assert(before === src.read().collect().map(_.toString).sorted.toSeq)
+    t.setProperty(GraftTable.DeleteModeProp, "merge-on-read")
+    t.setProperty(GraftTable.UpdateModeProp, "merge-on-read")
+    t.delete(col("k") % 13 === 0)
+    t.delete(col("k") === 2L)
+    t.update(col("k") === 3L, Map("v" -> lit(-3.0)))
+    t.setProperty(GraftTable.MergeModeProp, "merge-on-read")
+    t.setProperty(GraftTable.MergeDeleteKindProp, "equality")
+    t.merge(Seq((5L, 5L % 4, -5.0)).toDF("k", "g", "v").repartition(col("g")), Seq("k"))
+    // a table written before vectors existed: one more delete as a
+    // position entry, beside the vectors and the equality entry
+    val legacyPred = col("k") % 17 === 1 && col("k") % 13 =!= 0
+    val before = t.read().filter(!legacyPred).collect().map(_.toString).sorted.toSeq
+    LegacyTable.positionDelete(spark, t, legacyPred)
     val deletedBefore = t.current.deletedRows
     val posBefore = t.current.deleteFiles.count(d => d.equalityCols.isEmpty && !d.dv)
-    assert(posBefore > 0 && t.current.deleteFiles.exists(_.equalityCols.nonEmpty))
+    assert(posBefore === 1 && t.current.deleteFiles.exists(_.equalityCols.nonEmpty))
+    // the read path knows vectors and equality deletes only
+    for (read <- Seq[() => Any](() => t.read(), () => t.applyDeletes(),
+        () => t.changelog(t.currentId - 1, t.currentId))) {
+      val e = intercept[UnsupportedOperationException](read())
+      assert(e.getMessage.contains("rewrite_position_delete_files"), e.getMessage)
+    }
     graft.sql.GraftCatalog.register("convert_dv_t", t.root)
     val res = spark.sql(
       "CALL system.rewrite_position_delete_files(table => 'convert_dv_t')").head()

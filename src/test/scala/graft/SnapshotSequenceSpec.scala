@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
-import graft.SparkSpec
+import graft.{LegacyTable, SparkSpec}
 
 /** Pins the snapshot sequence a scripted mix of every commit verb
   * writes: id, parent, operation, added/deleted file counts, file and
@@ -58,6 +58,7 @@ class SnapshotSequenceSpec extends SparkSpec {
     a.delete(col("k") === 25L) // a deletion vector
     val b = IcebergExport.importMetadata(spark,
       IcebergExport.exportMetadata(a, s"$base/a-ice"), s"$base/b")
+    LegacyTable.positionDelete(spark, b, col("k") === 40L) // a pre-vector delete
     b.convertDeletesToDv()
     a.applyDeletes()
     val beforeCompact = a.currentId
@@ -131,7 +132,8 @@ class SnapshotSequenceSpec extends SparkSpec {
       "38 <- 37 replace +2 -2 files=2 dels=0 [k:bigint!,g:bigint!,v:double!] {notnull.c2,stats.hll.k,stats.ndv.k,wm,write.delete.mode}"),
     "b" -> Seq(
       "19 <- -1 iceberg-import +0 -0 files=3 dels=1 [k:bigint!,g:bigint!,v:double!] {import.source,wm,write.delete.mode}",
-      "20 <- 19 convert-deletes +0 -0 files=3 dels=1 [k:bigint!,g:bigint!,v:double!] {import.source,wm,write.delete.mode}"),
+      "20 <- 19 delete +0 -0 files=3 dels=2 [k:bigint!,g:bigint!,v:double!] {import.source,wm,write.delete.mode}",
+      "21 <- 20 convert-deletes +0 -0 files=3 dels=2 [k:bigint!,g:bigint!,v:double!] {import.source,wm,write.delete.mode}"),
     "c" -> Seq(
       "37 <- -1 clone +0 -0 files=2 dels=0 [k:bigint!,g:bigint!,v:double!,c2:bigint!] {clone.source,notnull.c2,stats.hll.k,stats.ndv.k,wm,write.delete.mode}"),
     "d" -> Seq(

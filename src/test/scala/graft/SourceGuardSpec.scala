@@ -106,7 +106,7 @@ class SourceGuardSpec extends AnyFunSuite {
   test("one victim reconstruction: the streaming source calls none of its primitives") {
     val streaming = mainSources.filter(_.toString.contains("graft/streaming/"))
     assert(streaming.nonEmpty, s"no streaming sources under $mainDir")
-    val primitives = Seq("dvDiffRows(", "eqDeleteSplit(", "eqDeleteCandidates(", "deleteRowsHinted(")
+    val primitives = Seq("dvDiffRows(", "eqDeleteSplit(", "eqDeleteCandidates(", "deleteRows(")
     val hits = for {
       p <- streaming
       src = new String(Files.readAllBytes(p), "UTF-8")
@@ -116,5 +116,11 @@ class SourceGuardSpec extends AnyFunSuite {
       "the change feed rebuilds merge-on-read victims through GraftTable.windowVictims, " +
         "the path the batch changelog takes; a second reconstruction drifts from it: " +
         hits.mkString(", "))
+  }
+
+  test("one reader of position coordinates: only the position→vector converter calls deleteRows") {
+    assert(sitesOf("deleteRows(") === Seq("GraftTable.scala" -> "positionsToDv"),
+      "position deletes are read by GraftTable.positionsToDv alone (convertDeletesToDv and " +
+        "the Iceberg import); every read path knows deletion vectors and equality deletes only")
   }
 }

@@ -783,7 +783,7 @@ class StreamingSpec extends SparkSpec {
     assert(batchState === Set((1L, "a"), (3L, "c2"), (4L, "d")))
   }
 
-  test("D13b: in-window position delete then equality delete of one key emits ONE retraction") {
+  test("D13b: in-window vector delete then equality delete of one key emits ONE retraction") {
     import spark.implicits._
     val root = "/root/repo/target/laketest/streamretract2"
     val ckpt = "/root/repo/target/laketest/streamretract2-ckpt"
@@ -811,7 +811,7 @@ class StreamingSpec extends SparkSpec {
       q.awaitTermination()
     }
     drainOnce()
-    // ONE window containing BOTH a position delete of row 2 and a later
+    // ONE window containing BOTH a vector delete of row 2 and a later
     // equality upsert of the same key: the pre-image must retract once,
     // not once per delete flavor
     t.delete(col("id") === 2L)
@@ -1145,28 +1145,70 @@ class StreamingSpec extends SparkSpec {
     drainRetr(root2, ckpt2)
     val want = t2.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(state.toMap === want, s"retraction state diverged: $state vs $want")
-    // an in-window position→dv CONVERSION must stay silent: the
-    // pre-existing position deletes' coordinates reappear as bitmap
-    // growth, but those rows were dead at the window start (dvPre
-    // applies the start-time position deletes — without that every
-    // converted victim re-emits). graft writes vectors, so the
-    // position entries come from an Iceberg export → import.
-    t2.delete(col("id") === 1L)
-    val t3 = graft.lake.IcebergExport.importMetadata(spark,
-      graft.lake.IcebergExport.exportMetadata(t2, s"$root-retr-ice"), root3)
-    assert(t3.current.deleteFiles.nonEmpty && t3.current.deleteFiles.forall(!_.dv))
+    // an in-window position→dv CONVERSION adds no retraction of its
+    // own: a position delete committed by a pre-vector writer, its
+    // conversion, and one real vector delete stream as exactly those
+    // two deletes — the converted coordinates reappear as bitmap
+    // growth, and the position entry itself is not read twice
+    val t3 = GraftTable.create(spark, root3, (1L to 8L).map(i => (i, i * 10L)).toDF("id", "v"))
+    t3.setProperty(GraftTable.DeleteModeProp, "dv")
     state.clear()
-    drainRetr(root3, ckpt3) // initial load applies the position deletes
-    val preConv = state.toMap
-    assert(preConv === t3.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    drainRetr(root3, ckpt3)
     retracted.clear()
+    LegacyTable.positionDelete(spark, t3, col("id") === 1L)
     t3.convertDeletesToDv()
     t3.delete(col("id") === 8L) // one real in-window dv delete alongside
     drainRetr(root3, ckpt3)
     val want2 = t3.read().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(state.toMap === want2, s"post-conversion state diverged: $state vs $want2")
-    assert(retracted.toSeq === Seq(8L),
-      "only the genuine in-window delete may retract across a conversion")
+    assert(retracted.toSeq.sorted === Seq(1L, 8L),
+      "each in-window delete retracts once across a conversion")
+  }
+
+  test("D12-dv-compact: a pre-window row an in-window compaction moved streams its vector delete") {
+    import spark.implicits._
+    val root = new java.io.File("target/laketest/cdcstream-dv-compact").getAbsolutePath
+    val ckpt = s"$root-ckpt"
+    for (p <- Seq(root, ckpt)) {
+      val f = new java.io.File(p)
+      if (f.exists()) { import scala.sys.process._; Seq("rm", "-rf", p).! }
+    }
+    val t = GraftTable.create(spark, root, Seq((1L, "a")).toDF("id", "k").coalesce(1))
+    t.append(Seq((2L, "b")).toDF("id", "k").coalesce(1))
+    t.setProperty(GraftTable.DeleteModeProp, "dv")
+    val changes = scala.collection.mutable.ArrayBuffer[(String, Long, String)]()
+    def drainOnce(): Unit = {
+      val q = spark.readStream.format("graft.streaming.GraftSourceProvider")
+        .option("path", root).option("readChangeFeed", "true").load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          changes ++= batch.select("_change_type", "id", "k").collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getString(2))); ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    drainOnce()
+    changes.clear()
+    // one window: the two pre-window files pack into one, then a vector
+    // delete kills a row of the packed file
+    val start = t.currentId
+    t.optimizeCompact(1L << 20)
+    assert(t.current.files.size === 1, "precondition: the compaction packed both files")
+    t.delete(col("id") === 2L)
+    drainOnce()
+    assert(changes.toSet === Set(("delete", 2L, "b")), s"moved row's vector delete: $changes")
+    val batch = t.changelog(start, t.currentId).select("_change_type", "id", "k").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(changes.toSet === batch, "the feed and the batch changelog agree")
+    changes.clear()
+    // a compaction that packs a window row with pre-window rows writes a
+    // file whose vector cannot be split into pre-window victims: refused
+    t.append(Seq((3L, "c")).toDF("id", "k").coalesce(1))
+    t.optimizeCompact(1L << 20)
+    t.delete(col("id") === 1L)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drainOnce())
+    assert(err.getCause.getMessage.contains("skipChangeCommits"), s"wrong failure: ${err.getCause}")
   }
 
   test("D12-dv-expired: a vector window whose start snapshot expired is refused, not re-emitted") {
